@@ -9,16 +9,25 @@ The reference's guarantees restated for batch (SURVEY.md §2.3):
   partition directory, and a bucket is COMMITTED only after every sink's
   write succeeded (the reference commits a msg only when *all* senders for
   its tag succeeded, ``producer.go:161-220``).
-- *replay of uncommitted* -> on resume, committed buckets are anti-joined
-  away and only the remainder is recomputed; rewriting a bucket's partition
+- *replay of uncommitted* -> the manifest is read first and committed
+  buckets are dropped before any processing, as ``ProcessLegacyMsg``
+  (``journal.go:210-307``) drops ids in the committed-id window
+  (``journal.go:41,58``): a rerun whose buckets are all resolved returns
+  after that one read, without planning the pipeline; otherwise only the
+  remaining buckets are recomputed.  Rewriting a bucket's partition
   directories is idempotent (dynamic partition overwrite), so a crash
-  between data write and manifest commit never duplicates — the batch
-  equivalent of ``ProcessLegacyMsg`` (``journal.go:210-307``) with the
-  committed-id dedup window (``journal.go:41,58``).
+  between data write and manifest commit never duplicates.
 - *per-partition lineage + metrics* -> each manifest row records
   (run_id, bucket, sink, rows, state, input signature), mirroring the
   per-tag counters the ``/monitor`` endpoint exposes
-  (``internal/monitor/monitor.go:19-42``).
+  (``internal/monitor/monitor.go:19-42``).  Every bucket of the input
+  commits, one row per sink; a bucket no row hashed to is trivially
+  delivered and commits with ``rows=0``.  The per-sink counts come from the
+  job that materializes the cached frame, not from a pass per sink.
+
+The input signature is the input path plus ``n_buckets``: replacing the
+files under the same path is not detected, and a rerun on changed input
+skips every bucket the old input committed.
 
 At 10^12-row scale ``n_buckets`` is the resume granule: thousands of buckets
 keep re-work per failure small while the manifest table stays tiny.
@@ -59,10 +68,13 @@ class ManifestedRun:
         self.manifest_dir = os.path.join(out_dir, "_manifest")
 
     # -- manifest table ----------------------------------------------------
-    def manifest(self) -> DataFrame:
-        if not os.path.isdir(self.manifest_dir) or not any(
+    def _has_manifest(self) -> bool:
+        return os.path.isdir(self.manifest_dir) and any(
             f.endswith(".parquet") for f in os.listdir(self.manifest_dir)
-        ):
+        )
+
+    def manifest(self) -> DataFrame:
+        if not self._has_manifest():
             return self.spark.createDataFrame([], MANIFEST_SCHEMA)
         return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.manifest_dir)
 
@@ -72,6 +84,8 @@ class ManifestedRun:
         sink's is_discard_when_blocked dropped the batch after retries —
         the reference marks the message committed either way, the loss is
         visible only in the audit row."""
+        if not self._has_manifest():
+            return []  # fresh output dir: no Spark job
         m = (
             self.manifest()
             .filter(
@@ -95,11 +109,13 @@ class ManifestedRun:
         max_retries: int = MAX_SINK_RETRIES,
         sink_faults: dict | None = None,
     ) -> dict:
-        """Process all not-yet-committed buckets; returns stats.
-        ``fail_after_sinks`` injects a crash after N sink writes (tests).
-        ``with_monitor`` also writes the per-stage totals table next to the
-        manifest (``_monitor/stage_counts``, monitor.go:19-42 analogue) —
-        opt-in because it re-derives every pipeline stage for its counts.
+        """Process all not-yet-committed buckets; returns stats.  When every
+        bucket is already resolved it returns after the manifest read,
+        without planning the pipeline.  ``fail_after_sinks`` injects a
+        crash after N sink writes (tests).  ``with_monitor`` also writes
+        the per-stage totals table next to the manifest
+        (``_monitor/stage_counts``, monitor.go:19-42 analogue) — opt-in
+        because it re-derives every pipeline stage for its counts.
 
         Per-sender drop-vs-retry (producer.go:309-325): each sink write is
         retried up to ``max_retries`` times; on exhaustion a sink with
@@ -112,20 +128,23 @@ class ManifestedRun:
         input_sig = f"{os.path.abspath(sf_dir)}#b{self.n_buckets}"
         sinks = [s.name for s in cfg.sinks]
 
-        done = self.committed_buckets(input_sig, len(sinks))
+        done = set(self.committed_buckets(input_sig, len(sinks)))
+        todo = [b for b in range(self.n_buckets) if b not in done]
+        if not todo:  # every bucket resolved: the manifest read was the run
+            return {"run_id": run_id, "buckets": 0, "rows": 0, "skipped": len(done)}
+
         df = route(self.spark, P.enriched(self.spark, sf_dir, cfg), cfg)
         df = df.withColumn(
             "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(self.n_buckets)).cast("int")
         )
         if done:
-            df = df.filter(~F.col("bucket").isin(done))  # replay only uncommitted
-        df = df.withColumn("tokens", F.col("tokens"))  # keep payload intact
+            df = df.filter(~F.col("bucket").isin(sorted(done)))  # replay only uncommitted
         df = df.persist()
         try:
-            pending = [r.bucket for r in df.select("bucket").distinct().collect()]
-            if not pending:
-                return {"run_id": run_id, "buckets": 0, "rows": 0, "skipped": len(done)}
-
+            # the job that materializes the cache also counts every delivery
+            counts = {
+                (sink, b): n for sink, b, n in df.groupBy("sink", "bucket").count().collect()
+            }
             self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
             written = 0
             discarded_sinks: list[str] = []
@@ -153,13 +172,13 @@ class ManifestedRun:
                         # parquet under the bucket partitions — readers must
                         # never see data the audit says was dropped, so
                         # best-effort delete those partitions first
-                        for b in pending:
+                        for b in todo:
                             shutil.rmtree(
                                 os.path.join(path, f"bucket={b}"),
                                 ignore_errors=True,
                             )
                         discarded_sinks.append(sink)
-                        for b in pending:
+                        for b in todo:
                             commit_rows.append(
                                 (run_id, input_sig, b, sink, 0, attempts,
                                  "discarded", time.time())
@@ -171,16 +190,12 @@ class ManifestedRun:
                         f"sink {sink} failed after {attempts} attempts "
                         "(discard_when_blocked=False -> bucket stays uncommitted)"
                     ) from err
-                counts = {
-                    r.bucket: r.n
-                    for r in part.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-                }
-                for b in pending:
+                for b in todo:
+                    n = counts.get((sink, b), 0)
                     commit_rows.append(
-                        (run_id, input_sig, b, sink, counts.get(b, 0), attempts,
-                         "committed", time.time())
+                        (run_id, input_sig, b, sink, n, attempts, "committed", time.time())
                     )
-                written += sum(counts.values())
+                    written += n
                 if fail_after_sinks is not None and i + 1 >= fail_after_sinks:
                     raise RuntimeError("injected failure before manifest commit")
 
@@ -199,7 +214,7 @@ class ManifestedRun:
                 )
             return {
                 "run_id": run_id,
-                "buckets": len(pending),
+                "buckets": len(todo),
                 "rows": written,
                 "skipped": len(done),
                 "discarded_sinks": discarded_sinks,

@@ -126,3 +126,51 @@ def test_partial_commit_skips_committed_buckets(spark, sf_dir, tmp_path):
     assert s2["skipped"] == 8 and s2["buckets"] == 0
     for s in expected:
         assert sink_rows(m, s) == expected[s]
+
+
+def test_empty_buckets_commit_and_rerun_is_noop(spark, sf_dir, tmp_path):
+    """With far more buckets than routed doc_ids most buckets get no row.
+    Every bucket still commits, one row per sink, so the rerun resolves
+    them all; each row's count matches the sink table read back from disk."""
+    from go_fluentd_spark.config import DEFAULT_CONFIG
+
+    nb = 4096
+    sinks = [s.name for s in DEFAULT_CONFIG.sinks]
+    m = ManifestedRun(spark, str(tmp_path / "out"), n_buckets=nb)
+    s1 = m.run(sf_dir)
+    assert s1["buckets"] == nb
+    man = m.manifest().collect()
+    assert len(man) == nb * len(sinks)
+    for sink in sinks:
+        on_disk = {
+            r.bucket: r["count"]
+            for r in m.sink_table(sink).groupBy("bucket").count().collect()
+        }
+        rows = {r.bucket: r.rows for r in man if r.sink == sink}
+        assert sorted(rows) == list(range(nb))
+        assert {b: n for b, n in rows.items() if n} == on_disk
+        assert 0 < len(on_disk) < nb  # the adversarial case: most buckets empty
+    s2 = m.run(sf_dir)
+    assert s2["buckets"] == 0 and s2["skipped"] == nb
+
+
+def test_job_counts_fresh_run_and_noop_rerun(spark, sf_dir, tmp_path):
+    """A resolved rerun is the manifest read alone, and a fresh run counts
+    its deliveries in the job that materializes the cached frame: no
+    distinct-bucket pass, no count pass per sink, no job for the manifest
+    of a fresh output dir."""
+    sc = spark.sparkContext
+    m = ManifestedRun(spark, str(tmp_path / "out"), n_buckets=8)
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    fresh = jobs(f"fresh-{tmp_path.name}", lambda: m.run(sf_dir))
+    rerun = jobs(f"rerun-{tmp_path.name}", lambda: m.run(sf_dir))
+    assert rerun <= 3
+    assert fresh <= 13
