@@ -157,8 +157,7 @@ _DATAPREP = {
     # the REAL iterative k-means IVF — oracle-checked END TO END: the
     # deterministic distributed Lloyd fit is unrolled in the DuckDB twin
     # (fixed iterations + per-iteration rounding), so fit + assignment +
-    # probe + top-k all value-hash-match; the MLlib fit variant (k-means||
-    # init, not cross-engine deterministic) is pinned by recall pytest
+    # probe + top-k all value-hash-match; recall@10 is pinned by pytest
     "embed_ivf_kmeans_topk": DP.embed_ivf_kmeans_topk,
     # REAL multimodal codecs, first-class under the gate: Spark PARSES the
     # synthesized BMP/WAV/MP4 containers; the twin recomputes expected

@@ -31,15 +31,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from go_fluentd_spark.config import DEFAULT_CONFIG
+from go_fluentd_spark.operators import dataprep as DP
 from go_fluentd_spark.operators.acceptor import acceptor_chain
 from go_fluentd_spark.operators.concat import concat_sessions
-from go_fluentd_spark.operators.dispatcher import route_counts
-from go_fluentd_spark.operators.enrich import add_fields, es_index, msgid
 from go_fluentd_spark.operators.parser import parse
-from go_fluentd_spark.operators.postfilter import post_default
-from go_fluentd_spark.plans.pipeline import POST_STRING_COLS
+from go_fluentd_spark.plans import pipeline as P
 from go_fluentd_spark.session import build_spark
-from go_fluentd_spark.sources.synth import sequences_df, with_ingest_columns
 
 
 def _noop_sink(df) -> int:
@@ -61,6 +58,50 @@ def _noop_sink(df) -> int:
     )
 
 
+def _parse_leaf(impl: str):
+    return lambda spark, sf_dir, rep: parse(
+        acceptor_chain(concat_sessions(P.ingested(spark, sf_dir, rep=rep)), DEFAULT_CONFIG),
+        DEFAULT_CONFIG,
+        impl=impl,
+    )
+
+
+def _dataprep_leaf(fn):
+    return lambda spark, sf_dir, rep: fn(spark, sf_dir)
+
+
+#: the headline leaves: (name, build(spark, sf_dir, rep) -> DataFrame, action).
+#: concat_sessions and the parse leaves concat WITHOUT max_len, so they are
+#: not P.concatted/P.accepted; pipeline_routed_materialize hashes the
+#: enriched, pre-fan-out frame (P.enriched, not P.routed); the dataprep
+#: leaves read the documents/embeddings tables and ignore rep.
+BENCH_LEAVES = [
+    ("ingest_scan", lambda spark, sf_dir, rep: P.ingested(spark, sf_dir, rep=rep), "hash"),
+    (
+        "concat_sessions",
+        lambda spark, sf_dir, rep: concat_sessions(P.ingested(spark, sf_dir, rep=rep)),
+        "count",
+    ),
+    ("parse_native", _parse_leaf("native"), "count"),
+    ("parse_pandas", _parse_leaf("pandas"), "count"),
+    ("pipeline_sink_counts", lambda spark, sf_dir, rep: P.sink_counts(spark, sf_dir, rep=rep), "collect"),
+    ("pipeline_routed_materialize", lambda spark, sf_dir, rep: P.enriched(spark, sf_dir, rep=rep), "hash"),
+    ("dataprep_minhash_lsh_pairs", _dataprep_leaf(DP.minhash_lsh_pairs), "count"),
+    ("dataprep_dedup_clusters", _dataprep_leaf(DP.dedup_clusters), "count"),
+    ("dataprep_embed_banded_pairs", _dataprep_leaf(DP.embed_banded_pairs), "count"),
+    ("dataprep_winnow_fingerprints", _dataprep_leaf(DP.winnow_fingerprints), "hash"),
+    ("dataprep_token_ngram_dup", _dataprep_leaf(DP.token_ngram_dup_stats), "count"),
+    ("dataprep_substr_dup_spans", _dataprep_leaf(DP.substr_dup_spans), "hash"),
+    ("dataprep_sequence_chunks", _dataprep_leaf(DP.sequence_chunks), "count"),
+    ("dataprep_pii_scrub", _dataprep_leaf(DP.pii_scrub), "count"),
+    ("dataprep_token_vocab_topk", _dataprep_leaf(DP.token_vocab_topk), "count"),
+    ("dataprep_token_lm", _dataprep_leaf(DP.token_lm_scores), "count"),
+]
+
+#: how a leaf's frame is forced: xxhash fold, row count, or driver collect
+ACTIONS = {"hash": _noop_sink, "count": lambda df: df.count(), "collect": lambda df: df.collect()}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -71,68 +112,24 @@ def main() -> None:
         extra["spark.local.dir"] = "/dev/shm/spark-tmp"  # shuffle off the data disk
     spark = build_spark("bench", cores=cores, extra_conf=extra)
 
-    def seq():
-        return with_ingest_columns(sequences_df(spark, sf_dir, rep=rep))
-
-    n_rows = seq().count()  # warms the JVM + file listing; not timed below
-
-    def full_pipeline():
-        df = concat_sessions(seq(), max_len=DEFAULT_CONFIG.concat_max_len)
-        df = acceptor_chain(df, DEFAULT_CONFIG)
-        df = parse(df, DEFAULT_CONFIG)
-        df = add_fields(spark, df, DEFAULT_CONFIG)
-        df = post_default(df, DEFAULT_CONFIG, msg_cols=POST_STRING_COLS)
-        df = es_index(spark, df, DEFAULT_CONFIG)
-        return msgid(df, DEFAULT_CONFIG)
+    n_rows = P.ingested(spark, sf_dir, rep=rep).count()  # warms the JVM + file listing; not timed below
 
     # one untimed warm-up pass of the full pipeline: the first execution of
     # the parse/enrich path pays Arrow worker spin-up + codegen compilation,
     # which polluted earlier artifacts' first timed run even at best-of-2
     # (BENCH_r03's shared queries sat 40-50% above steady state)
-    _noop_sink(full_pipeline())
+    _noop_sink(P.enriched(spark, sf_dir, rep=rep))
 
     timings: dict[str, float] = {}
     n_reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-
-    def timed(name, fn):
+    for name, build, action in BENCH_LEAVES:
         best = None
         for _ in range(n_reps):  # best-of-N: single-JVM GC variance is 2-4x
             t0 = time.perf_counter()
-            fn()
+            ACTIONS[action](build(spark, sf_dir, rep))
             dt = time.perf_counter() - t0
             best = dt if best is None or dt < best else best
         timings[name] = round(best, 3)
-
-    timed("ingest_scan", lambda: _noop_sink(seq()))
-    timed("concat_sessions", lambda: concat_sessions(seq()).count())
-    timed(
-        "parse_native",
-        lambda: parse(
-            acceptor_chain(concat_sessions(seq()), DEFAULT_CONFIG), DEFAULT_CONFIG, impl="native"
-        ).count(),
-    )
-    timed(
-        "parse_pandas",
-        lambda: parse(
-            acceptor_chain(concat_sessions(seq()), DEFAULT_CONFIG), DEFAULT_CONFIG, impl="pandas"
-        ).count(),
-    )
-    timed("pipeline_sink_counts", lambda: route_counts(spark, full_pipeline(), DEFAULT_CONFIG).collect())
-    timed("pipeline_routed_materialize", lambda: _noop_sink(full_pipeline()))
-
-    # training-data operators (documents/embeddings tables at this sf)
-    from go_fluentd_spark.operators import dataprep as DP
-
-    timed("dataprep_minhash_lsh_pairs", lambda: DP.minhash_lsh_pairs(spark, sf_dir).count())
-    timed("dataprep_dedup_clusters", lambda: DP.dedup_clusters(spark, sf_dir).count())
-    timed("dataprep_embed_banded_pairs", lambda: DP.embed_banded_pairs(spark, sf_dir).count())
-    timed("dataprep_winnow_fingerprints", lambda: _noop_sink(DP.winnow_fingerprints(spark, sf_dir)))
-    timed("dataprep_token_ngram_dup", lambda: DP.token_ngram_dup_stats(spark, sf_dir).count())
-    timed("dataprep_substr_dup_spans", lambda: _noop_sink(DP.substr_dup_spans(spark, sf_dir)))
-    timed("dataprep_sequence_chunks", lambda: DP.sequence_chunks(spark, sf_dir).count())
-    timed("dataprep_pii_scrub", lambda: DP.pii_scrub(spark, sf_dir).count())
-    timed("dataprep_token_vocab_topk", lambda: DP.token_vocab_topk(spark, sf_dir).count())
-    timed("dataprep_token_lm", lambda: DP.token_lm_scores(spark, sf_dir).count())
 
     # streaming-mode end-to-end (the apples-to-apples number vs the
     # reference DAEMON's 19,111 msg/s): same engine code through Structured

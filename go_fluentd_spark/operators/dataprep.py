@@ -1595,28 +1595,12 @@ IVF_LLOYD_ITERS = 3  # fixed Lloyd iterations for the deterministic k-means fit
 
 def _seed_centroids(spark: SparkSession, sf_dir: str, k: int = IVF_K) -> list[list[float]]:
     """Deterministic stand-in centroids: the first K vectors by vec_id.
-    Kept as the ORACLE-parity default (a k-means fit is iterative and not
-    SQL-mirrorable); the production path is :func:`kmeans_centroids`."""
+    The ORACLE-parity IVF default, and the starting point of the Lloyd fit
+    (:func:`lloyd_centroids`)."""
     return [
         [float(x) for x in r.embedding]
         for r in embs(spark, sf_dir).orderBy("vec_id").limit(k).collect()
     ]
-
-
-def kmeans_centroids(
-    spark: SparkSession, sf_dir: str, k: int = IVF_K, seed: int = 42
-) -> list[list[float]]:
-    """REAL IVF coarse centroids: seeded MLlib KMeans fit (the offline step a
-    production IVF index runs once per index build — distributed Lloyd
-    iterations, centroids then broadcast to the assignment pass)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    train = embs(spark, sf_dir).select(
-        array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=k, seed=seed, maxIter=20).fit(train)
-    return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
 def lloyd_centroids(
@@ -1742,18 +1726,12 @@ def embed_ivf_kmeans_topk(
     k: int = 10,
     probe: int = IVF_PROBE,
     n_clusters: int = IVF_K,
-    fit: str = "lloyd",
 ) -> DataFrame:
     """IVF-probed top-k with REAL iteratively-fit k-means centroids behind
-    the same contract.  ``fit="lloyd"`` (default) is the deterministic
-    distributed Lloyd fit — fully oracle-checked end-to-end (the DuckDB twin
-    unrolls the same fixed iterations, see lloyd_centroids); ``fit="mllib"``
-    swaps in the seeded MLlib fit (k-means|| init — not cross-engine
-    deterministic, so pinned by the recall pytest instead)."""
-    if fit == "lloyd":
-        cents = lloyd_centroids(spark, sf_dir, k=n_clusters)
-    else:
-        cents = kmeans_centroids(spark, sf_dir, k=n_clusters)
+    the same contract: the deterministic distributed Lloyd fit — fully
+    oracle-checked end-to-end (the DuckDB twin unrolls the same fixed
+    iterations, see lloyd_centroids)."""
+    cents = lloyd_centroids(spark, sf_dir, k=n_clusters)
     q = embs(spark, sf_dir).orderBy("vec_id").limit(1).collect()[0]
     qv = [float(x) for x in q.embedding]
     e = _assign_to_centroids(embs(spark, sf_dir), cents)

@@ -16,7 +16,10 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from go_fluentd_spark.config import DEFAULT_CONFIG, PipelineConfig
+from go_fluentd_spark.operators.acceptor import acceptor_chain
 from go_fluentd_spark.operators.audit import discard_reasons
+from go_fluentd_spark.operators.dispatcher import route
+from go_fluentd_spark.operators.parser import parse
 from go_fluentd_spark.plans import pipeline as P
 
 #: stage name -> frame builder, in pipeline order (monitor.go tracks the same
@@ -48,13 +51,6 @@ def stage_counts(
     the reference too, monitor.go:19-42) and returned as a literal frame —
     the oracle mirror recomputes every stage independently, so the identity
     web stays hash-checked end-to-end."""
-    from go_fluentd_spark.operators.acceptor import acceptor_chain
-    from go_fluentd_spark.operators.dispatcher import route
-    from go_fluentd_spark.operators.enrich import add_fields, es_index, msgid
-    from go_fluentd_spark.operators.parser import parse
-    from go_fluentd_spark.operators.postfilter import post_default
-    from go_fluentd_spark.plans.pipeline import POST_STRING_COLS
-
     conc = P.concatted(spark, sf_dir, cfg).persist()
     try:
         concat_n = conc.count()
@@ -67,15 +63,7 @@ def stage_counts(
         par = parse(accepted, cfg).persist()
         try:
             parsed_n = par.count()
-            enr = msgid(
-                es_index(
-                    spark,
-                    post_default(add_fields(spark, par, cfg), cfg, msg_cols=POST_STRING_COLS),
-                    cfg,
-                ),
-                cfg,
-            )
-            routed_n = route(spark, enr, cfg).count()
+            routed_n = route(spark, P.enrich(spark, par, cfg), cfg).count()
         finally:
             par.unpersist()
         discarded_n = discard_reasons(conc, cfg).count()

@@ -569,7 +569,7 @@ def _lloyd_ctes(k: int, n_iter: int) -> str:
 
 
 def q_embed_ivf_kmeans_topk(k: int = 10) -> str:
-    """End-to-end mirror of embed_ivf_kmeans_topk (fit="lloyd"): the ENTIRE
+    """End-to-end mirror of embed_ivf_kmeans_topk: the ENTIRE
     iterative k-means fit is unrolled as SQL (see _lloyd_ctes), then the
     final assignment, centroid probe (query-to-centroid distance in the same
     accumulation order as the Spark driver's Python sum), and total-order

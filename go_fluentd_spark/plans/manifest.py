@@ -44,7 +44,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from go_fluentd_spark.config import DEFAULT_CONFIG, PipelineConfig
-from go_fluentd_spark.operators.dispatcher import route
 from go_fluentd_spark.plans import pipeline as P
 
 MANIFEST_SCHEMA = (
@@ -133,7 +132,7 @@ class ManifestedRun:
         if not todo:  # every bucket resolved: the manifest read was the run
             return {"run_id": run_id, "buckets": 0, "rows": 0, "skipped": len(done)}
 
-        df = route(self.spark, P.enriched(self.spark, sf_dir, cfg), cfg)
+        df = P.routed(self.spark, sf_dir, cfg)
         df = df.withColumn(
             "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(self.n_buckets)).cast("int")
         )

@@ -40,32 +40,54 @@ POST_STRING_COLS = [
 ]
 
 
-def ingested(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    return with_ingest_columns(sequences_df(spark, sf_dir))
+def ingested(
+    spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG, rep: int = 1
+) -> DataFrame:
+    """``rep`` > 1 replicates the source (benchmark sizes); correctness paths
+    keep rep=1."""
+    return with_ingest_columns(sequences_df(spark, sf_dir, rep=rep))
 
 
-def concatted(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    return concat_sessions(ingested(spark, sf_dir, cfg), max_len=cfg.concat_max_len)
+def concatted(
+    spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG, rep: int = 1
+) -> DataFrame:
+    return concat_sessions(ingested(spark, sf_dir, cfg, rep), max_len=cfg.concat_max_len)
 
 
-def accepted(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    return acceptor_chain(concatted(spark, sf_dir, cfg), cfg)
+def accepted(
+    spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG, rep: int = 1
+) -> DataFrame:
+    return acceptor_chain(concatted(spark, sf_dir, cfg, rep), cfg)
 
 
-def parsed(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    return parse(accepted(spark, sf_dir, cfg), cfg)
+def parsed(
+    spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG, rep: int = 1
+) -> DataFrame:
+    return parse(accepted(spark, sf_dir, cfg, rep), cfg)
 
 
-def enriched(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    df = add_fields(spark, parsed(spark, sf_dir, cfg), cfg)
+def enrich(spark: SparkSession, df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """The per-message tail over a parsed frame: add_fields -> post default
+    filter -> es index -> msgid."""
+    df = add_fields(spark, df, cfg)
     df = post_default(df, cfg, msg_cols=POST_STRING_COLS)
     df = es_index(spark, df, cfg)
     return msgid(df, cfg)
 
 
-def routed(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    return route(spark, enriched(spark, sf_dir, cfg), cfg)
+def enriched(
+    spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG, rep: int = 1
+) -> DataFrame:
+    return enrich(spark, parsed(spark, sf_dir, cfg, rep), cfg)
 
 
-def sink_counts(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    return route_counts(spark, enriched(spark, sf_dir, cfg), cfg)
+def routed(
+    spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG, rep: int = 1
+) -> DataFrame:
+    return route(spark, enriched(spark, sf_dir, cfg, rep), cfg)
+
+
+def sink_counts(
+    spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG, rep: int = 1
+) -> DataFrame:
+    return route_counts(spark, enriched(spark, sf_dir, cfg, rep), cfg)

@@ -3,6 +3,7 @@ driver captures only a ~2 KB stdout tail, so the FINAL line must stay
 compact and parseable no matter how big the scaling evidence grows."""
 
 import json
+import os
 
 from bench import _compact_scaling
 
@@ -92,3 +93,17 @@ def test_quick_only_hunts_cannot_pass_absolute():
     compact = _compact_scaling(sp, "bench_scaling.json")
     assert compact["best_pair_basis"] == "quick-only"
     assert compact["gate"]["passed_absolute"] is False
+
+
+def test_bench_leaves_match_the_recorded_artifact():
+    """BENCH_LEAVES is the one leaf list: its names are the 16 queries of
+    the recorded BENCH_r06.json artifact, in order, and every leaf is forced
+    by one of the three sink actions."""
+    from bench import ACTIONS, BENCH_LEAVES
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "BENCH_r06.json")) as f:
+        recorded = list(json.load(f)["parsed"]["queries"])
+    assert [name for name, _, _ in BENCH_LEAVES] == recorded
+    assert set(ACTIONS) == {"hash", "count", "collect"}
+    assert {action for _, _, action in BENCH_LEAVES} <= set(ACTIONS)

@@ -282,21 +282,17 @@ def test_ivf_topk_recall(spark, sf_dir):
 def test_ivf_kmeans_recall(spark):
     """Really-fit centroids behind the IVF contract: probing HALF of 16 lists
     must reach recall@10 >= 0.9 vs brute force — the fit-quality bar a
-    production IVF index needs.  Pinned for BOTH fits: the deterministic
-    distributed Lloyd fit (the oracle-checked default) and the seeded MLlib
-    fit (k-means|| init).  Pinned to sf0.01: at sf0.001 the corpus is 50
+    production IVF index needs, on the deterministic distributed Lloyd fit
+    (the oracle-checked one).  Pinned to sf0.01: at sf0.001 the corpus is 50
     vectors, where 16 clusters is degenerate geometry."""
     sf = "/root/testdata/sf0.01"
     exact = [r.vec_id for r in DP.embed_topk(spark, sf, k=10).collect()]
-    for fit in ("lloyd", "mllib"):
-        approx = [
-            r.vec_id
-            for r in DP.embed_ivf_kmeans_topk(
-                spark, sf, k=10, probe=8, n_clusters=16, fit=fit
-            ).collect()
-        ]
-        recall = len(set(exact) & set(approx)) / 10
-        assert recall >= 0.9, (fit, recall, exact, approx)
+    approx = [
+        r.vec_id
+        for r in DP.embed_ivf_kmeans_topk(spark, sf, k=10, probe=8, n_clusters=16).collect()
+    ]
+    recall = len(set(exact) & set(approx)) / 10
+    assert recall >= 0.9, (recall, exact, approx)
 
 
 def test_dedup_exact_accounts_for_all_docs(spark, sf_dir):

@@ -1,10 +1,8 @@
-"""Round-6 measurement sidecar (guide §1): per-query isolation timing and
-plan capture for the 16 bench.py headline queries, WITHOUT touching the
-frozen bench.py.
+"""Per-query isolation timing and plan capture for the 16 bench.py headline
+queries.  The queries, their sink actions and the xxhash64-fold sink are
+bench.py's own (``BENCH_LEAVES``, ``ACTIONS``), so its plans are bench.py's
+and its numbers compare with BENCH_r0x.json.
 
-- same query lambdas / same sink discipline as bench.py (xxhash64-fold noop
-  for the *_materialize-style entries, count() for the aggregate entries) so
-  numbers are comparable with BENCH_r0x.json;
 - optional true noop-sink runs (``--noop``) per guide §1.4;
 - optional ``--explain DIR [SUFFIX]``: write each query's
   ``explain("formatted")`` to DIR/<query>_<SUFFIX>.txt (the judge-facing
@@ -29,29 +27,9 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from go_fluentd_spark.config import DEFAULT_CONFIG
-from go_fluentd_spark.operators.acceptor import acceptor_chain
-from go_fluentd_spark.operators.concat import concat_sessions
-from go_fluentd_spark.operators.dispatcher import route_counts
-from go_fluentd_spark.operators.enrich import add_fields, es_index, msgid
-from go_fluentd_spark.operators.parser import parse
-from go_fluentd_spark.operators.postfilter import post_default
-from go_fluentd_spark.plans.pipeline import POST_STRING_COLS
+from bench import ACTIONS, BENCH_LEAVES, _noop_sink
+from go_fluentd_spark.plans import pipeline as P
 from go_fluentd_spark.session import build_spark
-from go_fluentd_spark.sources.synth import sequences_df, with_ingest_columns
-
-
-def _noop_hash_sink(df) -> None:
-    # bench.py's sink: xxhash64 fold + sum (forces every column, comparable)
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    cols = [
-        F.map_keys(f.name) if isinstance(f.dataType, T.MapType) else F.col(f.name)
-        for f in df.schema.fields
-        if not f.name.startswith("_")
-    ]
-    df.select((F.xxhash64(*cols) % 1000000007).alias("h")).agg(F.sum("h")).collect()
 
 
 def _noop_write(df) -> None:
@@ -76,45 +54,7 @@ def main() -> None:
         extra["spark.local.dir"] = "/dev/shm/spark-tmp"
     spark = build_spark("bench_extra", cores=cores, extra_conf=extra)
 
-    def seq():
-        return with_ingest_columns(sequences_df(spark, sf_dir, rep=rep))
-
-    def full_pipeline():
-        df = concat_sessions(seq(), max_len=DEFAULT_CONFIG.concat_max_len)
-        df = acceptor_chain(df, DEFAULT_CONFIG)
-        df = parse(df, DEFAULT_CONFIG)
-        df = add_fields(spark, df, DEFAULT_CONFIG)
-        df = post_default(df, DEFAULT_CONFIG, msg_cols=POST_STRING_COLS)
-        df = es_index(spark, df, DEFAULT_CONFIG)
-        return msgid(df, DEFAULT_CONFIG)
-
-    from go_fluentd_spark.operators import dataprep as DP
-
-    # (name, df_builder, action) — action mirrors bench.py exactly
-    registry: dict[str, tuple] = {
-        "ingest_scan": (seq, "hash"),
-        "concat_sessions": (lambda: concat_sessions(seq()), "count"),
-        "parse_native": (
-            lambda: parse(acceptor_chain(concat_sessions(seq()), DEFAULT_CONFIG), DEFAULT_CONFIG, impl="native"),
-            "count",
-        ),
-        "parse_pandas": (
-            lambda: parse(acceptor_chain(concat_sessions(seq()), DEFAULT_CONFIG), DEFAULT_CONFIG, impl="pandas"),
-            "count",
-        ),
-        "pipeline_sink_counts": (lambda: route_counts(spark, full_pipeline(), DEFAULT_CONFIG), "collect"),
-        "pipeline_routed_materialize": (full_pipeline, "hash"),
-        "dataprep_minhash_lsh_pairs": (lambda: DP.minhash_lsh_pairs(spark, sf_dir), "count"),
-        "dataprep_dedup_clusters": (lambda: DP.dedup_clusters(spark, sf_dir), "count"),
-        "dataprep_embed_banded_pairs": (lambda: DP.embed_banded_pairs(spark, sf_dir), "count"),
-        "dataprep_winnow_fingerprints": (lambda: DP.winnow_fingerprints(spark, sf_dir), "hash"),
-        "dataprep_token_ngram_dup": (lambda: DP.token_ngram_dup_stats(spark, sf_dir), "count"),
-        "dataprep_substr_dup_spans": (lambda: DP.substr_dup_spans(spark, sf_dir), "hash"),
-        "dataprep_sequence_chunks": (lambda: DP.sequence_chunks(spark, sf_dir), "count"),
-        "dataprep_pii_scrub": (lambda: DP.pii_scrub(spark, sf_dir), "count"),
-        "dataprep_token_vocab_topk": (lambda: DP.token_vocab_topk(spark, sf_dir), "count"),
-        "dataprep_token_lm": (lambda: DP.token_lm_scores(spark, sf_dir), "count"),
-    }
+    registry = {name: (build, action) for name, build, action in BENCH_LEAVES}
 
     names = [n for n in args.queries.split(",") if n] or list(registry)
     unknown = [n for n in names if n not in registry]
@@ -126,7 +66,7 @@ def main() -> None:
         suffix = args.explain[1] if len(args.explain) > 1 else "before"
         os.makedirs(out_dir, exist_ok=True)
         for n in names:
-            df = registry[n][0]()
+            df = registry[n][0](spark, sf_dir, rep)
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
@@ -137,22 +77,15 @@ def main() -> None:
     timings: dict[str, float] = {}
     if not args.no_time:
         # warm-up (same as bench.py: pay Arrow spin-up + codegen once)
-        _noop_hash_sink(full_pipeline())
+        _noop_sink(P.enriched(spark, sf_dir, rep=rep))
         for n in names:
             build, action = registry[n]
             spark.sparkContext.setJobDescription(f"bench_extra:{n}")
             best = None
             for _ in range(args.reps):
                 t0 = time.perf_counter()
-                df = build()
-                if args.noop:
-                    _noop_write(df)
-                elif action == "hash":
-                    _noop_hash_sink(df)
-                elif action == "collect":
-                    df.collect()
-                else:
-                    df.count()
+                df = build(spark, sf_dir, rep)
+                (_noop_write if args.noop else ACTIONS[action])(df)
                 dt = time.perf_counter() - t0
                 best = dt if best is None or dt < best else best
             spark.sparkContext.setJobDescription(None)

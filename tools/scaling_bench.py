@@ -21,40 +21,19 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RUNNER = r"""
 import json, os, sys, time
 sys.path.insert(0, %(repo)r)
-from go_fluentd_spark.config import DEFAULT_CONFIG
-from go_fluentd_spark.operators.dispatcher import route
+from bench import _noop_sink
 from go_fluentd_spark.plans import pipeline as P
 from go_fluentd_spark.session import build_spark
-from pyspark.sql import functions as F
 
 cores = int(sys.argv[1]); sf_dir = sys.argv[2]; rep = int(sys.argv[3])
 n_runs = int(sys.argv[4]) if len(sys.argv) > 4 else 3
-os.environ["SPARK_GRAFT_SEQ_REP"] = str(rep)
 spark = build_spark("scaling", cores=cores, shuffle_partitions=cores * 2,
                     extra_conf={"spark.local.dir": "/dev/shm/spark-tmp"})
 
-from go_fluentd_spark.sources.synth import sequences_df, with_ingest_columns
-from go_fluentd_spark.operators.concat import concat_sessions
-from go_fluentd_spark.operators.acceptor import acceptor_chain
-from go_fluentd_spark.operators.parser import parse
-from go_fluentd_spark.operators.enrich import add_fields, es_index, msgid
-from go_fluentd_spark.operators.postfilter import post_default
-
 def job():
-    df = with_ingest_columns(sequences_df(spark, sf_dir, rep=rep))
-    df = concat_sessions(df, max_len=DEFAULT_CONFIG.concat_max_len)
-    df = acceptor_chain(df, DEFAULT_CONFIG)
-    df = parse(df, DEFAULT_CONFIG)
-    df = add_fields(spark, df, DEFAULT_CONFIG)
-    df = post_default(df, DEFAULT_CONFIG, msg_cols=P.POST_STRING_COLS)
-    df = es_index(spark, df, DEFAULT_CONFIG)
-    df = msgid(df, DEFAULT_CONFIG)
-    df = route(spark, df, DEFAULT_CONFIG)
-    cols = [F.map_keys(f.name) if f.dataType.typeName() == "map" else F.col(f.name)
-            for f in df.schema.fields]
-    return df.select((F.xxhash64(*cols) %% 1000000007).alias("h")).agg(F.sum("h")).collect()[0][0]
+    return _noop_sink(P.routed(spark, sf_dir, rep=rep))
 
-n_rows = with_ingest_columns(sequences_df(spark, sf_dir, rep=rep)).count()
+n_rows = P.ingested(spark, sf_dir, rep=rep).count()
 job()  # warm-up (JVM JIT, file listing, broadcast)
 best = None
 for _ in range(n_runs):
