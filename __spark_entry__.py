@@ -137,8 +137,8 @@ _DATAPREP = {
     # fits the driver's 50-query correctness capture (VERDICT r4 item 2)
     "lsh_band_stats": DP.lsh_band_stats,
     "ngram_jaccard_pairs": DP.ngram_jaccard_pairs,
-    # connected components over the LSH pairs (deterministic unrolled
-    # min-label propagation) — cluster id + representative per doc
+    # connected components over the LSH pairs (large-star/small-star to
+    # the fixed point) — cluster id + representative per doc
     "dedup_clusters": DP.dedup_clusters,
     # the embedding-space twin (CC over banded cosine pairs)
     "embed_dedup_clusters": DP.embed_dedup_clusters,

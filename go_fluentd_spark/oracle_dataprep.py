@@ -227,58 +227,37 @@ WHERE round(len(list_filter(sa.s, x -> list_contains(sb.s, x))) * 1.0
         / (len(sa.s) + len(sb.s) - len(list_filter(sa.s, x -> list_contains(sb.s, x)))), 4) >= {D.JACCARD_TAU}"""
 
 
-def q_dedup_clusters() -> str:
-    """Mirror of dedup_clusters: the SAME fixed min-label-propagation rounds
-    unrolled as CTEs over the capped LSH pairs."""
-    rounds = []
-    prev = "l0"
-    for t in range(1, D.DEDUP_CC_ITERS + 1):
-        rounds.append(
-            f"""l{t} AS (
-  SELECT e.src AS doc_id, min(p.lbl) AS lbl
-  FROM edges e JOIN {prev} p ON p.doc_id = e.dst GROUP BY e.src)"""
-        )
-        prev = f"l{t}"
-    rounds_sql = ",\n".join(rounds)
+def _cc_sql(pairs_sql: str, a: str, b: str, vertex_table: str, id_col: str) -> str:
+    """Connected components as a recursive reachability closure: every
+    vertex reaches itself and, through ``pairs_sql``'s (a, b) edges in both
+    directions, its whole component (UNION set semantics stop the
+    recursion); its cluster is the least vertex reached.  Shares no logic
+    with the Spark star rounds (dataprep._cc_clusters), so the fixed point
+    is checked, not mirrored."""
     return f"""
-WITH pairs AS ({q_minhash_lsh_pairs().strip()}),
-edges AS (
-  SELECT a_doc AS src, b_doc AS dst FROM pairs
-  UNION ALL SELECT b_doc, a_doc FROM pairs
-  UNION ALL SELECT doc_id, doc_id FROM documents),
-l0 AS (SELECT doc_id, doc_id AS lbl FROM documents),
-{rounds_sql},
-sizes AS (SELECT lbl, count(*) AS cluster_sz FROM {prev} GROUP BY lbl)
-SELECT f.doc_id, f.lbl AS cluster, s.cluster_sz,
-  CAST(f.doc_id = f.lbl AS INT) AS is_rep
-FROM {prev} f JOIN sizes s USING (lbl)"""
+WITH RECURSIVE pairs AS ({pairs_sql.strip()}),
+edges AS (SELECT {a} AS src, {b} AS dst FROM pairs
+          UNION SELECT {b}, {a} FROM pairs),
+reach(v, r) AS (
+  SELECT {id_col}, {id_col} FROM {vertex_table}
+  UNION
+  SELECT reach.v, edges.dst FROM reach JOIN edges ON edges.src = reach.r),
+lbl AS (SELECT v, min(r) AS cluster FROM reach GROUP BY v),
+sizes AS (SELECT cluster, count(*) AS cluster_sz FROM lbl GROUP BY cluster)
+SELECT lbl.v AS {id_col}, lbl.cluster, sizes.cluster_sz,
+  CAST(lbl.v = lbl.cluster AS INT) AS is_rep
+FROM lbl JOIN sizes USING (cluster)"""
+
+
+def q_dedup_clusters() -> str:
+    """Twin of dataprep.dedup_clusters: CC over the capped LSH pairs."""
+    return _cc_sql(q_minhash_lsh_pairs(), "a_doc", "b_doc", "documents", "doc_id")
 
 
 def q_embed_dedup_clusters() -> str:
-    """Mirror of dataprep.embed_dedup_clusters: the same fixed CC rounds
-    over the capped banded-LSH cosine pairs."""
-    rounds = []
-    prev = "l0"
-    for t in range(1, D.DEDUP_CC_ITERS + 1):
-        rounds.append(
-            f"""l{t} AS (
-  SELECT e.src AS vid, min(p.lbl) AS lbl
-  FROM edges e JOIN {prev} p ON p.vid = e.dst GROUP BY e.src)"""
-        )
-        prev = f"l{t}"
-    rounds_sql = ",\n".join(rounds)
-    return f"""
-WITH pairs AS ({q_embed_banded_pairs().strip()}),
-edges AS (
-  SELECT a_vec AS src, b_vec AS dst FROM pairs
-  UNION ALL SELECT b_vec, a_vec FROM pairs
-  UNION ALL SELECT vec_id, vec_id FROM embeddings),
-l0 AS (SELECT vec_id AS vid, vec_id AS lbl FROM embeddings),
-{rounds_sql},
-sizes AS (SELECT lbl, count(*) AS cluster_sz FROM {prev} GROUP BY lbl)
-SELECT f.vid AS vec_id, f.lbl AS cluster, s.cluster_sz,
-  CAST(f.vid = f.lbl AS INT) AS is_rep
-FROM {prev} f JOIN sizes s USING (lbl)"""
+    """Twin of dataprep.embed_dedup_clusters: CC over the capped
+    banded-LSH cosine pairs."""
+    return _cc_sql(q_embed_banded_pairs(), "a_vec", "b_vec", "embeddings", "vec_id")
 
 
 def q_pii_scrub() -> str:

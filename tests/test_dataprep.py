@@ -211,22 +211,13 @@ def test_substr_dup_spans_guarantees(spark, sf_dir):
 
 
 def test_dedup_clusters_fixed_point_and_cover(spark, sf_dir):
-    """Min-label propagation must have CONVERGED within the fixed rounds
-    (one extra round changes nothing), every verified pair must land in one
-    cluster, and representatives must cover the corpus exactly."""
-    base = {
-        r.doc_id: r.cluster for r in DP.dedup_clusters(spark, sf_dir).collect()
-    }
-    extra = {
-        r.doc_id: r.cluster
-        for r in DP.dedup_clusters(
-            spark, sf_dir, n_iter=DP.DEDUP_CC_ITERS + 1
-        ).collect()
-    }
-    assert base == extra  # fixed point reached inside the unrolled rounds
+    """Every verified pair must land in one cluster, and representatives
+    must cover the corpus exactly (the fixed point itself is pinned by the
+    adversarial graph test below)."""
+    clusters = DP.dedup_clusters(spark, sf_dir)
+    base = {r.doc_id: r.cluster for r in clusters.collect()}
     for r in DP.minhash_lsh_pairs(spark, sf_dir).collect():
         assert base[r.a_doc] == base[r.b_doc]
-    clusters = DP.dedup_clusters(spark, sf_dir)
     n_docs = DP.docs(spark, sf_dir).count()
     agg = clusters.filter("is_rep = 1").agg(
         F.sum("cluster_sz").alias("covered"), F.count("*").alias("n_reps")
@@ -234,39 +225,113 @@ def test_dedup_clusters_fixed_point_and_cover(spark, sf_dir):
     assert agg.covered == n_docs  # every doc in exactly one rep's cluster
     assert clusters.count() == n_docs
     assert agg.n_reps < n_docs  # the corpus really has near-dup groups
-    # the production fixed-point variant must agree with the unrolled twin
-    conv = {
-        r.doc_id: r.cluster
-        for r in DP.dedup_clusters_converged(spark, sf_dir).collect()
-    }
-    assert conv == base
 
 
 def test_dedup_clusters_reliable_checkpoint(spark, sf_dir, tmp_path):
-    """Cluster-mode knob: with ``checkpoint_dir`` set, the CC loops truncate
+    """Cluster-mode knob: with ``checkpoint_dir`` set, the CC loop truncates
     lineage through a RELIABLE checkpoint (survives executor loss) instead
-    of localCheckpoint — results must be identical and the checkpoint files
-    must actually land in the given dir."""
+    of localCheckpoint — results must be identical, the checkpoint files
+    must actually land in the given dir, and the run sets the directory
+    once (Spark makes one UUID subdirectory per ``setCheckpointDir``)."""
     import os
 
-    ckpt = str(tmp_path / "cc_ckpt")
+    ckpt = tmp_path / "cc_ckpt"
     base = {
         r.doc_id: (r.cluster, r.cluster_sz, r.is_rep)
         for r in DP.dedup_clusters(spark, sf_dir).collect()
     }
     rel = {
         r.doc_id: (r.cluster, r.cluster_sz, r.is_rep)
-        for r in DP.dedup_clusters(spark, sf_dir, checkpoint_dir=ckpt).collect()
+        for r in DP.dedup_clusters(spark, sf_dir, checkpoint_dir=str(ckpt)).collect()
     }
     assert rel == base
     assert any(files for _, _, files in os.walk(ckpt)), "no reliable checkpoint written"
-    conv = {
-        r.doc_id: (r.cluster, r.cluster_sz, r.is_rep)
-        for r in DP.dedup_clusters_converged(
-            spark, sf_dir, checkpoint_dir=ckpt
-        ).collect()
-    }
-    assert conv == base
+    assert len(os.listdir(ckpt)) == 1, os.listdir(ckpt)
+
+
+def _adversarial_graph() -> tuple[list[tuple[int, int]], list[int]]:
+    """(pairs, vertices): a 64-vertex chain over seeded non-monotone ids
+    (local id minima many hops apart), a 5-cycle, a 6-leaf star whose centre
+    is its largest id, and 3 isolated vertices."""
+    import random
+
+    ids = random.Random(20141103).sample(range(1_000, 1_000_000), 64 + 5 + 7 + 3)
+    chain, cycle, star, iso = ids[:64], ids[64:69], sorted(ids[69:76]), ids[76:]
+    pairs = list(zip(chain, chain[1:]))
+    pairs += list(zip(cycle, cycle[1:] + cycle[:1]))
+    pairs += [(star[-1], leaf) for leaf in star[:-1]]
+    assert iso and not {v for p in pairs for v in p} & set(iso)
+    return pairs, ids
+
+
+def _union_find(pairs, vertices) -> dict[int, tuple[int, int, int]]:
+    """vertex -> (cluster, cluster_sz, is_rep), cluster = component min."""
+    from collections import Counter
+
+    parent = {v: v for v in vertices}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    root = {v: find(v) for v in vertices}
+    size = Counter(root.values())
+    return {v: (r, size[r], int(v == r)) for v, r in root.items()}
+
+
+def test_cc_converges_on_adversarial_graph(spark, monkeypatch):
+    """The CC must reach the fixed point on a graph the testdata never
+    builds — a long chain whose id minima are far apart, a cycle, a star
+    centred off its minimum, isolated vertices — with one representative
+    per component, and in O(log² n) star rounds: at most 8 truncated rounds
+    after the edge frame (min-label propagation needs ~one round per hop)."""
+    pairs, vertices = _adversarial_graph()
+    want = _union_find(pairs, vertices)
+    calls = []
+    truncate = DP._truncate_lineage
+
+    def counting(df, reliable):
+        calls.append(reliable)
+        return truncate(df, reliable)
+
+    monkeypatch.setattr(DP, "_truncate_lineage", counting)
+    got = DP._cc_clusters(
+        spark.createDataFrame(pairs, "a bigint, b bigint"),
+        spark.createDataFrame([(v,) for v in vertices], "vid bigint"),
+        "vid",
+    )
+    assert got.columns == ["vid", "cluster", "cluster_sz", "is_rep"]
+    assert {r.vid: (r.cluster, r.cluster_sz, r.is_rep) for r in got.collect()} == want
+    assert sum(rep for _, _, rep in want.values()) == 1 + 1 + 1 + 3
+    assert len(calls) <= 9, len(calls)
+
+
+def test_cc_oracle_twin_on_adversarial_graph():
+    """The DuckDB twin of the CC (a recursive reachability closure) equals
+    the union-find on the same graph, also through the CTE-materializing
+    rewrite the benchmark's curation check runs it under.  No Spark."""
+    import duckdb
+
+    from go_fluentd_spark.oracle_dataprep import _cc_sql
+    from perfbench.checks import materialized
+
+    pairs, vertices = _adversarial_graph()
+    want = _union_find(pairs, vertices)
+    con = duckdb.connect()
+    con.execute("CREATE TABLE p (a BIGINT, b BIGINT)")
+    con.executemany("INSERT INTO p VALUES (?, ?)", pairs)
+    con.execute("CREATE TABLE verts (vid BIGINT)")
+    con.executemany("INSERT INTO verts VALUES (?)", [(v,) for v in vertices])
+    sql = _cc_sql("SELECT a, b FROM p", "a", "b", "verts", "vid")
+    for q in (sql, materialized(sql)):
+        cur = con.execute(q)
+        assert [d[0] for d in cur.description] == ["vid", "cluster", "cluster_sz", "is_rep"]
+        assert {v: (c, n, rep) for v, c, n, rep in cur.fetchall()} == want
 
 
 def test_ivf_topk_recall(spark, sf_dir):

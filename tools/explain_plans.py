@@ -72,7 +72,7 @@ def main() -> None:
     sections["sequence_chunks (zero-shuffle narrow explode)"] = DP.sequence_chunks(
         spark, SF
     )
-    sections["dedup_clusters (checkpointed edges + per-round min-combine)"] = (
+    sections["dedup_clusters (star rounds to the fixed point, then labels from the checkpointed stars)"] = (
         DP.dedup_clusters(spark, SF)
     )
     sections["token_lm_scores (one bigram-count shuffle, broadcast context counts)"] = (
@@ -111,12 +111,12 @@ def main() -> None:
         "",
         "sequence_chunks is shuffle-free: one pruned scan, a narrow",
         "generate (explode) and projections — the whole operator runs",
-        "map-side at any scale.  dedup_clusters reads the checkpointed",
-        "edge list (the LSH pair pipeline executes exactly once; its",
-        "scans/exchanges do NOT appear per round) and each propagation",
-        "round is one join + partial-min HashAggregate pair — the",
-        "Exchange count grows linearly with the fixed round count, with",
-        "map-side min-combine keeping reduce volume at |V|.",
+        "map-side at any scale.  dedup_clusters runs its large-star/",
+        "small-star rounds as their own checkpointed jobs before this plan",
+        "is built (the LSH pair pipeline executes exactly once), so the",
+        "plan shown only joins the documents to the converged star edges",
+        "and counts cluster sizes in one window: its Exchange count does",
+        "not grow with the number of rounds.",
     ]
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
