@@ -7,12 +7,13 @@ therefore applies UNCHANGED to a streaming DataFrame.  This module adds the
 two genuinely streaming-only pieces:
 
 - ``concat_sessions_streaming``: the multiline concator as a custom stateful
-  operator (``applyInPandasWithState`` keyed by (tag, container_id)) with the
-  reference's flush rules — next-head arrival, ``max_len`` overflow, and the
-  ``ConcatorWait`` gap timeout (``internal/recvs/fluentd.go:23,505``,
-  ``internal/tagfilters/concator_f.go:64,91-111``) mapped to a processing-time
-  state timeout.  State persists in the checkpoint across restarts — the
-  streaming twin of the WAL.
+  operator (``applyInPandasWithState`` over n hash buckets of (tag,
+  container_id), n = the state partitions) with the reference's flush
+  rules — next-head arrival, ``max_len`` overflow, and the ``ConcatorWait``
+  gap (``internal/recvs/fluentd.go:23,505``,
+  ``internal/tagfilters/concator_f.go:64,91-111``) kept per session under a
+  processing-time state timeout.  State persists in the checkpoint across
+  restarts — the streaming twin of the WAL.
 - ``run_pipeline_stream``: readStream -> stateless chain -> ``foreachBatch``
   fan-out writing per-sink directories + per-batch counts (the reference's
   per-sender batching, ``internal/senders/*``; micro-batch = the batch/linger
@@ -23,6 +24,8 @@ from __future__ import annotations
 
 import os
 import threading
+from contextlib import contextmanager
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
@@ -67,19 +70,6 @@ _OUT_SCHEMA = T.StructType(
     ]
 )
 
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("tokens", T.ArrayType(T.IntegerType())),
-        T.StructField("n_tok", T.IntegerType()),
-        T.StructField("env", T.StringType()),
-        T.StructField("tag_base", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("ext_ids", T.ArrayType(T.LongType())),
-    ]
-)
-
 
 def read_sequence_stream(
     spark: SparkSession, src_dir: str, max_files_per_trigger: int | None = None
@@ -96,12 +86,94 @@ def read_sequence_stream(
     return reader.parquet(src_dir)
 
 
-
 _OUT_COLS = [f.name for f in _OUT_SCHEMA.fields]
-_BASE_COLS = ["id", "doc_id", "tokens", "n_tok", "env", "tag_base", "source"]
+_KEY = ["tag", "container_id"]
+# one state group's open sessions as parallel arrays: entry i is the row
+# session i flushes as, plus the processing time its key last brought rows
+_STATE_SCHEMA = T.StructType(
+    [T.StructField(f.name, T.ArrayType(f.dataType)) for f in _OUT_SCHEMA.fields]
+    + [T.StructField("last_ms", T.ArrayType(T.LongType()))]
+)
+_STATE_COLS = _OUT_COLS + ["last_ms"]
 
 
-def _concat_fold(
+def _fold_sessions(
+    carried: pd.DataFrame,
+    rows: pd.DataFrame,
+    compiled: dict,
+    max_len: int,
+    max_merged: int,
+) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """The batch operator's rules (``operators/concat.py``) over carried
+    open sessions ∪ new ``rows``, for every (tag, container_id) key at once;
+    returns (flushed rows, sessions still open).  A carried session is a
+    head at its head ``id`` that counts ``n_merged`` rows and
+    ``len(source)`` chars.  Per key in ``id`` order the last head wins; a
+    tail whose session already holds ``max_len`` chars or ``max_merged``
+    rows is evicted to its own row and its session flushes; a tail before
+    any head passes through alone (``concator_f.go:151-157``), as do
+    unconfigured tags.  A key's last session stays open; the others flush.
+
+    Late rows: a row whose ``id`` is below its key's carried head ``id``
+    sorts before that head, where the batch operator over all rows puts
+    it.  A late tail is a lone tail (or joins a late head), and a late
+    head's session flushes at once, closed by the carried head; the
+    already flushed session it would have joined is not reopened.  A row
+    above the carried head ``id`` is appended at the session's end."""
+    import numpy as np
+
+    rows = rows.assign(n_merged=1, ext_ids=[[]] * len(rows))
+    conf = rows["tag_base"].isin(list(compiled)).to_numpy()
+    new = rows.loc[conf, _OUT_COLS]
+    head = np.zeros(len(new), dtype=bool)
+    for base, rx in compiled.items():
+        m = (new["tag_base"] == base).to_numpy()
+        if m.any():
+            head[m] = new.loc[m, "source"].str.match(rx).to_numpy(dtype=bool)
+    u = pd.concat([carried[_OUT_COLS], new], ignore_index=True)
+    u["_head"] = np.concatenate([np.ones(len(carried), dtype=bool), head])
+    u = u.sort_values(_KEY + ["id"], ignore_index=True)
+
+    pos = np.arange(len(u))
+    is_head = u["_head"].to_numpy(dtype=bool)
+    tag, cid = u["tag"].to_numpy(), u["container_id"].to_numpy()
+    new_key = np.ones(len(u), dtype=bool)
+    new_key[1:] = (tag[1:] != tag[:-1]) | (cid[1:] != cid[:-1])
+    key_start = np.maximum.accumulate(np.where(new_key, pos, 0))
+    last_head = np.maximum.accumulate(np.where(is_head, pos, -1))
+    in_sess = last_head >= key_start
+    start = np.where(in_sess, last_head, pos)  # the row's session head
+    lens = u["source"].str.len().to_numpy(dtype=np.int64)
+    w = u["n_merged"].to_numpy(dtype=np.int64)
+    chars, cnt = np.cumsum(lens) - lens, np.cumsum(w) - w  # before the row
+    evict = (~is_head & in_sess) & (
+        (chars - chars[start] >= max_len) | (cnt - cnt[start] >= max_merged)
+    )
+    member = ~is_head & in_sess & ~evict
+
+    hp = np.flatnonzero(is_head)
+    kid = np.cumsum(new_key)[hp]
+    stays_open = np.append(kid[1:] != kid[:-1], True) & ~np.isin(hp, start[evict])
+    heads = u.loc[hp, _OUT_COLS]
+    if member.any():
+        tails = u.loc[member, ["source", "id"]].groupby(start[member], sort=False)
+        src, ids = tails["source"].agg("".join), tails["id"].agg(list)
+        heads["source"] = heads["source"] + src.reindex(hp, fill_value="")
+        heads["n_merged"] += ids.str.len().reindex(hp, fill_value=0)
+        more = ids.reindex(hp)
+        heads["ext_ids"] = [
+            list(e) + x if isinstance(x, list) else e
+            for e, x in zip(heads["ext_ids"], more)
+        ]
+    flushed = pd.concat(
+        [rows.loc[~conf, _OUT_COLS], u.loc[~is_head & ~member, _OUT_COLS],
+         heads[~stays_open]],
+        ignore_index=True,
+    )
+    return flushed, heads[stays_open]
+
+
+def _bucket_fold(
     key: tuple,
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
@@ -111,181 +183,53 @@ def _concat_fold(
     max_merged: int,
     gap_ms: int,
 ) -> Iterator[pd.DataFrame]:
-    """VECTORIZED sequential-fold restatement (module-level so the no-Spark
-    property test can drive it against a sequential reference).  The
-    reference folds one row at a time (concator_f.go:140-207); here each
-    micro-batch group is sessionized with segmented numpy ops — per-row
-    Python only touches actual continuation tails (~2% of rows in the
-    reference's traffic mix).  Semantics proof hooks: "last head wins" =
-    cumsum(is_head); overflow checks chars/rows ALREADY
-    buffered, both nondecreasing within a session, so the first
-    overflowing tail and every later one stand alone — exactly the repo's
-    batch operator (operators/concat.py wg eviction) and the sequential
-    fold the property test pins.  INTENTIONAL DEVIATION from the reference
-    (ADVICE r5): concator_f.go:197-202 appends the overflowing tail INTO
-    the session and flushes the merged message, i.e. the reference's
-    overflowing tail ships inside the flushed session; here (batch and
-    streaming alike, kept mutually consistent and oracle-checked) the
-    overflowing tail is EVICTED to its own row.  Both bound the buffer;
-    the eviction form keeps check-before-append semantics expressible as
-    one running-sum window on the batch side."""
+    """The fold of one state group, i.e. of every key hashed to it: one
+    pandas call per group and trigger (module level so tests can drive it
+    with a fake ``GroupState``).  The state holds the group's open sessions,
+    each with the ``last_ms`` its key last brought rows.  Every call, with
+    rows or on a timeout, flushes the sessions of keys that bring no rows
+    and sat idle for ``gap_ms`` (ConcatorWait, ``concator_f.go:91-111``),
+    however busy the group's other keys are; a key's own rows reach its
+    session before any timeout, as with a per-key operator.  The rest fold
+    with the rows; sessions left open get ``last_ms`` = now, and the group
+    timeout is the earliest remaining deadline.
+
+    INTENTIONAL DEVIATION (ADVICE r5), shared with the batch operator:
+    ``concator_f.go:197-202`` flushes the overflowing tail inside its
+    session; here it is evicted to its own row, so check-before-append
+    stays one running-sum window on the batch side."""
     import numpy as np
 
-    tag, container = key
-    carry: dict | None = None
-    if state.exists:
-        s = state.get
-        carry = {
-            "id": int(s[0]), "doc_id": s[1], "tokens": list(s[2]),
-            "n_tok": int(s[3]), "env": s[4], "tag_base": s[5],
-            "source": s[6], "ext_ids": list(s[7]),
-        }
-
-    def _carry_row() -> dict:
-        return {
-            "tag": tag, "container_id": container, "id": carry["id"],
-            "doc_id": carry["doc_id"], "tokens": carry["tokens"],
-            "n_tok": carry["n_tok"], "env": carry["env"],
-            "tag_base": carry["tag_base"], "source": carry["source"],
-            "n_merged": 1 + len(carry["ext_ids"]),
-            "ext_ids": carry["ext_ids"],
-        }
-
-    if state.hasTimedOut:
-        # ConcatorWait gap flush (concator_f.go:91-111)
-        state.remove()
-        yield pd.DataFrame(
-            [_carry_row()] if carry is not None else [], columns=_OUT_COLS
-        )
-        return
-
-    chunks = [c for c in pdfs if len(c)]
-    if not chunks:  # no new rows: leave state (and its timer) untouched
-        yield pd.DataFrame([], columns=_OUT_COLS)
-        return
-    pdf = pd.concat(chunks, ignore_index=True)
-    pdf = pdf.sort_values("id", ignore_index=True)
-    rx = compiled.get(pdf["tag_base"].iat[0])  # tag fixed per group
-
-    if rx is None:
-        # unconfigured tag: passthrough (no state was ever kept)
-        out = pdf[_BASE_COLS].copy()
-        out["n_merged"] = 1
-        out["ext_ids"] = [[]] * len(out)
-        out["tag"], out["container_id"] = tag, container
-        yield out[_OUT_COLS]
-        return
-
-    n = len(pdf)
-    pos = np.arange(n, dtype=np.int64)
-    lens = pdf["source"].str.len().to_numpy(dtype=np.int64)
-    is_head = pdf["source"].str.match(rx).to_numpy(dtype=bool)
-
-    # sess 0 = rows before the batch's first head (the carried session's
-    # tails, or lone tails); k>=1 = the session of the k-th head
-    sess = np.cumsum(is_head)
-    head_pos = np.flatnonzero(is_head)
-    start = np.zeros(n, dtype=np.int64)
-    if len(head_pos):
-        in_sess = sess >= 1
-        start[in_sess] = head_pos[sess[in_sess] - 1]
-
-    # overflow eviction BEFORE append: chars / rows already buffered
-    cum_before = np.cumsum(lens) - lens
-    prior_len = cum_before - cum_before[start]
-    cnt_before = pos - start
-    if carry is not None:
-        seg0 = sess == 0
-        prior_len = prior_len + seg0 * len(carry["source"])
-        cnt_before = cnt_before + seg0 * (1 + len(carry["ext_ids"]))
-    evict = (~is_head) & ((prior_len >= max_len) | (cnt_before >= max_merged))
-    # lone tails (no carry, no head yet) pass through (:151-157)
-    individual = evict if carry is not None else (evict | (sess == 0))
-
-    # the session still open at batch end: the last head's (or the
-    # carried one if no head arrived) — unless it overflowed mid-batch
-    open_label: int | None = (
-        int(sess[-1]) if (len(head_pos) or carry is not None) else None
+    now = state.getCurrentProcessingTimeMs()
+    carried = pd.DataFrame(
+        dict(zip(_STATE_COLS, state.get)) if state.exists else None,
+        columns=_STATE_COLS,
     )
-    if open_label is not None and evict[sess == open_label].any():
-        open_label = None
-
-    frames: list[pd.DataFrame] = []
-    if individual.any():
-        ind = pdf.loc[individual, _BASE_COLS].copy()
-        ind["n_merged"] = 1
-        ind["ext_ids"] = [[]] * len(ind)
-        frames.append(ind)
-
-    # merged tails, grouped by session (contiguous runs, id order kept)
-    tails_mask = ~individual & ~is_head
-    src_map: dict[int, str] = {}
-    ext_map: dict[int, list[int]] = {}
-    if tails_mask.any():
-        t_sess = sess[tails_mask]
-        t_ids = pdf.loc[tails_mask, "id"].to_numpy()
-        t_src = pdf.loc[tails_mask, "source"].to_numpy(dtype=object)
-        uniq, first = np.unique(t_sess, return_index=True)
-        bounds = np.append(first, len(t_sess))
-        for k, s0 in enumerate(uniq):
-            lo, hi = bounds[k], bounds[k + 1]
-            src_map[int(s0)] = "".join(t_src[lo:hi])
-            ext_map[int(s0)] = [int(x) for x in t_ids[lo:hi]]
-
-    heads = pdf.loc[is_head, _BASE_COLS].copy()
-    if len(heads):
-        hsess = sess[is_head]  # ascending: 1..len(head_pos)
-        n_m = np.ones(len(heads), dtype=np.int64)
-        ext_col: list[list[int]] = [[]] * len(heads)
-        src_col = heads["source"].to_numpy(dtype=object).copy()
-        for s0, ids_ in ext_map.items():
-            if s0 == 0:
-                continue  # carried session's tails, handled below
-            j = int(np.searchsorted(hsess, s0))
-            src_col[j] = src_col[j] + src_map[s0]
-            ext_col[j] = ids_
-            n_m[j] = 1 + len(ids_)
-        heads["source"] = src_col
-        heads["ext_ids"] = ext_col
-        heads["n_merged"] = n_m
-
-    new_state: tuple | None = None
-    if carry is not None:
-        c_src = carry["source"] + src_map.get(0, "")
-        c_ext = carry["ext_ids"] + ext_map.get(0, [])
-        if open_label == 0:  # no head this batch: stays open, grown
-            new_state = (
-                carry["id"], carry["doc_id"], carry["tokens"],
-                carry["n_tok"], carry["env"], carry["tag_base"],
-                c_src, c_ext,
-            )
-        else:  # next head arrived (or overflow): flushes now
-            carry.update(source=c_src, ext_ids=c_ext)
-            frames.append(pd.DataFrame([_carry_row()]))
-
-    if open_label is not None and open_label >= 1:
-        h = heads.iloc[-1]  # the last head session is always last
-        new_state = (
-            int(h["id"]), h["doc_id"], [int(x) for x in h["tokens"]],
-            int(h["n_tok"]), h["env"], h["tag_base"], h["source"],
-            [int(x) for x in h["ext_ids"]],
+    chunks = [c for c in pdfs if len(c)]
+    rows = pd.concat(chunks, ignore_index=True) if chunks else None
+    quiet = np.ones(len(carried), dtype=bool)
+    if rows is not None:  # keys that bring rows are not quiet
+        busy = pd.MultiIndex.from_frame(rows[_KEY])
+        quiet = ~pd.MultiIndex.from_frame(carried[_KEY]).isin(busy)
+    idle = quiet & (now - carried["last_ms"].to_numpy(dtype=np.int64) >= gap_ms)
+    flushed, kept = [carried.loc[idle, _OUT_COLS]], [carried[quiet & ~idle]]
+    if rows is not None:
+        out, still_open = _fold_sessions(
+            carried[~quiet], rows, compiled, max_len, max_merged
         )
-        heads = heads.iloc[:-1]
-    if len(heads):
-        frames.append(heads)
-
-    if new_state is not None:
-        state.update(new_state)
-        state.setTimeoutDuration(gap_ms)
+        flushed.append(out)
+        kept.append(still_open.assign(last_ms=now))
+    kept = pd.concat(kept, ignore_index=True)
+    if len(kept):
+        # plain Python lists: the JVM unpickles no numpy
+        state.update(tuple(
+            [v.tolist() if isinstance(v, np.ndarray) else v for v in kept[c]]
+            for c in _STATE_COLS
+        ))
+        state.setTimeoutDuration(int(kept["last_ms"].min()) + gap_ms - now)
     elif state.exists:
         state.remove()
-
-    if not frames:
-        yield pd.DataFrame([], columns=_OUT_COLS)
-        return
-    out = pd.concat(frames, ignore_index=True)
-    out["tag"], out["container_id"] = tag, container
-    yield out[_OUT_COLS]
+    yield pd.concat(flushed, ignore_index=True)
 
 
 def concat_sessions_streaming(
@@ -297,29 +241,67 @@ def concat_sessions_streaming(
 ) -> DataFrame:
     """Stateful multiline concat.  Input: ingest-column frame (streaming).
     Output rows appear when a session FLUSHES (next head / max_len / gap
-    timeout) — at-least-once with checkpointed state, like the reference's
-    in-recv concator backed by the WAL."""
+    timeout), at-least-once with checkpointed state, like the reference's
+    in-recv concator backed by the WAL.
+
+    Many keys share a state group: rows group by ``pmod(xxhash64(tag,
+    container_id), n)``, ``n`` = the session's shuffle partitions (which
+    ``run_pipeline_stream`` sets to the state-partition count), so each
+    trigger makes one pandas call per group instead of one per key.  A
+    checkpoint of the old per-key operator fails Spark's state-schema
+    check (STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE): use a fresh one."""
     import re
 
     configs = CONCAT_CONFIGS if configs is None else configs
     compiled = {base: re.compile(c["head_regexp"]) for base, c in configs.items()}
-
-    def fold(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        return _concat_fold(
-            key, pdfs, state,
-            compiled=compiled, max_len=max_len,
-            max_merged=max_merged, gap_ms=gap_ms,
-        )
-
-    return df.groupBy("tag", "container_id").applyInPandasWithState(
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    fold = partial(
+        _bucket_fold, compiled=compiled, max_len=max_len,
+        max_merged=max_merged, gap_ms=gap_ms,
+    )
+    return df.withColumn(
+        "_bucket", F.pmod(F.xxhash64(*_KEY), F.lit(n))
+    ).groupBy("_bucket").applyInPandasWithState(
         fold,
         outputStructType=_OUT_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
+
+
+@contextmanager
+def _shuffle_partitions(spark: SparkSession, n: int):
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _state_partitions(spark: SparkSession, checkpoint_dir: str) -> int:
+    """The state-partition count of a query on ``checkpoint_dir``: the
+    ``spark.sql.shuffle.partitions`` its offset log recorded (Spark reuses
+    it on restart), else the task slots.  Read through the Hadoop
+    FileSystem API, so a remote checkpoint URI works too."""
+    import json
+
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    offsets = path(checkpoint_dir, "offsets")
+    fs = offsets.getFileSystem(spark._jsc.hadoopConfiguration())
+    found = fs.listStatus(offsets) if fs.exists(offsets) else []
+    batches = [int(n) for n in (f.getPath().getName() for f in found) if n.isdigit()]
+    if not batches:
+        return spark.sparkContext.defaultParallelism
+    # offsets/0 until Spark purges it; every offset file records the conf
+    stream = fs.open(path(offsets, str(min(batches))))
+    try:
+        text = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    conf = json.loads(text.split("\n")[1])["conf"]  # line 0: log version
+    return int(conf["spark.sql.shuffle.partitions"])
 
 
 def shed_overload(
@@ -394,7 +376,9 @@ def drain_and_stop(
     sinks and the query is safe to ``stop()``.
 
     Stateless availableNow pipelines (``with_concat=False``) self-terminate;
-    for those the ``q.isActive`` guard exits immediately.  ``timeout_s`` is
+    for those the ``q.isActive`` guard exits immediately, and the drain
+    counts as settled when the query ended with no exception and no source
+    reports input past its last committed offset.  ``timeout_s`` is
     an IDLE deadline, not a whole-run cap (ADVICE r5): every committed
     batch that still carries input rows resets it, so a long backlog drains
     however long it takes while a genuinely stuck stream still times out.
@@ -428,6 +412,13 @@ def drain_and_stop(
                 # force-stopping a healthy drain of a long backlog
                 deadline = time.monotonic() + timeout_s
         time.sleep(poll_s)
+    if not settled and not q.isActive:
+        # a file source reports no latest offset (the string "None")
+        sources = (q.lastProgress or {}).get("sources", [])
+        settled = q.exception() is None and all(
+            so.get("latestOffset") in (None, "None", so.get("endOffset"))
+            for so in sources
+        )
     # cooperative stop — ONLY on the settled path (every remaining batch is
     # provably empty): flag the foreachBatch sink down to its count()-only
     # form (full state execution, no writes — see the sink_batch comment
@@ -490,8 +481,12 @@ def run_pipeline_stream(
     df = with_ingest_columns(
         read_sequence_stream(spark, src_dir, max_files_per_trigger)
     )
+    # state partitions = concat state groups = the task slots (or what a
+    # restart's checkpoint recorded), set only to build and start the query
+    n_state = _state_partitions(spark, checkpoint_dir)
     if with_concat:
-        df = concat_sessions_streaming(df)
+        with _shuffle_partitions(spark, n_state):
+            df = concat_sessions_streaming(df)
     df = acceptor_chain(df, cfg)
     df = parse(df, cfg)
     df = msgid(df, cfg)
@@ -631,11 +626,12 @@ def run_pipeline_stream(
             counts = spark_b.createDataFrame(rows, "tag string, n bigint")
         _write_batch_partition(counts, os.path.join(out_dir, "_counts"), batch_id)
 
-    q = (
-        df.writeStream.foreachBatch(sink_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    with _shuffle_partitions(spark, n_state):
+        q = (
+            df.writeStream.foreachBatch(sink_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
     _STOP_FLAGS[str(q.id)] = stop_event
     return q

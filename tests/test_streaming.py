@@ -117,3 +117,49 @@ def test_stream_lossy_drop_on_overload(spark, sf_dir, tmp_path):
     # per (batch, tag) the delivered count never exceeds the budget
     over = counts1.filter(F.col("n") > cap).collect()
     assert not over, over
+
+
+def test_drain_settles_a_stateless_query_that_ended_by_itself(spark, sf_dir, tmp_path):
+    """A stateless availableNow query ends on its own once its input is
+    in; draining it afterwards reports the settled drain it was."""
+    src = str(tmp_path / "src")
+    _write_batch(spark, sf_dir, src, 0)
+    q = run_pipeline_stream(
+        spark, src, str(tmp_path / "out"), str(tmp_path / "ck"), with_concat=False
+    )
+    q.awaitTermination(120)
+    assert not q.isActive
+    assert drain_and_stop(q) is True
+
+
+def test_state_partitions_fresh_and_recorded(spark, sf_dir, tmp_path):
+    """A fresh checkpoint gets one state partition per task slot, whatever
+    the session's shuffle partitions; the session conf is left as it was;
+    a used checkpoint keeps the count its offset log recorded."""
+    from go_fluentd_spark.streaming.stream_pipeline import _state_partitions
+
+    slots = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(slots + 3))
+    try:
+        src = str(tmp_path / "src")
+        _write_batch(spark, sf_dir, src, 0)
+        q = run_pipeline_stream(spark, src, str(tmp_path / "out"), str(tmp_path / "ck"))
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(slots + 3)
+        assert drain_and_stop(q)
+        ops = [so for p in q.recentProgress for so in p["stateOperators"]]
+        assert ops and ops[0]["numShufflePartitions"] == slots
+        assert max(so["numRowsTotal"] for so in ops) <= slots
+
+        # a checkpoint recorded under 3 shuffle partitions keeps 3
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        ck = str(tmp_path / "ck3")
+        spark.readStream.schema("doc_id string").parquet(src).writeStream.format(
+            "noop"
+        ).option("checkpointLocation", ck).trigger(availableNow=True).start(
+        ).awaitTermination(120)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert _state_partitions(spark, ck) == 3
+    assert _state_partitions(spark, str(tmp_path / "none")) == slots
+

@@ -65,12 +65,10 @@ def run_stream_bench(spark, sf_dir: str, work_dir: str, reps: int = 2) -> dict:
     Two points on the batch-size curve are reported: micro-batch mode
     (``FILES_PER_TRIGGER`` files/trigger — the reference's batch/linger
     window analogue, per-batch latency a few seconds) and bulk mode (all
-    files in one trigger).  The gap between them is per-BATCH fixed cost —
-    dominated by per-GROUP state-store overhead in the stateful concator
-    ((tag, container) groups get only ~batch_rows/n_groups rows each, so
-    smaller batches pay the same per-group Arrow + state ser/de for fewer
-    rows; measured 2026-08: 28k rows/s at 4 batches vs 60k at 1 on the
-    same 600k rows)."""
+    files in one trigger).  The gap between them is per-BATCH fixed cost:
+    the stateful concator (one pandas call per state group, as many groups
+    as state partitions), the parse and the sink writes each cost about the
+    same per trigger whatever its size."""
     seq_rep = int(os.environ.get("SPARK_GRAFT_SEQ_REP", "4"))
     src = os.path.join(work_dir, "src")
     (
