@@ -1,21 +1,14 @@
-"""Hash/load-balance primitives.
-
-The reference LBs by ``xxhash(Message[lb_key]) % nfork`` for state affinity
-(``internal/tagfilters/base.go:78-92``, ``internal/recvs/fluentd.go:368-377``);
-Spark has native ``xxhash64`` so the same affinity is one shuffle expression.
-Also: a cross-engine-stable string hash (md5-prefix as int) used by the
+"""A cross-engine-stable string hash (md5-prefix as int) used by the
 dedup/minhash operators so the DuckDB oracle can reproduce signatures.
+
+The reference's ``xxhash(Message[lb_key]) % nfork`` state affinity
+(``internal/tagfilters/base.go:78-92``, ``internal/recvs/fluentd.go:368-377``)
+needs no helper: the concat window's (tag, container_id) shuffle gives it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
-
-
-def lb_partition(df: DataFrame, lb_key: str, n: int) -> DataFrame:
-    """Affinity repartition: all rows of one identifier land in one partition
-    (the precondition for stateful windowing, mirroring runLB)."""
-    return df.repartition(n, F.xxhash64(F.col(lb_key)))
+from pyspark.sql import Column, functions as F
 
 
 def stable_hash64(col: Column) -> Column:
@@ -23,8 +16,3 @@ def stable_hash64(col: Column) -> Column:
     ``cast(('0x' || substr(md5(x),1,15)) as bigint)`` — 15 hex chars keeps it
     positive and within int64."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
-def stable_hash64_sql(expr: str) -> str:
-    """DuckDB twin of :func:`stable_hash64`."""
-    return f"CAST(concat('0x', substr(md5({expr}), 1, 15)) AS BIGINT)"

@@ -4,8 +4,10 @@
 A row is delivered to EVERY sink whose tag-set contains its tag; rows with no
 sink are auto-committed away (producer.go:251-255).  Restated as one inner
 broadcast join against the (sink, tag) membership dim — duplication across
-sinks falls out of join multiplicity — or, for physical writes, N filtered
-writes from one cached frame (no join, each write's predicate pushed down).
+sinks falls out of join multiplicity.  ``write_sinks`` writes the sinks as N
+filtered writes from one cached frame (no join, each write's predicate
+pushed down); the manifested run (plans/manifest.py) writes the routed frame
+in one job partitioned by (sink, bucket) instead.
 """
 
 from __future__ import annotations

@@ -283,13 +283,6 @@ def _with(*ctes: str, final: str) -> str:
 _CHAIN = [_SEQ_CTES, _CONCAT_CTES, _ACCEPTOR_CTES]
 
 
-def q_sequences() -> str:
-    return _with(
-        _SEQ_CTES,
-        final="SELECT doc_id, array_to_string(tokens, ',') AS tokens_csv, n_tok, source FROM seq",
-    )
-
-
 def q_ingest_tag_counts() -> str:
     return _with(
         _SEQ_CTES,

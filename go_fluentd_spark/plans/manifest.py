@@ -9,6 +9,15 @@ The reference's guarantees restated for batch (SURVEY.md §2.3):
   partition directory, and a bucket is COMMITTED only after every sink's
   write succeeded (the reference commits a msg only when *all* senders for
   its tag succeeded, ``producer.go:161-220``).
+- *fan-out* -> the producer sends each message to every sender whose tag
+  set holds its tag (``producer.go:223-329``).  Here every pending sink is
+  written by ONE job per attempt, straight from the routed plan: a
+  dynamic-overwrite write partitioned by ``(sink, bucket)`` into
+  ``out_dir``, so each sink's table is ``out_dir/sink=<name>/`` with one
+  ``bucket=<b>`` directory per bucket.  One deviation: a real error from
+  that write fails the attempt for every sink in it, where the reference's
+  senders fail one by one.  Every sink here is a directory on the same
+  filesystem, so what fails one sink's files fails the others' too.
 - *replay of uncommitted* -> the manifest is read first and committed
   buckets are dropped before any processing, as ``ProcessLegacyMsg``
   (``journal.go:210-307``) drops ids in the committed-id window
@@ -22,8 +31,13 @@ The reference's guarantees restated for batch (SURVEY.md §2.3):
   per-tag counters the ``/monitor`` endpoint exposes
   (``internal/monitor/monitor.go:19-42``).  Every bucket of the input
   commits, one row per sink; a bucket no row hashed to is trivially
-  delivered and commits with ``rows=0``.  The per-sink counts come from the
-  job that materializes the cached frame, not from a pass per sink.
+  delivered and commits with ``rows=0``.  The per-(sink, bucket) counts
+  are read back from the written partitions; that read selects partition
+  columns only, so it reads parquet footers, not rows.
+
+The manifest listing and the discard cleanup go through the Hadoop
+FileSystem API, so an ``out_dir`` URI (``file://``, ``hdfs://``) resumes and
+discards like a local path.
 
 The input signature is the input path plus ``n_buckets``: replacing the
 files under the same path is not detected, and a rerun on changed input
@@ -37,7 +51,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 
@@ -66,10 +79,16 @@ class ManifestedRun:
         self.n_buckets = n_buckets
         self.manifest_dir = os.path.join(out_dir, "_manifest")
 
+    def _fs(self, path: str):
+        """(Hadoop FileSystem, Path) of ``path``, local or URI."""
+        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(path)
+        return jpath.getFileSystem(self.spark._jsc.hadoopConfiguration()), jpath
+
     # -- manifest table ----------------------------------------------------
     def _has_manifest(self) -> bool:
-        return os.path.isdir(self.manifest_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(self.manifest_dir)
+        fs, path = self._fs(self.manifest_dir)
+        return fs.exists(path) and any(
+            f.getPath().getName().endswith(".parquet") for f in fs.listStatus(path)
         )
 
     def manifest(self) -> DataFrame:
@@ -86,7 +105,8 @@ class ManifestedRun:
         if not self._has_manifest():
             return []  # fresh output dir: no Spark job
         m = (
-            self.manifest()
+            self.spark.read.schema(MANIFEST_SCHEMA)
+            .parquet(self.manifest_dir)
             .filter(
                 (F.col("input_sig") == input_sig)
                 & F.col("state").isin("committed", "discarded")
@@ -110,19 +130,25 @@ class ManifestedRun:
     ) -> dict:
         """Process all not-yet-committed buckets; returns stats.  When every
         bucket is already resolved it returns after the manifest read,
-        without planning the pipeline.  ``fail_after_sinks`` injects a
-        crash after N sink writes (tests).  ``with_monitor`` also writes
-        the per-stage totals table next to the manifest
-        (``_monitor/stage_counts``, monitor.go:19-42 analogue) — opt-in
-        because it re-derives every pipeline stage for its counts.
+        without planning the pipeline.  Otherwise each attempt writes every
+        pending sink in one job, then one footer read counts the delivered
+        rows per (sink, bucket) for the commit.  ``fail_after_sinks``
+        injects a crash once N sinks are delivered, before the commit
+        (tests).  ``with_monitor`` also writes the per-stage totals table
+        next to the manifest (``_monitor/stage_counts``, monitor.go:19-42
+        analogue) — opt-in because it re-derives every pipeline stage for
+        its counts.
 
-        Per-sender drop-vs-retry (producer.go:309-325): each sink write is
-        retried up to ``max_retries`` times; on exhaustion a sink with
-        ``discard_when_blocked=True`` records state='discarded' audit rows
-        (committed-with-loss — the run completes, the bucket resolves) while
-        a non-discarding sink aborts the run with every bucket uncommitted,
-        so resume re-delivers.  ``sink_faults`` (tests) maps sink name ->
-        number of initial write attempts that raise."""
+        Per-sender drop-vs-retry (producer.go:309-325): each attempt adds
+        one to the attempt count of every pending sink; sinks whose
+        ``sink_faults`` fire sit the attempt out, the rest are written
+        together, and a real error from that write fails the attempt for
+        all of them.  A sink that fails ``max_retries`` attempts resolves by
+        its policy: with ``discard_when_blocked=True`` it records
+        state='discarded' audit rows (committed-with-loss — the run
+        completes, the bucket resolves), otherwise the run aborts with every
+        bucket uncommitted, so resume re-delivers.  ``sink_faults`` (tests)
+        maps sink name -> number of initial write attempts that raise."""
         run_id = run_id or uuid.uuid4().hex[:12]
         input_sig = f"{os.path.abspath(sf_dir)}#b{self.n_buckets}"
         sinks = [s.name for s in cfg.sinks]
@@ -138,88 +164,91 @@ class ManifestedRun:
         )
         if done:
             df = df.filter(~F.col("bucket").isin(sorted(done)))  # replay only uncommitted
-        df = df.persist()
-        try:
-            # the job that materializes the cache also counts every delivery
-            counts = {
-                (sink, b): n for sink, b, n in df.groupBy("sink", "bucket").count().collect()
-            }
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            written = 0
-            discarded_sinks: list[str] = []
-            commit_rows: list[tuple] = []
-            by_name = {s.name: s for s in cfg.sinks}
-            for i, sink in enumerate(sinks):
-                part = df.filter(F.col("sink") == sink).drop("sink")
-                path = os.path.join(self.out_dir, f"sink={sink}")
-                attempts, err = 0, None
-                while attempts < max_retries:
-                    attempts += 1
-                    try:
-                        if sink_faults and sink_faults.get(sink, 0) >= attempts:
-                            raise IOError(f"injected write failure for {sink}")
-                        part.write.mode("overwrite").partitionBy("bucket").parquet(path)
-                        err = None
-                        break
-                    except Exception as e:  # noqa: BLE001 — retry-or-policy below
-                        err = e
-                if err is not None:
-                    if by_name[sink].discard_when_blocked:
-                        # committed-with-loss: the bucket resolves, the loss
-                        # is an explicit audit row (rows=0 delivered).  A
-                        # retry that died MID-write may have left partial
-                        # parquet under the bucket partitions — readers must
-                        # never see data the audit says was dropped, so
-                        # best-effort delete those partitions first
-                        for b in todo:
-                            shutil.rmtree(
-                                os.path.join(path, f"bucket={b}"),
-                                ignore_errors=True,
-                            )
-                        discarded_sinks.append(sink)
-                        for b in todo:
-                            commit_rows.append(
-                                (run_id, input_sig, b, sink, 0, attempts,
-                                 "discarded", time.time())
-                            )
-                        continue
-                    # non-lossy sink: abort with NOTHING committed — resume
-                    # recomputes every pending bucket (at-least-once)
-                    raise RuntimeError(
-                        f"sink {sink} failed after {attempts} attempts "
-                        "(discard_when_blocked=False -> bucket stays uncommitted)"
-                    ) from err
+        by_name = {s.name: s for s in cfg.sinks}
+        attempts = dict.fromkeys(sinks, 0)
+        delivered: list[str] = []
+        discarded_sinks: list[str] = []
+        pending = sinks
+        while pending:
+            errs: dict[str, Exception] = {}
+            for sink in pending:
+                attempts[sink] += 1
+                if sink_faults and sink_faults.get(sink, 0) >= attempts[sink]:
+                    errs[sink] = IOError(f"injected write failure for {sink}")
+            ready = [s for s in pending if s not in errs]
+            if ready:
+                try:
+                    # dynamic on THIS write: a static overwrite of out_dir
+                    # would delete _manifest/ and every other partition
+                    df.filter(F.col("sink").isin(ready)).write.mode("overwrite").option(
+                        "partitionOverwriteMode", "dynamic"
+                    ).partitionBy("sink", "bucket").parquet(self.out_dir)
+                    delivered += ready
+                except Exception as e:  # noqa: BLE001 — retry-or-policy below
+                    errs.update(dict.fromkeys(ready, e))
+            if fail_after_sinks is not None and len(delivered) >= fail_after_sinks:
+                raise RuntimeError("injected failure before manifest commit")
+            exhausted = [s for s in pending if s in errs and attempts[s] >= max_retries]
+            pending = [s for s in pending if s in errs and attempts[s] < max_retries]
+            blocked = [s for s in exhausted if not by_name[s].discard_when_blocked]
+            if blocked:
+                # non-lossy sink: abort with NOTHING committed — resume
+                # recomputes every pending bucket (at-least-once)
+                raise RuntimeError(
+                    f"sink {blocked[0]} failed after {attempts[blocked[0]]} attempts "
+                    "(discard_when_blocked=False -> bucket stays uncommitted)"
+                ) from errs[blocked[0]]
+            for sink in exhausted:
+                # committed-with-loss: the bucket resolves, the loss is an
+                # explicit audit row (rows=0 delivered).  A write that died
+                # MID-job may have left partial parquet under the bucket
+                # partitions — readers must never see data the audit says
+                # was dropped, so delete those partitions first
                 for b in todo:
-                    n = counts.get((sink, b), 0)
-                    commit_rows.append(
-                        (run_id, input_sig, b, sink, n, attempts, "committed", time.time())
-                    )
-                    written += n
-                if fail_after_sinks is not None and i + 1 >= fail_after_sinks:
-                    raise RuntimeError("injected failure before manifest commit")
+                    fs, part = self._fs(os.path.join(self.out_dir, f"sink={sink}", f"bucket={b}"))
+                    fs.delete(part, True)
+                discarded_sinks.append(sink)
 
-            # all sinks succeeded for these buckets -> commit (the batch
-            # analogue of CommitChan -> journal committed-id write)
-            self.spark.createDataFrame(commit_rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(self.manifest_dir)
-            if with_monitor:
-                from go_fluentd_spark.operators.monitor import stage_counts
-
-                stage_counts(self.spark, sf_dir, cfg).withColumn(
-                    "run_id", F.lit(run_id)
-                ).coalesce(1).write.mode("append").parquet(
-                    os.path.join(self.out_dir, "_monitor", "stage_counts")
-                )
-            return {
-                "run_id": run_id,
-                "buckets": len(todo),
-                "rows": written,
-                "skipped": len(done),
-                "discarded_sinks": discarded_sinks,
+        counts: dict[tuple[str, int], int] = {}
+        if delivered:
+            # partition columns only: Spark answers from the parquet footers
+            counts = {
+                (sink, b): n
+                for sink, b, n in self.spark.read.parquet(self.out_dir)
+                .filter(F.col("sink").isin(delivered) & F.col("bucket").isin(todo))
+                .groupBy("sink", "bucket")
+                .count()
+                .collect()
             }
-        finally:
-            df.unpersist()
+        # all sinks resolved for these buckets -> commit (the batch
+        # analogue of CommitChan -> journal committed-id write)
+        now = time.time()
+        commit_rows = [
+            (run_id, input_sig, b, sink, counts.get((sink, b), 0), attempts[sink],
+             "committed", now)
+            for sink in delivered for b in todo
+        ] + [
+            (run_id, input_sig, b, sink, 0, attempts[sink], "discarded", now)
+            for sink in discarded_sinks for b in todo
+        ]
+        self.spark.createDataFrame(commit_rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(self.manifest_dir)
+        if with_monitor:
+            from go_fluentd_spark.operators.monitor import stage_counts
+
+            stage_counts(self.spark, sf_dir, cfg).withColumn(
+                "run_id", F.lit(run_id)
+            ).coalesce(1).write.mode("append").parquet(
+                os.path.join(self.out_dir, "_monitor", "stage_counts")
+            )
+        return {
+            "run_id": run_id,
+            "buckets": len(todo),
+            "rows": sum(counts.values()),
+            "skipped": len(done),
+            "discarded_sinks": discarded_sinks,
+        }
 
     # -- inspection --------------------------------------------------------
     def sink_table(self, sink: str) -> DataFrame:

@@ -1,14 +1,30 @@
 """Resume semantics (FIXTURES.md F6): kill after partial commit, rerun,
 assert no dupes / no loss vs a clean run."""
 
-import pytest
+import dataclasses
+import os
 
-from go_fluentd_spark.plans.manifest import ManifestedRun
+import pytest
+from pyspark.sql import functions as F
+
+from go_fluentd_spark.config import DEFAULT_CONFIG
+from go_fluentd_spark.plans import pipeline as P
+from go_fluentd_spark.plans.manifest import MANIFEST_SCHEMA, ManifestedRun
+
+SINKS = [s.name for s in DEFAULT_CONFIG.sinks]
 
 
 def sink_rows(m, sink):
     df = m.sink_table(sink)
     return sorted(r.doc_id for r in df.select("doc_id").collect())
+
+
+@pytest.fixture(scope="module")
+def reference(spark, sf_dir, tmp_path_factory):
+    """One clean 8-bucket run with the default config."""
+    m = ManifestedRun(spark, str(tmp_path_factory.mktemp("ref") / "out"), n_buckets=8)
+    m.run(sf_dir)
+    return m
 
 
 def test_clean_run_then_noop_rerun(spark, sf_dir, tmp_path):
@@ -155,10 +171,10 @@ def test_empty_buckets_commit_and_rerun_is_noop(spark, sf_dir, tmp_path):
 
 
 def test_job_counts_fresh_run_and_noop_rerun(spark, sf_dir, tmp_path):
-    """A resolved rerun is the manifest read alone, and a fresh run counts
-    its deliveries in the job that materializes the cached frame: no
-    distinct-bucket pass, no count pass per sink, no job for the manifest
-    of a fresh output dir."""
+    """A resolved rerun is the manifest read alone, and a fresh run is one
+    sink write plus a footer read of the written partitions for its
+    counts: no cached frame, no count pass per sink, no job for the
+    manifest of a fresh output dir."""
     sc = spark.sparkContext
     m = ManifestedRun(spark, str(tmp_path / "out"), n_buckets=8)
 
@@ -173,4 +189,102 @@ def test_job_counts_fresh_run_and_noop_rerun(spark, sf_dir, tmp_path):
     fresh = jobs(f"fresh-{tmp_path.name}", lambda: m.run(sf_dir))
     rerun = jobs(f"rerun-{tmp_path.name}", lambda: m.run(sf_dir))
     assert rerun <= 3
-    assert fresh <= 13
+    assert fresh <= 11
+
+
+def test_fresh_run_is_one_sink_write_and_persists_nothing(spark, sf_dir, tmp_path, monkeypatch):
+    """The fan-out is one write of every sink straight from the routed plan:
+    one parquet write into out_dir, one manifest append, no cached frame."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    writes, cached = [], []
+    parquet = DataFrameWriter.parquet
+    monkeypatch.setattr(
+        DataFrameWriter, "parquet",
+        lambda self, path, *a, **k: (writes.append(path), parquet(self, path, *a, **k))[1],
+    )
+    for name in ("persist", "cache"):
+        monkeypatch.setattr(DataFrame, name, lambda self, *a, **k: cached.append(self))
+    out = str(tmp_path / "out")
+    m = ManifestedRun(spark, out, n_buckets=8)
+    m.run(sf_dir)
+    assert writes == [out, m.manifest_dir] and cached == []
+
+
+def test_run_keeps_session_overwrite_mode_and_earlier_manifest_rows(spark, sf_dir, tmp_path):
+    """The sink write overwrites out_dir itself, so it is dynamic on that
+    write alone: the caller's session keeps its overwrite mode, and a
+    partial resume leaves the earlier manifest rows in place (a static
+    overwrite of out_dir would delete _manifest/)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    m = ManifestedRun(spark, str(tmp_path / "out"), n_buckets=8)
+    sig = f"{os.path.abspath(sf_dir)}#b8"
+    earlier = [("earlier", sig, b, s, 0, 1, "committed", 0.0) for b in range(4) for s in SINKS]
+    spark.createDataFrame(earlier, MANIFEST_SCHEMA).write.parquet(m.manifest_dir)
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        s = m.run(sf_dir)
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, before)
+    assert s["skipped"] == 4 and s["buckets"] == 4
+    rows = {(r.run_id, r.bucket, r.sink) for r in m.manifest().collect()}
+    assert rows == {("earlier", b, k) for b in range(4) for k in SINKS} | {
+        (s["run_id"], b, k) for b in range(4, 8) for k in SINKS
+    }
+
+
+def test_file_uri_out_dir_resumes_and_discards(spark, sf_dir, tmp_path):
+    """The manifest listing and the discard cleanup go through the Hadoop
+    FileSystem API, so a file:// out_dir behaves like a local path: the
+    discard deletes a planted partial partition and the rerun finds the
+    manifest and skips every bucket."""
+    cfg = dataclasses.replace(DEFAULT_CONFIG)
+    cfg.sinks = [
+        dataclasses.replace(s, discard_when_blocked=(s.name == "fluentd_backup"))
+        for s in DEFAULT_CONFIG.sinks
+    ]
+    partial = tmp_path / "out" / "sink=fluentd_backup" / "bucket=0"
+    partial.mkdir(parents=True)
+    (partial / "part-00000.parquet").write_bytes(b"garbage")
+    m = ManifestedRun(spark, (tmp_path / "out").as_uri(), n_buckets=8)
+    s = m.run(sf_dir, cfg=cfg, sink_faults={"fluentd_backup": 99})
+    assert s["discarded_sinks"] == ["fluentd_backup"]
+    assert not partial.exists(), "partial bucket data survived the discard"
+    s2 = m.run(sf_dir, cfg=cfg)
+    assert s2["buckets"] == 0 and s2["skipped"] == 8
+
+
+def test_real_write_failure_aborts_then_resume_redelivers(spark, sf_dir, tmp_path, reference):
+    """A write that really fails (a regular file where a sink's directory
+    must go) fails the attempt for every sink in it: nothing commits, and
+    once the obstacle is gone the resume delivers exactly the clean run's
+    rows to every sink."""
+    out = tmp_path / "out"
+    out.mkdir()
+    blocker = out / "sink=kafka_cp"
+    blocker.write_text("not a directory")
+    m = ManifestedRun(spark, str(out), n_buckets=8)
+    with pytest.raises(RuntimeError, match="stays uncommitted"):
+        m.run(sf_dir, max_retries=1)
+    assert m.committed_buckets(f"{sf_dir}#b8", 3) == []
+    blocker.unlink()
+    assert m.run(sf_dir)["buckets"] == 8
+    for sink in SINKS:
+        assert sink_rows(m, sink) == sink_rows(reference, sink)
+
+
+def test_manifest_rows_match_routed_sink_counts(spark, sf_dir, reference):
+    """The per-sink rows read back from the written partitions equal the
+    per-tag-then-fan-out counts of ``P.sink_counts``."""
+    got = {
+        r.sink: r.n
+        for r in reference.manifest().groupBy("sink").agg(F.sum("rows").alias("n")).collect()
+    }
+    want = {
+        r.sink: r.n
+        for r in P.sink_counts(spark, sf_dir).groupBy("sink").agg(F.sum("n").alias("n")).collect()
+    }
+    assert got == want and set(got) == set(SINKS)
