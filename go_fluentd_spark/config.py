@@ -8,6 +8,7 @@ tenant config exactly like go-fluentd's plugin sections.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 
 # ---------------------------------------------------------------------------
@@ -94,37 +95,44 @@ CONCAT_MAX_MERGED = 100_000
 # ---------------------------------------------------------------------------
 # Parser (reference internal/tagfilters/parser_f.go, settings.yml:763-809)
 # ---------------------------------------------------------------------------
-# Patterns are index-group (not named) so one pattern string drives BOTH
-# Spark's regexp_extract (Java regex) and the DuckDB oracle (RE2); the
-# constructs used (lazy quantifiers, char classes, optional groups) behave
-# identically in both engines.  Group semantics mirror RegexNamedSubMatch
-# (library/utils.go:60-73): trim each group, empty group => absent (NULL).
+# Each pattern names its groups after the unified fields, so one string drives
+# the Arrow backend and the DuckDB oracle (both RE2, as go-fluentd's Go regexp
+# is) and, through ``parser.java_pattern``, Spark's regexp_extract (Java regex
+# with RE2's ``.`` and ``$``, COVERAGE.md P1); every capture group is named.
+# Group semantics mirror RegexNamedSubMatch (library/utils.go:60-73): trim
+# each group, empty group => absent (NULL).
 
-# connector/spring pattern (settings.yml:763) — groups:
-# 1 time, 2 app, 3 level, 4 thread, 5 class, 6 line, 7 args(json), 8 message
+#: what ``bytes.TrimSpace`` strips from each group (Go's unicode.IsSpace set),
+#: spelled out so Spark ``trim``, Arrow ``utf8_trim`` and DuckDB ``trim`` strip
+#: the same characters (their defaults differ: ' ' only, all whitespace, and
+#: Unicode Zs)
+TRIM_CHARS = (
+    "\t\n\v\f\r \x85\xa0\u1680"
+    + "".join(chr(c) for c in range(0x2000, 0x200B))
+    + "\u2028\u2029\u202f\u205f\u3000"
+)
+
+# connector/spring pattern (settings.yml:763)
 CONNECTOR_PATTERN = (
-    r"^(.{23}) *\| *([^|]+?) *\| *([^|]+?) *\| *([^|]+?) *\| *"
-    r"([^|:]+?) *\| *(\d+)(?: *[|:] *(\{.*\}))?(?: *[|:] *(.*))?$"
+    r"^(?P<time>.{23}) *\| *(?P<app>[^|]+?) *\| *(?P<level>[^|]+?) *\| *(?P<thread>[^|]+?) *\| *"
+    r"(?P<class>[^|:]+?) *\| *(?P<line>\d+)(?: *[|:] *(?P<args>\{.*\}))?(?: *[|:] *(?P<message>.*))?$"
 )
-CONNECTOR_GROUPS = ["time", "app", "level", "thread", "class", "line", "args", "message"]
 
-# geely pattern (library/utils_test.go:56-73 golden) — groups:
-# 1 time, 2 project, 3 level, 4 thread, 5 class, 6 line, 7 message
+# geely pattern (library/utils_test.go:56-73 golden)
 GEELY_PATTERN = (
-    r"^(.{23}) *\| *([^|]+?) *\| *([^|]+?) *\| *([^|]+?) *\| *"
-    r"([^:]+):(\d+) *- *(.*)$"
+    r"^(?P<time>.{23}) *\| *(?P<project>[^|]+?) *\| *(?P<level>[^|]+?) *\| *(?P<thread>[^|]+?) *\| *"
+    r"(?P<class>[^:]+):(?P<line>\d+) *- *(?P<message>.*)$"
 )
-GEELY_GROUPS = ["time", "project", "level", "thread", "class", "line", "message"]
 
-# ramjet pattern (settings.yml head + docstring example) — groups:
-# 1 time, 2 level, 3 class/path, 4 line, 5 message.  The timestamp is an
-# explicit micros ISO group (26 chars, e.g. '2018-08-03T05:42:42.714151' —
-# settings.yml:181): a width-based `.{27}` silently off-by-one'd past the
-# 'Z' and discarded every ramjet row as parse_no_match (round-1 ADVICE).
+# ramjet pattern (settings.yml head + docstring example); class holds the
+# path.  The timestamp is an explicit micros ISO group (26 chars, e.g.
+# '2018-08-03T05:42:42.714151' — settings.yml:181): a width-based `.{27}`
+# silently off-by-one'd past the 'Z' and discarded every ramjet row as
+# parse_no_match (round-1 ADVICE).
 RAMJET_PATTERN = (
-    r"^\[(\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{6})Z *- *(\w+) *- *([^:\]]+):(\d+)\] *(.*)$"
+    r"^\[(?P<time>\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{6})Z *- *(?P<level>\w+) *- *"
+    r"(?P<class>[^:\]]+):(?P<line>\d+)\] *(?P<message>.*)$"
 )
-RAMJET_GROUPS = ["time", "level", "class", "line", "message"]
 
 
 # flattened args_map keys promoted to first-class `args__<key>` columns
@@ -138,8 +146,7 @@ class ParserConfig:
     """One per-tag parser, mirroring a ``tag_filters.plugins`` entry."""
 
     tag_bases: tuple[str, ...]
-    pattern: str
-    groups: tuple[str, ...]
+    pattern: str  # every capture group named after its unified field
     must_include: str | None = "app"
     parse_json_key: str | None = None  # group whose value is JSON to explode
     time_group: str | None = "time"
@@ -149,37 +156,42 @@ class ParserConfig:
     new_time_key: str = "@timestamp"
     is_remove_orig_log: bool = True
 
+    def __post_init__(self):
+        rx = re.compile(self.pattern)
+        if rx.groups != len(rx.groupindex):
+            raise ValueError(f"{self.tag_bases}: every capture group must be named")
+
+    @property
+    def groups(self) -> dict[str, int]:
+        """field -> capture group index"""
+        return dict(re.compile(self.pattern).groupindex)
+
 
 PARSERS: list[ParserConfig] = [
     ParserConfig(
         tag_bases=("connector", "gateway"),
         pattern=CONNECTOR_PATTERN,
-        groups=tuple(CONNECTOR_GROUPS),
         parse_json_key="args",
     ),
     ParserConfig(
         tag_bases=("app.spring", "tsp", "ai", "base", "bot", "cp", "qingai", "ptdeployer"),
         pattern=CONNECTOR_PATTERN,
-        groups=tuple(CONNECTOR_GROUPS),
     ),
     ParserConfig(
         tag_bases=("geely",),
         pattern=GEELY_PATTERN,
-        groups=tuple(GEELY_GROUPS),
         must_include="project",
     ),
     ParserConfig(
         tag_bases=("ramjet",),
         pattern=RAMJET_PATTERN,
-        groups=tuple(RAMJET_GROUPS),
         must_include="level",
         time_group=None,  # ramjet time is already UTC-ISO in the line
     ),
     ParserConfig(
         # spark lines carry no structured fields; parser passes the line through
         tag_bases=("spark",),
-        pattern=r"^(\d{4}/\d{2}/\d{2} \d{2}:\d{2}:\d{2}\.\d{3}) +(.*)$",
-        groups=("time", "message"),
+        pattern=r"^(?P<time>\d{4}/\d{2}/\d{2} \d{2}:\d{2}:\d{2}\.\d{3}) +(?P<message>.*)$",
         must_include="message",
         time_group=None,
         is_remove_orig_log=False,
@@ -342,10 +354,10 @@ class PipelineConfig:
     concat_max_len: int = CONCAT_MAX_LEN
     concat_max_merged: int = CONCAT_MAX_MERGED
     run_key: str = "local"  # msgid prefix (DistributeKey, controllor.go:477-480)
-    # extraction backend: "native" (JVM regexp_extract) or "pandas" (Arrow,
-    # one compiled-regex pass per family) — see operators/parser.py; both are
-    # semantics-identical, bench.py times both
-    parser_impl: str = "pandas"
+    # extraction backend: "arrow" (one mapInArrow, one RE2 pass per family)
+    # or "native" (JVM regexp_extract) — see operators/parser.py; bench.py
+    # times both
+    parser_impl: str = "arrow"
 
 
 DEFAULT_CONFIG = PipelineConfig()

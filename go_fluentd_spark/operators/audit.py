@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from go_fluentd_spark.config import ParserConfig, PipelineConfig
 from go_fluentd_spark.operators.acceptor import spring_retag
-from go_fluentd_spark.operators.parser import _family_case, _group_col
+from go_fluentd_spark.operators.parser import _family_case, _group_col, java_pattern
 
 
 def discard_reasons(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -38,7 +38,7 @@ def discard_reasons(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
     unknown = (F.col("tag") == "") | ~F.col("tag").isin(cfg.accept_tags)
     matched = F.coalesce(
-        _family_case(parsers, lambda p: F.col("source").rlike(p.pattern)),
+        _family_case(parsers, lambda p: F.col("source").rlike(java_pattern(p.pattern))),
         F.lit(False),
     )
 

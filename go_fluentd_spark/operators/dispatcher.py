@@ -15,12 +15,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from go_fluentd_spark.config import MUST_INCLUDE_FIELDS, PipelineConfig, sink_tag_rows
+from go_fluentd_spark.session import local_table
 
 
 def sink_membership(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    return spark.createDataFrame(
-        sink_tag_rows(cfg.sinks, cfg.envs), "sink string, tag string"
-    )
+    return local_table(spark, sink_tag_rows(cfg.sinks, cfg.envs), "sink string, tag string")
 
 
 def route(spark: SparkSession, df: DataFrame, cfg: PipelineConfig) -> DataFrame:

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from go_fluentd_spark.config import PipelineConfig, es_index_rows
+from go_fluentd_spark.session import local_table
 
 
 def add_fields(spark: SparkSession, df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -24,7 +25,7 @@ def add_fields(spark: SparkSession, df: DataFrame, cfg: PipelineConfig) -> DataF
         for base, fields in cfg.add_fields.items()
         if "datasource" in fields
     ]
-    dim = spark.createDataFrame(rows, "tag_base string, datasource string")
+    dim = local_table(spark, rows, "tag_base string, datasource string")
     return df.join(F.broadcast(dim), "tag_base", "left")
 
 
@@ -32,8 +33,8 @@ def es_index(spark: SparkSession, df: DataFrame, cfg: PipelineConfig) -> DataFra
     """TagIndexMap (``elasticsearch.go:111-132``, settings.yml:503-526):
     tag -> ES index, env-substituted at plan build; unmapped tags keep NULL
     (the ES sender would skip them)."""
-    dim = spark.createDataFrame(
-        es_index_rows(cfg.es_index_map, cfg.envs), "tag string, es_index string"
+    dim = local_table(
+        spark, es_index_rows(cfg.es_index_map, cfg.envs), "tag string, es_index string"
     )
     return df.join(F.broadcast(dim), "tag", "left")
 

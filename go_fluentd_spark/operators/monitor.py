@@ -21,6 +21,7 @@ from go_fluentd_spark.operators.audit import discard_reasons
 from go_fluentd_spark.operators.dispatcher import route
 from go_fluentd_spark.operators.parser import parse
 from go_fluentd_spark.plans import pipeline as P
+from go_fluentd_spark.session import local_table
 
 #: stage name -> frame builder, in pipeline order (monitor.go tracks the same
 #: boundaries: recv -> concator -> acceptor -> tagfilter -> producer)
@@ -46,7 +47,9 @@ def stage_counts(
     ingested row lands in exactly one session, the conservation identity the
     oracle re-checks independently), the acceptor/discard stages are narrow
     predicates over the cache, and the parse frame is cached in turn so
-    ``parsed`` and ``routed`` (its broadcast fan-out) share one parse pass.
+    ``parsed`` and ``routed`` (its broadcast fan-out) share one parse pass;
+    it parses only ``P.COUNT_COLUMNS``, so no payload column rides through
+    the map-in parse or its cache.
     Counters are collected eagerly (monitor counters are driver-side state in
     the reference too, monitor.go:19-42) and returned as a literal frame —
     the oracle mirror recomputes every stage independently, so the identity
@@ -60,7 +63,7 @@ def stage_counts(
         )
         accepted = acceptor_chain(conc, cfg)
         accepted_n = accepted.count()
-        par = parse(accepted, cfg).persist()
+        par = parse(accepted.select(*P.COUNT_COLUMNS), cfg).persist()
         try:
             parsed_n = par.count()
             routed_n = route(spark, P.enrich(spark, par, cfg), cfg).count()
@@ -77,7 +80,7 @@ def stage_counts(
         ("routed", routed_n),
         ("discarded", discarded_n),
     ]
-    return spark.createDataFrame(rows, "stage string, n bigint")
+    return local_table(spark, rows, "stage string, n bigint")
 
 
 def stage_metrics(

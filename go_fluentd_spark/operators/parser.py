@@ -6,12 +6,13 @@ empty groups are absent keys (``library/utils.go:60-73``); a non-matching row
 is DISCARDED (``parser_f.go:57-63``); unparseable time is DISCARDED
 (``parser_f.go:121-168``).
 
-Spark restatement: ONE projection pass.  Two interchangeable extraction
+Spark restatement: ONE extraction pass.  Two interchangeable extraction
 backends, selected by ``PipelineConfig.parser_impl`` and benchmarked against
-each other in bench.py: ``native`` (codegen'd regexp_extract when-chains —
-the regex runs once per group) and ``pandas`` (Arrow batch, ONE compiled
-regex pass per family via ``pd.Series.str.extract``).  The shared post
-stages (must_include, JSON explode, time normalize) are pure Column exprs.
+each other in bench.py: ``arrow`` (one ``mapInArrow`` over the accepted
+frame, one RE2 ``extract_regex`` pass per family — the reference's own regex
+dialect) and ``native`` (codegen'd regexp_extract when-chains on Java regex —
+the regex runs once per group).  The shared post stages (must_include, JSON
+explode, time normalize) are pure Column exprs.
 
 Group -> unified column mapping (NULL where a family lacks the field):
 time, app, level, thread, class, line, args, message.
@@ -19,10 +20,9 @@ time, app, level, thread, class, line, args, message.
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf type-hint resolution needs it
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from go_fluentd_spark.config import ParserConfig, PipelineConfig
+from go_fluentd_spark.config import TRIM_CHARS, ParserConfig, PipelineConfig
 
 #: unified output fields ("project" is geely's app-like key, kept under the
 #: reference's own name — library/utils_test.go:56-73)
@@ -39,87 +39,94 @@ def _family_case(parsers: list[ParserConfig], build) -> Column | None:
     return chain
 
 
+def java_pattern(pattern: str) -> str:
+    """``pattern`` for Java's regex with RE2's line semantics: ``(?<name>``
+    groups, UNIX_LINES so ``.`` stops only at "\\n" (Java's also stops at
+    "\\r", U+0085, U+2028 and U+2029), and a trailing ``$`` as ``\\z`` (Java's
+    ``$`` also matches before a final line terminator)."""
+    body = pattern.replace("(?P<", "(?<")
+    return "(?d)" + (body[:-1] + r"\z" if body.endswith("$") else body)
+
+
 def _group_col(p: ParserConfig, field: str) -> Column:
     """Extract one unified field for one parser; trim + empty=>NULL
     (RegexNamedSubMatch semantics, library/utils.go:60-73)."""
     if field not in p.groups:
         return F.lit(None).cast("string")
-    idx = p.groups.index(field) + 1
-    return F.nullif(F.trim(F.regexp_extract(F.col("source"), p.pattern, idx)), F.lit(""))
+    val = F.regexp_extract(F.col("source"), java_pattern(p.pattern), p.groups[field])
+    return F.nullif(F.trim(val, F.lit(TRIM_CHARS)), F.lit(""))
 
 
 def extract_native(df: DataFrame, parsers: list[ParserConfig]) -> DataFrame:
     """JVM extraction: codegen'd regexp_extract per group (the regex runs
     once per group — N+1 runs/row)."""
-    matched = _family_case(parsers, lambda p: F.col("source").rlike(p.pattern))
+    matched = _family_case(parsers, lambda p: F.col("source").rlike(java_pattern(p.pattern)))
     df = df.filter(F.coalesce(matched, F.lit(False)))  # no parser => discard
     cols = {f: _family_case(parsers, lambda p, f=f: _group_col(p, f)) for f in FIELDS}
     return df.withColumns(cols)
 
 
-def extract_pandas(df: DataFrame, parsers: list[ParserConfig]) -> DataFrame:
-    """Arrow extraction: ONE compiled-regex pass per family via
-    ``pd.Series.str.extract`` (regex compiled once per executor, never per
-    row — SURVEY.md §2.6's preferred multi-group path).  Semantics identical
-    to :func:`extract_native`; pick by measurement (bench.py times both).
-    """
-    import re
+def extract_arrow(df: DataFrame, parsers: list[ParserConfig]) -> DataFrame:
+    """RE2 extraction in ONE ``mapInArrow``: per record batch, one
+    ``extract_regex`` pass per family over that family's rows (first family
+    whose tag_bases hold the row's tag_base, as the when-chains pick), then
+    the unmatched rows are dropped and the unified fields appended.  Every
+    input column passes through as the Arrow array it arrived as (no pandas
+    conversion).  Semantics identical to :func:`extract_native`.
 
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [T.StructField(f, T.StringType()) for f in FIELDS]
-        + [T.StructField("_m", T.BooleanType())]
+    A map-in node is a plan barrier, so each row crosses into Python once.
+    The scalar pandas UDF it replaced returned a struct that Catalyst
+    re-evaluated in each downstream gate (2-4 ArrowEvalPython nodes); marking
+    it nondeterministic (4.6x slower end to end), a nondeterministic barrier
+    column and dropping the match filter all failed to stop that.  The
+    barrier also stops column pruning: every input column crosses, so a
+    consumer that reads few of them selects those first
+    (``pipeline.COUNT_COLUMNS``)."""
+    df = df.drop(*FIELDS)
+    families = [(list(p.tag_bases), p.pattern, list(p.groups)) for p in parsers]
+    schema = T.StructType(
+        df.schema.fields + [T.StructField(f, T.StringType()) for f in FIELDS]
     )
-    compiled = [(list(p.tag_bases), p.pattern, list(p.groups)) for p in parsers]
 
-    @F.pandas_udf(out_schema)
-    def extract(tag_base: pd.Series, source: pd.Series) -> pd.DataFrame:
-        out = pd.DataFrame(
-            {f: pd.Series(None, index=source.index, dtype=object) for f in FIELDS}
-        )
-        out["_m"] = False
-        for bases, pat, groups, in compiled:
-            mask = tag_base.isin(bases)
-            if not mask.any():
-                continue
-            rx = re.compile(pat)
-            ext = source[mask].str.extract(rx)
-            ext.columns = groups[: ext.shape[1]]
-            hit = ext.notna().any(axis=1)
-            for g in groups:
-                vals = ext[g].str.strip()
-                vals = vals.where(vals.notna() & (vals != ""), None)
-                out.loc[vals.index, g] = vals
-            out.loc[hit.index, "_m"] = hit
-        return out
+    def extract(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-    # unpack all fields in ONE projection, then filter on the materialized
-    # match flag.  NOTE (measured, rounds 1-2): Catalyst still inlines the
-    # UDF into each downstream gate (match/must/ts filters + projection —
-    # 4 ArrowEvalPython nodes in the full parse plan).  Alternatives tried
-    # and rejected by measurement: (a) asNondeterministic forces a single
-    # eval BUT blocks CollapseProject/pushdown downstream — 4.6x slower
-    # end-to-end; (b) a nondeterministic barrier column in the unpack
-    # projection — node count UNCHANGED (4) and parse 29% slower; (c)
-    # dropping the _m filter (redundant when every family has must_include)
-    # — node count unchanged.  The repeated eval costs ~25% of this one
-    # stage and nothing downstream, so it stays.  (write_sinks persists the
-    # parsed frame anyway, so physical sinks never re-parse.)
-    st = extract(F.col("tag_base"), F.col("source"))
-    df = df.withColumn("_p", st)
-    df = df.withColumns(
-        {f: F.col(f"_p.{f}") for f in FIELDS} | {"_m": F.col("_p._m")}
-    ).drop("_p")
-    return df.filter(F.col("_m")).drop("_m")
+        for batch in batches:
+            n = batch.num_rows
+            tag_base, source = batch.column("tag_base"), batch.column("source")
+            no_source = pa.scalar(None, source.type)
+            taken = matched = pa.repeat(False, n)
+            found: dict[str, list] = {f: [] for f in FIELDS}
+            for bases, pat, groups in families:
+                mine = pc.is_in(tag_base, pa.array(bases, tag_base.type)).fill_null(False)
+                mine = pc.and_not(mine, taken)
+                taken = pc.or_(taken, mine)
+                # RE2 runs only on this family's rows: NULL inputs are skipped
+                ext = pc.extract_regex(pc.if_else(mine, source, no_source), pattern=pat)
+                matched = pc.or_(matched, ext.is_valid())
+                for g in groups:  # struct_field, not .field(): NULL where no match
+                    found[g].append(pc.struct_field(ext, g))
+            cols = []
+            for f in FIELDS:
+                vals = pc.coalesce(*found[f]) if found[f] else pa.nulls(n, pa.string())
+                vals = pc.utf8_trim(vals, characters=TRIM_CHARS)
+                cols.append(pc.if_else(pc.equal(vals, ""), None, vals))
+            out = pa.RecordBatch.from_arrays(
+                batch.columns + cols, names=batch.schema.names + FIELDS
+            ).filter(matched)
+            if out.num_rows:
+                yield out
+
+    return df.mapInArrow(extract, schema)
 
 
 def parse(df: DataFrame, cfg: PipelineConfig, impl: str | None = None) -> DataFrame:
-    """Parser over all configured tag families: extraction (native | pandas)
+    """Parser over all configured tag families: extraction (arrow | native)
     + the shared post stages (must_include, JSON explode, time normalize)."""
     parsers = cfg.parsers
-    impl = impl or getattr(cfg, "parser_impl", "native")
-    df = (extract_pandas if impl == "pandas" else extract_native)(df, parsers)
+    extract = {"arrow": extract_arrow, "native": extract_native}[impl or cfg.parser_impl]
+    df = extract(df, parsers)
 
     # must_include gate (parser_f.go:112-118)
     must_ok = _family_case(

@@ -165,11 +165,14 @@ def _parser_case(build) -> str:
     return "CASE " + " ".join(whens) + " ELSE NULL END"
 
 
+#: C.TRIM_CHARS as a SQL string (DuckDB's one-argument trim strips Unicode Zs)
+_TRIM_SQL = " || ".join(f"chr({ord(c)})" for c in C.TRIM_CHARS)
+
+
 def _field_sql(p: C.ParserConfig, field: str) -> str:
     if field not in p.groups:
         return "NULL"
-    idx = p.groups.index(field) + 1
-    return f"nullif(trim(regexp_extract(source, '{p.pattern}', {idx})), '')"
+    return f"nullif(trim(regexp_extract(source, '{p.pattern}', {p.groups[field]}), {_TRIM_SQL}), '')"
 
 
 _TIME_FAMILIES = ", ".join(

@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from go_fluentd_spark.config import DEFAULT_CONFIG, PipelineConfig
 from go_fluentd_spark.plans import pipeline as P
+from go_fluentd_spark.session import local_table
 
 MANIFEST_SCHEMA = (
     "run_id string, input_sig string, bucket int, sink string, "
@@ -93,7 +94,7 @@ class ManifestedRun:
 
     def manifest(self) -> DataFrame:
         if not self._has_manifest():
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+            return local_table(self.spark, [], MANIFEST_SCHEMA)
         return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.manifest_dir)
 
     def committed_buckets(self, input_sig: str, n_sinks: int) -> list[int]:
@@ -231,7 +232,7 @@ class ManifestedRun:
             (run_id, input_sig, b, sink, 0, attempts[sink], "discarded", now)
             for sink in discarded_sinks for b in todo
         ]
-        self.spark.createDataFrame(commit_rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
+        local_table(self.spark, commit_rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(self.manifest_dir)
         if with_monitor:

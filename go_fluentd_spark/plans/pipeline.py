@@ -39,6 +39,12 @@ POST_STRING_COLS = [
     "datasource",
 ]
 
+#: what a count of the parse output reads: the routing tag, the id ``msgid``
+#: builds on and the parse's own inputs.  The parse is a map-in node, which
+#: Catalyst cannot column-prune, so a consumer that only counts selects these
+#: before it (the concat aggregate then skips ``tokens`` and ``ext_ids`` too)
+COUNT_COLUMNS = ["tag", "id", "tag_base", "source"]
+
 
 def ingested(
     spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG, rep: int = 1
@@ -90,4 +96,5 @@ def routed(
 def sink_counts(
     spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT_CONFIG, rep: int = 1
 ) -> DataFrame:
-    return route_counts(spark, enriched(spark, sf_dir, cfg, rep), cfg)
+    df = parse(accepted(spark, sf_dir, cfg, rep).select(*COUNT_COLUMNS), cfg)
+    return route_counts(spark, enrich(spark, df, cfg), cfg)

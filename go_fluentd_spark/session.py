@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def build_spark(
@@ -41,6 +41,11 @@ def build_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # no Python call-site capture: it adds py4j round trips to every
+        # DataFrame call of every plan build (a fresh manifested run
+        # measured ~7% faster without it); error messages lose the Python
+        # line of the failing call.  PySpark reads it once per process
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # GC: measured both ways on the e2e pipeline (BENCH.md) — ParallelGC
         # is ~22% faster at full-box 32 threads but ~30% SLOWER on a pinned
         # 8-core budget; G1 (the JVM default) wins at executor-realistic core
@@ -61,6 +66,23 @@ def build_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_table(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A driver-built table (``rows`` against the DDL schema ``ddl``) as a
+    LocalRelation: the rows ride in the plan, so using it runs no Python.
+    ``createDataFrame`` of a list plans a LogicalRDD of pickled rows
+    instead, and every use of it (a broadcast, a write) runs Python tasks
+    to unpickle them; an Arrow table takes the local path."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def ensure_session_defaults(spark: SparkSession) -> SparkSession:

@@ -37,6 +37,7 @@ from go_fluentd_spark.config import CONCAT_CONFIGS, DEFAULT_CONFIG, PipelineConf
 from go_fluentd_spark.operators.acceptor import acceptor_chain
 from go_fluentd_spark.operators.enrich import msgid
 from go_fluentd_spark.operators.parser import parse
+from go_fluentd_spark.session import local_table
 from go_fluentd_spark.sources.synth import with_ingest_columns
 
 # query id -> cooperative-stop flag for its foreachBatch sink; set by
@@ -488,7 +489,9 @@ def run_pipeline_stream(
         with _shuffle_partitions(spark, n_state):
             df = concat_sessions_streaming(df)
     df = acceptor_chain(df, cfg)
-    df = parse(df, cfg)
+    # the sinks do not write tokens: drop them before the map-in parse,
+    # which would otherwise carry them through Python
+    df = parse(df.drop("tokens"), cfg)
     df = msgid(df, cfg)
 
     # sink fan-out as ONE column expression: per sink, a WHEN over its tag
@@ -521,7 +524,7 @@ def run_pipeline_stream(
                     F.filter(F.array(*sink_whens), lambda x: x.isNotNull())
                 ),
             )
-            .drop("tokens", "args_map")
+            .drop("args_map")
             .withColumn("batch_id", F.lit(batch_id))
         )
         (
@@ -623,7 +626,7 @@ def run_pipeline_stream(
                 for i, t in enumerate(cfg.accept_tags)
                 if got[f"t{i}"]
             ]
-            counts = spark_b.createDataFrame(rows, "tag string, n bigint")
+            counts = local_table(spark_b, rows, "tag string, n bigint")
         _write_batch_partition(counts, os.path.join(out_dir, "_counts"), batch_id)
 
     with _shuffle_partitions(spark, n_state):

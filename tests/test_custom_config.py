@@ -19,8 +19,7 @@ TENANT_CFG = PipelineConfig(
     parsers=[
         ParserConfig(
             tag_bases=("web", "db"),
-            pattern=r"^(\S+) (\w+) (.*)$",
-            groups=("time", "level", "message"),
+            pattern=r"^(?P<time>\S+) (?P<level>\w+) (?P<message>.*)$",
             must_include="level",
             time_group=None,
         )

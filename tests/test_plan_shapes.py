@@ -24,7 +24,8 @@ def _n(plan: str, op: str) -> int:
 
 
 def test_full_pipeline_plan_shape(spark):
-    plan = _plan(P.routed(spark, SF))
+    routed = P.routed(spark, SF)
+    plan = _plan(routed)
     # exactly TWO exchanges: the key-only synth repartition (absent at real
     # scale) and the concat window's (tag, container_id) hash partition
     assert _n(plan, "Exchange") == 2, plan[:2000]
@@ -33,8 +34,13 @@ def test_full_pipeline_plan_shape(spark):
     assert _n(plan, "SortMergeJoin") == 0
     assert _n(plan, "CartesianProduct") == 0
     assert _n(plan, "BroadcastNestedLoopJoin") == 0
-    # the parser's measured optimum: exactly two Arrow-batched Python nodes
-    assert _n(plan, "ArrowEvalPython") == 2
+    # the parser crosses into Python once per row: one MapInArrow, a plan
+    # barrier no later gate re-evaluates through
+    assert _n(plan, "MapInArrow") == 1
+    assert _n(plan, "ArrowEvalPython") == 0
+    # the dims are local relations: no scan of pickled Python rows
+    assert "Scan ExistingRDD" not in plan
+    assert "LogicalRDD" not in routed._jdf.queryExecution().toString()
     # the synth scan is pruned to the single key column
     assert "ReadSchema: struct<o_orderkey:bigint>" in plan
 
@@ -45,6 +51,11 @@ def test_sink_counts_reuses_window_partitioning(spark):
     # (sink, tag) grouping — the group-by after the window must not add more
     assert _n(plan, "Exchange") <= 3, plan[:2000]
     assert _n(plan, "SortMergeJoin") == 0
+    # nothing prunes columns across the map-in parse: the counts parse only
+    # what they read, so no payload column (tokens, ext_ids) crosses it
+    parse_in = re.search(r"^\(\d+\) MapInArrow\nInput \[\d+\]: \[(.*)\]$", plan, re.M)
+    assert parse_in, plan[:2000]
+    assert [c.split("#")[0] for c in parse_in.group(1).split(", ")] == P.COUNT_COLUMNS
 
 
 def test_sequence_chunks_is_narrow(spark):

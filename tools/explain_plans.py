@@ -1,6 +1,6 @@
 """Dump formatted physical plans for the headline queries into PLANS.md —
 the plan-quality evidence: broadcast joins for every dim lookup, exactly one
-data shuffle (the concat window), column-pruned scans, one ArrowEvalPython.
+data shuffle (the concat window), column-pruned scans, one MapInArrow.
 
 Usage: python tools/explain_plans.py
 """
@@ -19,7 +19,7 @@ from go_fluentd_spark.session import build_spark
 SF = "/root/testdata/sf0.001"
 
 INTERESTING = re.compile(
-    r"Exchange|BroadcastHashJoin|SortMergeJoin|ArrowEvalPython|Window|"
+    r"Exchange|BroadcastHashJoin|SortMergeJoin|ArrowEvalPython|MapInArrow|LocalTableScan|Window|"
     r"HashAggregate|ObjectHashAggregate|Scan parquet|Filter|ReadSchema|PushedFilters"
 )
 
@@ -95,10 +95,11 @@ def main() -> None:
         "partition; every dim lookup is a BroadcastHashJoin (no sort-merge",
         "joins anywhere); the scan is pruned to the single key column",
         "(ReadSchema); the group-by after the window reuses the window's",
-        "partitioning (no extra shuffle).  The parser appears as two",
-        "ArrowEvalPython nodes (match filter + field projection) — the",
-        "single-eval alternative measured 4.6x slower end-to-end because it",
-        "blocks downstream optimization (see operators/parser.py).",
+        "partitioning (no extra shuffle).  The parser is one MapInArrow",
+        "node: one Python crossing per row, RE2 extraction per family, and",
+        "a plan barrier, so no later gate re-runs it (see",
+        "operators/parser.py).  The dims are LocalTableScans, not scans of",
+        "pickled Python rows.",
         "",
         "embed_banded_pairs: the per-bucket cap (row_number <= cap) compiles",
         "to WindowGroupLimit — Spark's rank-limit pushdown prunes each",
