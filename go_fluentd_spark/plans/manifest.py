@@ -33,15 +33,37 @@ The reference's guarantees restated for batch (SURVEY.md §2.3):
   commits, one row per sink; a bucket no row hashed to is trivially
   delivered and commits with ``rows=0``.  The per-(sink, bucket) counts
   are read back from the written partitions; that read selects partition
-  columns only, so it reads parquet footers, not rows.
+  columns only, with their schema given, so it reads parquet footers, not
+  rows, and runs no schema-inference job.
+
+Manifest layout.  The reference bounds its committed-id window per tag; the
+manifest is bounded per input the same way: each commit appends one parquet
+file to ``_manifest/input=<key>/``, where ``<key>`` is the first 16 hex
+characters of the sha256 of the input signature.  The resume check lists
+and reads only that directory, so its cost grows with this input's commits
+(at most ``n_buckets * n_sinks * attempts`` rows), not with the history of
+every input the ``out_dir`` has seen.  It is one scan stage selecting the
+resolved ``(bucket, sink)`` pairs; the all-sinks test runs on the driver.
+Rows keep their ``input_sig`` column and the check filters on it, so two
+signatures sharing a key cannot resolve each other's buckets.
+
+The input signature (``ManifestedRun.input_sig``) is the Hadoop-qualified
+input path plus ``#b<n_buckets>``: ``/d/in`` and ``file:///d/in`` share one
+signature, and a relative path resolves the way Spark's read of it does,
+not against the Python working directory.  Replacing the files under the
+same path is not detected: a rerun on changed input skips every bucket the
+old input committed.
+
+Manifests written before this layout hold flat files at the ``_manifest/``
+root, keyed by an ``os.path.abspath`` signature.  The resume check ignores
+them, so the first run on such an ``out_dir`` recomputes every bucket once
+and commits under the new layout; dynamic overwrite makes that recompute
+idempotent.  ``manifest()`` and ``stats()`` still read every row, old and
+new.
 
 The manifest listing and the discard cleanup go through the Hadoop
-FileSystem API, so an ``out_dir`` URI (``file://``, ``hdfs://``) resumes and
-discards like a local path.
-
-The input signature is the input path plus ``n_buckets``: replacing the
-files under the same path is not detected, and a rerun on changed input
-skips every bucket the old input committed.
+FileSystem API (``session.hadoop_fs``), so an ``out_dir`` URI (``file://``,
+``hdfs://``) resumes and discards like a local path.
 
 At 10^12-row scale ``n_buckets`` is the resume granule: thousands of buckets
 keep re-work per failure small while the manifest table stays tiny.
@@ -49,6 +71,7 @@ keep re-work per failure small while the manifest table stays tiny.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
@@ -58,7 +81,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from go_fluentd_spark.config import DEFAULT_CONFIG, PipelineConfig
 from go_fluentd_spark.plans import pipeline as P
-from go_fluentd_spark.session import local_table
+from go_fluentd_spark.session import hadoop_fs, holds_parquet, local_table
 
 MANIFEST_SCHEMA = (
     "run_id string, input_sig string, bucket int, sink string, "
@@ -80,43 +103,53 @@ class ManifestedRun:
         self.n_buckets = n_buckets
         self.manifest_dir = os.path.join(out_dir, "_manifest")
 
-    def _fs(self, path: str):
-        """(Hadoop FileSystem, Path) of ``path``, local or URI."""
-        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(path)
-        return jpath.getFileSystem(self.spark._jsc.hadoopConfiguration()), jpath
+    def input_sig(self, sf_dir: str) -> str:
+        """The input signature: the Hadoop-qualified input path plus the
+        bucket count, so a path and its ``file://`` URI share one and the
+        Python working directory does not enter it."""
+        return f"{hadoop_fs(self.spark, sf_dir)[1].toString()}#b{self.n_buckets}"
+
+    def input_manifest_dir(self, input_sig: str) -> str:
+        """``_manifest/input=<key>/``: the commits of one input signature."""
+        key = hashlib.sha256(input_sig.encode()).hexdigest()[:16]
+        return os.path.join(self.manifest_dir, f"input={key}")
 
     # -- manifest table ----------------------------------------------------
-    def _has_manifest(self) -> bool:
-        fs, path = self._fs(self.manifest_dir)
-        return fs.exists(path) and any(
-            f.getPath().getName().endswith(".parquet") for f in fs.listStatus(path)
-        )
-
     def manifest(self) -> DataFrame:
-        if not self._has_manifest():
+        """Every manifest row: every input's, and the flat files of the
+        layout before per-input directories."""
+        fs, path = hadoop_fs(self.spark, self.manifest_dir)
+        if not fs.exists(path):
             return local_table(self.spark, [], MANIFEST_SCHEMA)
-        return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.manifest_dir)
+        return (
+            self.spark.read.schema(MANIFEST_SCHEMA)
+            .option("recursiveFileLookup", "true")
+            .parquet(self.manifest_dir)
+        )
 
     def committed_buckets(self, input_sig: str, n_sinks: int) -> list[int]:
         """Buckets whose EVERY sink RESOLVED (commit-collector rule,
         producer.go:161-220): 'committed' = delivered; 'discarded' = the
         sink's is_discard_when_blocked dropped the batch after retries —
         the reference marks the message committed either way, the loss is
-        visible only in the audit row."""
-        if not self._has_manifest():
-            return []  # fresh output dir: no Spark job
-        m = (
+        visible only in the audit row.  Reads only this input's manifest
+        directory: one scan stage, the all-sinks test on the driver."""
+        path = self.input_manifest_dir(input_sig)
+        if not holds_parquet(self.spark, path):
+            return []  # no commit of this input: no Spark job
+        resolved: dict[int, set[str]] = {}
+        for bucket, sink in (
             self.spark.read.schema(MANIFEST_SCHEMA)
-            .parquet(self.manifest_dir)
+            .parquet(path)
             .filter(
                 (F.col("input_sig") == input_sig)
                 & F.col("state").isin("committed", "discarded")
             )
-            .groupBy("bucket")
-            .agg(F.countDistinct("sink").alias("ns"))
-            .filter(F.col("ns") >= n_sinks)
-        )
-        return [r.bucket for r in m.collect()]
+            .select("bucket", "sink")
+            .collect()
+        ):
+            resolved.setdefault(bucket, set()).add(sink)
+        return sorted(b for b, s in resolved.items() if len(s) >= n_sinks)
 
     # -- run ---------------------------------------------------------------
     def run(
@@ -151,7 +184,7 @@ class ManifestedRun:
         bucket uncommitted, so resume re-delivers.  ``sink_faults`` (tests)
         maps sink name -> number of initial write attempts that raise."""
         run_id = run_id or uuid.uuid4().hex[:12]
-        input_sig = f"{os.path.abspath(sf_dir)}#b{self.n_buckets}"
+        input_sig = self.input_sig(sf_dir)
         sinks = [s.name for s in cfg.sinks]
 
         done = set(self.committed_buckets(input_sig, len(sinks)))
@@ -206,16 +239,20 @@ class ManifestedRun:
                 # partitions — readers must never see data the audit says
                 # was dropped, so delete those partitions first
                 for b in todo:
-                    fs, part = self._fs(os.path.join(self.out_dir, f"sink={sink}", f"bucket={b}"))
+                    fs, part = hadoop_fs(
+                        self.spark, os.path.join(self.out_dir, f"sink={sink}", f"bucket={b}")
+                    )
                     fs.delete(part, True)
                 discarded_sinks.append(sink)
 
         counts: dict[tuple[str, int], int] = {}
         if delivered:
-            # partition columns only: Spark answers from the parquet footers
+            # partition columns only: Spark answers from the parquet
+            # footers, and with their schema given it runs no job to infer it
             counts = {
                 (sink, b): n
-                for sink, b, n in self.spark.read.parquet(self.out_dir)
+                for sink, b, n in self.spark.read.schema("sink string, bucket int")
+                .parquet(self.out_dir)
                 .filter(F.col("sink").isin(delivered) & F.col("bucket").isin(todo))
                 .groupBy("sink", "bucket")
                 .count()
@@ -234,7 +271,7 @@ class ManifestedRun:
         ]
         local_table(self.spark, commit_rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
             "append"
-        ).parquet(self.manifest_dir)
+        ).parquet(self.input_manifest_dir(input_sig))
         if with_monitor:
             from go_fluentd_spark.operators.monitor import stage_counts
 

@@ -85,6 +85,33 @@ def local_table(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, qualified Path) of ``path``, local or URI: every
+    filesystem check of an output or manifest directory goes through here,
+    so a ``file://`` or ``hdfs://`` location behaves like a local path."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, fs.makeQualified(jpath)
+
+
+def list_dir(spark: SparkSession, path: str, pattern: str = "*") -> list:
+    """The Hadoop ``FileStatus`` entries directly under ``path`` whose names
+    match the glob ``pattern``; ``[]`` when ``path`` does not exist.  The
+    JVM applies the pattern, so the entries that do not match cost no
+    py4j round trip (a streaming table gains one ``batch_id=N`` entry per
+    trigger)."""
+    fs, jpath = hadoop_fs(spark, path)
+    if not fs.exists(jpath):
+        return []
+    return list(fs.listStatus(jpath, spark._jvm.org.apache.hadoop.fs.GlobFilter(pattern)))
+
+
+def holds_parquet(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` holds a parquet file directly (not in a
+    subdirectory)."""
+    return any(f.isFile() for f in list_dir(spark, path, "*.parquet"))
+
+
 def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     """Pin the runtime-settable confs our operators depend on.
 

@@ -37,7 +37,7 @@ from go_fluentd_spark.config import CONCAT_CONFIGS, DEFAULT_CONFIG, PipelineConf
 from go_fluentd_spark.operators.acceptor import acceptor_chain
 from go_fluentd_spark.operators.enrich import msgid
 from go_fluentd_spark.operators.parser import parse
-from go_fluentd_spark.session import local_table
+from go_fluentd_spark.session import hadoop_fs, holds_parquet, list_dir, local_table
 from go_fluentd_spark.sources.synth import with_ingest_columns
 
 # query id -> cooperative-stop flag for its foreachBatch sink; set by
@@ -288,15 +288,14 @@ def _state_partitions(spark: SparkSession, checkpoint_dir: str) -> int:
     FileSystem API, so a remote checkpoint URI works too."""
     import json
 
-    path = spark._jvm.org.apache.hadoop.fs.Path
-    offsets = path(checkpoint_dir, "offsets")
-    fs = offsets.getFileSystem(spark._jsc.hadoopConfiguration())
-    found = fs.listStatus(offsets) if fs.exists(offsets) else []
+    offsets = os.path.join(checkpoint_dir, "offsets")
+    found = list_dir(spark, offsets)
     batches = [int(n) for n in (f.getPath().getName() for f in found) if n.isdigit()]
     if not batches:
         return spark.sparkContext.defaultParallelism
     # offsets/0 until Spark purges it; every offset file records the conf
-    stream = fs.open(path(offsets, str(min(batches))))
+    fs, first = hadoop_fs(spark, os.path.join(offsets, str(min(batches))))
+    stream = fs.open(first)
     try:
         text = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
     finally:
@@ -330,6 +329,15 @@ def shed_overload(
     return kept, shed
 
 
+def _refuse_flat_layout(spark: SparkSession, path: str) -> None:
+    if holds_parquet(spark, path):
+        raise ValueError(
+            f"{path} holds a legacy flat (unpartitioned) parquet layout; "
+            "use a fresh out_dir — per-batch idempotent writes partition "
+            "by batch_id"
+        )
+
+
 def _write_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
     """Idempotent per-batch write under at-least-once ``foreachBatch``: the
     batch's rows land in a ``batch_id=<n>`` partition via dynamic partition
@@ -340,16 +348,9 @@ def _write_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
     ``mode("append")`` path holds unpartitioned files at the table root, and
     mixing those with ``batch_id=N`` dirs makes the directory unreadable as
     one table — resume on an upgraded layout requires a fresh out_dir.
-    Scope (ADVICE r5): the refusal checks the LOCAL filesystem only
-    (``os.path``) — for a remote ``out_dir`` URI (hdfs://, s3a://) it
-    silently no-ops; route the check through the Hadoop FileSystem API
-    before pointing this at a remote table."""
-    if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
-        raise ValueError(
-            f"{path} holds a legacy flat (unpartitioned) parquet layout; "
-            "use a fresh out_dir — per-batch idempotent writes partition "
-            "by batch_id"
-        )
+    The check goes through the Hadoop FileSystem API, so it holds for an
+    ``out_dir`` URI (``file://``, ``hdfs://``) too."""
+    _refuse_flat_layout(df.sparkSession, path)
     (
         df.withColumn("batch_id", F.lit(batch_id))
         .write.mode("overwrite")
@@ -467,18 +468,9 @@ def run_pipeline_stream(
     # refuse a legacy layout where a sink dir holds flat (un-batch_id-
     # partitioned) parquet — same rule _write_batch_partition applies to
     # _counts/_shed, checked once here for the unified sink table
-    for name in os.listdir(out_dir) if os.path.isdir(out_dir) else []:
-        d = os.path.join(out_dir, name)
-        if (
-            name.startswith("sink=")
-            and os.path.isdir(d)
-            and any(f.endswith(".parquet") for f in os.listdir(d))
-        ):
-            raise ValueError(
-                f"{d} holds a legacy flat (unpartitioned) parquet layout; "
-                "use a fresh out_dir — per-batch idempotent writes partition "
-                "by batch_id"
-            )
+    for f in list_dir(spark, out_dir, "sink=*"):
+        if f.isDirectory():
+            _refuse_flat_layout(spark, f.getPath().toString())
     df = with_ingest_columns(
         read_sequence_stream(spark, src_dir, max_files_per_trigger)
     )

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from go_fluentd_spark.config import DEFAULT_CONFIG
 from go_fluentd_spark.plans import pipeline as P
 from go_fluentd_spark.plans.manifest import MANIFEST_SCHEMA, ManifestedRun
+from go_fluentd_spark.session import local_table
 
 SINKS = [s.name for s in DEFAULT_CONFIG.sinks]
 
@@ -61,7 +62,7 @@ def test_crash_before_commit_then_resume(spark, sf_dir, tmp_path):
     # crash after the first sink write, BEFORE any manifest commit
     with pytest.raises(RuntimeError, match="injected failure"):
         m.run(sf_dir, fail_after_sinks=1)
-    assert m.committed_buckets(f"{sf_dir}#b8", 3) == []  # nothing committed
+    assert m.committed_buckets(m.input_sig(sf_dir), 3) == []  # nothing committed
 
     s = m.run(sf_dir)  # resume reprocesses everything, idempotently
     assert s["buckets"] == 8
@@ -109,7 +110,7 @@ def test_discard_when_blocked_commits_with_loss(spark, sf_dir, tmp_path):
     att_es, rows_es = by[("es_general", "committed")]
     assert att_es == 3 and rows_es > 0  # transient fault absorbed by retries
     # every bucket RESOLVED (committed or discarded) -> rerun is a noop
-    assert len(m.committed_buckets(f"{sf_dir}#b8", 3)) == 8
+    assert len(m.committed_buckets(m.input_sig(sf_dir), 3)) == 8
     s2 = m.run(sf_dir, cfg=cfg)
     assert s2["buckets"] == 0 and s2["skipped"] == 8
 
@@ -124,7 +125,7 @@ def test_blocked_nondiscard_sink_stays_uncommitted(spark, sf_dir, tmp_path):
     m = ManifestedRun(spark, str(tmp_path / "out"), n_buckets=8)
     with pytest.raises(RuntimeError, match="stays uncommitted"):
         m.run(sf_dir, sink_faults={"kafka_cp": 99})
-    assert m.committed_buckets(f"{sf_dir}#b8", 3) == []
+    assert m.committed_buckets(m.input_sig(sf_dir), 3) == []
     s = m.run(sf_dir)  # resume: full re-delivery, idempotent
     assert s["buckets"] == 8
     assert sink_rows(m, "es_general") == expected
@@ -171,10 +172,11 @@ def test_empty_buckets_commit_and_rerun_is_noop(spark, sf_dir, tmp_path):
 
 
 def test_job_counts_fresh_run_and_noop_rerun(spark, sf_dir, tmp_path):
-    """A resolved rerun is the manifest read alone, and a fresh run is one
-    sink write plus a footer read of the written partitions for its
-    counts: no cached frame, no count pass per sink, no job for the
-    manifest of a fresh output dir."""
+    """A resolved rerun is the one-stage read of this input's manifest
+    rows, and a fresh run is one sink write plus a footer read of the
+    written partitions for its counts: no cached frame, no count pass per
+    sink, no schema-inference job, no job for the manifest of a fresh
+    output dir."""
     sc = spark.sparkContext
     m = ManifestedRun(spark, str(tmp_path / "out"), n_buckets=8)
 
@@ -188,8 +190,8 @@ def test_job_counts_fresh_run_and_noop_rerun(spark, sf_dir, tmp_path):
 
     fresh = jobs(f"fresh-{tmp_path.name}", lambda: m.run(sf_dir))
     rerun = jobs(f"rerun-{tmp_path.name}", lambda: m.run(sf_dir))
-    assert rerun <= 3
-    assert fresh <= 11
+    assert rerun == 1
+    assert fresh <= 10
 
 
 def test_fresh_run_is_one_sink_write_and_persists_nothing(spark, sf_dir, tmp_path, monkeypatch):
@@ -209,7 +211,7 @@ def test_fresh_run_is_one_sink_write_and_persists_nothing(spark, sf_dir, tmp_pat
     out = str(tmp_path / "out")
     m = ManifestedRun(spark, out, n_buckets=8)
     m.run(sf_dir)
-    assert writes == [out, m.manifest_dir] and cached == []
+    assert writes == [out, m.input_manifest_dir(m.input_sig(sf_dir))] and cached == []
 
 
 def test_run_keeps_session_overwrite_mode_and_earlier_manifest_rows(spark, sf_dir, tmp_path):
@@ -219,9 +221,9 @@ def test_run_keeps_session_overwrite_mode_and_earlier_manifest_rows(spark, sf_di
     overwrite of out_dir would delete _manifest/)."""
     key = "spark.sql.sources.partitionOverwriteMode"
     m = ManifestedRun(spark, str(tmp_path / "out"), n_buckets=8)
-    sig = f"{os.path.abspath(sf_dir)}#b8"
+    sig = m.input_sig(sf_dir)
     earlier = [("earlier", sig, b, s, 0, 1, "committed", 0.0) for b in range(4) for s in SINKS]
-    spark.createDataFrame(earlier, MANIFEST_SCHEMA).write.parquet(m.manifest_dir)
+    spark.createDataFrame(earlier, MANIFEST_SCHEMA).write.parquet(m.input_manifest_dir(sig))
     before = spark.conf.get(key)
     spark.conf.set(key, "static")
     try:
@@ -269,7 +271,7 @@ def test_real_write_failure_aborts_then_resume_redelivers(spark, sf_dir, tmp_pat
     m = ManifestedRun(spark, str(out), n_buckets=8)
     with pytest.raises(RuntimeError, match="stays uncommitted"):
         m.run(sf_dir, max_retries=1)
-    assert m.committed_buckets(f"{sf_dir}#b8", 3) == []
+    assert m.committed_buckets(m.input_sig(sf_dir), 3) == []
     blocker.unlink()
     assert m.run(sf_dir)["buckets"] == 8
     for sink in SINKS:
@@ -288,3 +290,86 @@ def test_manifest_rows_match_routed_sink_counts(spark, sf_dir, reference):
         for r in P.sink_counts(spark, sf_dir).groupBy("sink").agg(F.sum("n").alias("n")).collect()
     }
     assert got == want and set(got) == set(SINKS)
+
+
+def test_input_sig_is_the_qualified_path_from_any_working_dir(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The same input given as a path from one working directory and as a
+    file:// URI from another is one signature: the second run skips every
+    bucket the first committed."""
+    sf = os.path.abspath(sf_dir)
+    m = ManifestedRun(spark, str(tmp_path / "out"), n_buckets=8)
+    for d in ("a", "b"):
+        (tmp_path / d).mkdir()
+    monkeypatch.chdir(tmp_path / "a")
+    assert m.run(sf)["buckets"] == 8
+    monkeypatch.chdir(tmp_path / "b")
+    uri = f"file://{sf}"
+    assert m.input_sig(uri) == m.input_sig(sf) == f"file:{sf}#b8"
+    s = m.run(uri)
+    assert s["buckets"] == 0 and s["skipped"] == 8
+
+
+def test_committed_buckets_matches_duckdb_oracle(spark, tmp_path, monkeypatch):
+    """An adversarial manifest: duplicate committed rows from retries,
+    discarded rows, a bucket missing one sink (with enough duplicate rows
+    to pass a row count), another input's rows in its own directory and one
+    in this input's, and a legacy flat file at the _manifest/ root that
+    would resolve every bucket.  The check equals DuckDB's GROUP BY over
+    the per-input files and scans only this input's directory."""
+    import duckdb
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    m = ManifestedRun(spark, str(tmp_path / "out"), n_buckets=8)
+    sig, other = m.input_sig(str(tmp_path / "in")), m.input_sig(str(tmp_path / "other"))
+    es, kafka, backup = SINKS
+
+    def rows(run, s, state, pairs):
+        return [(run, s, b, k, 1, 1, state, 0.0) for b, k in pairs]
+
+    def commit(path, batch):  # one parquet file per commit, as ManifestedRun.run writes
+        local_table(spark, batch, MANIFEST_SCHEMA).coalesce(1).write.mode("append").parquet(path)
+
+    mine = m.input_manifest_dir(sig)
+    commit(mine, (
+        rows("r1", sig, "committed", [(0, es), (0, kafka), (0, backup), (1, es), (1, kafka),
+                                      (2, es), (2, kafka), (3, es), (3, es), (3, kafka)])
+        + rows("r1", sig, "discarded", [(2, backup)])
+    ))
+    commit(mine, (
+        rows("r2", sig, "committed", [(0, es), (0, kafka), (0, backup), (1, es), (3, es),
+                                      (5, es), (5, kafka), (5, backup)])
+        + rows("r2", other, "committed", [(1, backup), (3, backup)])  # a key collision
+    ))
+    commit(m.input_manifest_dir(other), rows(
+        "o1", other, "committed", [(b, k) for b in range(8) for k in SINKS]
+    ))
+    commit(m.manifest_dir, rows(
+        "old", sig, "committed", [(b, k) for b in range(8) for k in SINKS]
+    ))
+
+    scans = []
+    collect = DataFrame.collect
+    monkeypatch.setattr(
+        DataFrame, "collect", lambda self: (scans.append(self.inputFiles()), collect(self))[1]
+    )
+    got = m.committed_buckets(sig, len(SINKS))
+    monkeypatch.undo()
+
+    want = [
+        b for (b,) in duckdb.execute(
+            "SELECT bucket FROM read_parquet(?, hive_partitioning = false) "
+            "WHERE input_sig = ? AND state IN ('committed', 'discarded') "
+            "GROUP BY bucket HAVING count(DISTINCT sink) >= ? ORDER BY bucket",
+            [f"{tmp_path}/out/_manifest/input=*/*.parquet", sig, len(SINKS)],
+        ).fetchall()
+    ]
+    assert got == want == [0, 2, 5]
+    assert len(scans) == 1
+    assert sorted(scans[0]) == sorted(
+        f"file://{mine}/{f}" for f in os.listdir(mine) if f.endswith(".parquet")
+    )
+    assert len(scans[0]) == 2
+    # the inspection view still reads every row: both inputs' and the legacy file's
+    assert m.manifest().count() == 11 + 10 + 24 + 24

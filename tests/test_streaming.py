@@ -163,3 +163,23 @@ def test_state_partitions_fresh_and_recorded(spark, sf_dir, tmp_path):
     assert _state_partitions(spark, ck) == 3
     assert _state_partitions(spark, str(tmp_path / "none")) == slots
 
+
+
+def test_legacy_flat_layout_refused_at_a_file_uri(spark, tmp_path):
+    """The legacy-layout refusal goes through the Hadoop FileSystem API: a
+    file:// out_dir whose sink directory or audit table holds flat parquet
+    is refused, as a local path is."""
+    import pytest
+
+    from go_fluentd_spark.streaming.stream_pipeline import _write_batch_partition
+
+    out = tmp_path / "out"
+    df = spark.range(3).select(F.lit("t").alias("tag"), F.col("id").alias("n"))
+    df.write.mode("append").parquet(str(out / "_counts"))
+    df.write.mode("append").parquet(str(out / "sink=es_general"))
+    with pytest.raises(ValueError, match="legacy flat"):
+        _write_batch_partition(df, (out / "_counts").as_uri(), 0)
+    with pytest.raises(ValueError, match="legacy flat"):
+        run_pipeline_stream(
+            spark, str(tmp_path / "src"), out.as_uri(), str(tmp_path / "ck"), with_concat=False
+        )
