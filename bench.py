@@ -1,24 +1,22 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...},
- "sf": ..., "rows": ..., "seq_per_sec": ...}
+ "sf": ..., "rows": ..., "seq_per_sec": ..., "stream": {...}, "scaling": {...}}
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   input dir (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS     local[N] (default 32)
   SPARK_GRAFT_SEQ_REP  source replication factor (default 4 -> 600k rows at
                        sf0.1; correctness paths always use rep=1)
-  SPARK_GRAFT_SCALING  "0" disables the embedded pinned 2-vs-8-core scaling
-                       evidence (default on: the JSON line carries
-                       "scaling_pairs" so round-over-round diffs are
-                       mechanical; legs run AFTER the main session stops —
-                       never two Spark jobs at once)
-  SPARK_GRAFT_BENCH_REPS        best-of-N per headline query (default 3)
-  SPARK_GRAFT_SCALING_BUDGET    probe-gated hunt wall-clock budget, seconds
-                                (default 1200)
-  SPARK_GRAFT_PROBE_GATE_EFF    min memcpy 2v8 efficiency to fire a pair
-                                (default 0.70)
-  SPARK_GRAFT_PROBE_GATE_BW     min 8-core aggregate memcpy GB/s (default 18)
+  SPARK_GRAFT_BENCH_REPS   best-of-N per headline query (default 3)
+  SPARK_GRAFT_STREAM   "0" skips the streaming micro/bulk rows/s
+  SPARK_GRAFT_STREAM_REPS  best-of-N stream runs (default 1)
+  SPARK_GRAFT_SCALING  "0" skips the pinned 2-vs-8-core scaling evidence
+                       (default on; run after the main session stops, never
+                       two Spark jobs at once).  The hunt's own knobs
+                       (SPARK_GRAFT_SCALING_BUDGET, _REP, _PAIRS and
+                       SPARK_GRAFT_PROBE_GATE_EFF, _BW) are read and
+                       documented in tools/scaling.py.
 """
 
 from __future__ import annotations
@@ -184,275 +182,19 @@ def main() -> None:
     spark.stop()
 
     if os.environ.get("SPARK_GRAFT_SCALING", "1") != "0":
-        # the north rule's two-parallelism evidence, embedded in the bench
-        # artifact: identical job + input at pinned 2 vs 8 cores (taskset —
-        # local[N] alone doesn't bound GC/JIT threads; see BENCH.md for the
-        # methodology and the DRAM-bandwidth ceiling above 8 total cores).
-        #
-        # PROBE-GATED (round 4): the shared VM's own 2->8 memcpy ceiling
-        # swings 0.02-0.90 within a day, and a pipeline pair fired into a
-        # congested window is bounded by the host, not the code (measured:
-        # pipeline tracks 0.9-1.1x of the same-session memcpy ceiling; an
-        # 0.804 >= 0.8 pair landed exactly in a probed 0.726-ceiling
-        # window).  So each pair is preceded by a memcpy probe and pairs
-        # only fire in capable windows; if the budget expires without one,
-        # the best pair is emitted WITH its own-window ceiling and an
-        # explicit ceiling-relative verdict (pair/ceiling >= 1.0 = the code
-        # scales at least as well as memory bandwidth itself does).
-        sp = _scaling_evidence(sf_dir)
-        # same-session host ceiling at top level (round-over-round diff key;
-        # per-pair probes live inside each pair)
-        for p in reversed(sp.get("pairs", [])):
-            if p.get("probe_after", {}).get("memcpy_efficiency"):
-                result["host_control"] = p["probe_after"]
-                break
-            if p.get("probe_before", {}).get("memcpy_efficiency"):
-                result["host_control"] = p["probe_before"]
-                break
-        # Round-4 lesson (VERDICT r4 "What's wrong" #1): the full scaling
-        # evidence (probe log + per-pair probes) grew the single stdout JSON
-        # line past the driver's ~2 KB tail capture, so BENCH_r04.json parsed
-        # as null.  The bulky evidence now goes to a SIDECAR file and the
-        # final stdout line stays compact (headline + gate verdict only).
-        sidecar = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "bench_scaling.json"
-        )
+        # the north rule's two-parallelism evidence (tools/scaling.py), run
+        # after the main session stops.  The pairs and probes go to a
+        # sidecar file; the stdout line carries the compact summary only,
+        # since it must survive a ~2 KB tail capture (BENCH_r04 parsed as
+        # null when the full evidence was inline)
+        from tools import scaling
+
+        sp = scaling.hunt(sf_dir)
+        sidecar = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_scaling.json")
         with open(sidecar, "w") as f:
             json.dump({"headline": result, "scaling_pairs": sp}, f, indent=1)
-        result["scaling"] = _compact_scaling(sp, os.path.basename(sidecar))
-        result.pop("host_control", None)  # full probe dict lives in the sidecar
-    line = json.dumps(result)
-    if len(line) > 1900:  # hard cap: the compact line must survive tail capture
-        for k in ("all_efficiencies", "window_ceilings"):
-            result.get("scaling", {}).pop(k, None)
-            result.get("scaling", {}).get("gate", {}).pop(k, None)
-        line = json.dumps(result)
-    print(line)
-
-
-def _compact_scaling(sp: dict, sidecar: str) -> dict:
-    """Small (<~500 B) summary of the scaling hunt for the final stdout
-    line; everything else (probe log, per-pair probes, leg timings) is in
-    the sidecar file."""
-    out = {
-        "core_ratio": sp.get("core_ratio"),
-        "pinned": sp.get("pinned"),
-        "hunt_seconds": sp.get("hunt_seconds"),
-        "n_probes": len(sp.get("probe_log", [])),
-        "evidence_file": sidecar,
-    }
-    for k in (
-        "best_pair_efficiency",
-        "best_pair_basis",
-        "median_efficiency",
-        "all_efficiencies",
-        "rows",
-        "gate",
-    ):
-        if k in sp:
-            out[k] = sp[k]
-    return out
-
-
-def _scaling_evidence(sf_dir: str) -> dict:
-    """Probe-gated 2-vs-8-core scaling pairs.  Protocol (BENCH.md):
-
-    - rep=8 (1.2M rows): smaller inputs let per-job constant overhead
-      dominate the 2-core leg and understate efficiency (0.60 at rep=2 vs
-      ~0.78 at rep=8, identical code);
-    - per pair: pinned memcpy probe BEFORE (the gate) and AFTER; the pair's
-      own host ceiling = mean of the two probe efficiencies;
-    - gate: fire a pair only when probe efficiency >= GATE_EFF and the
-      8-core aggregate bandwidth >= GATE_BW (a congested window can show
-      high *ratio* at uselessly low absolute bandwidth);
-    - stop early on a pair >= 0.8 (the north rule); otherwise keep hunting
-      until the wall-clock budget, with one ungated fallback pair so the
-      artifact always carries data;
-    - every leg/pair/probe failure is recorded, never fatal (a stalled host
-      leg must not cost the whole artifact)."""
-    from tools.host_probe import probe
-    from tools.scaling_bench import run_level
-
-    n_low, n_high = 2, 8
-    srep = int(os.environ.get("SPARK_GRAFT_SCALING_REP", "8"))
-    # quick pairs are ~60% of a full pair's wall-clock, so the cap is
-    # per-ATTEMPT generous; the budget is the real bound
-    max_pairs = int(os.environ.get("SPARK_GRAFT_SCALING_PAIRS", "8"))
-    budget_s = int(os.environ.get("SPARK_GRAFT_SCALING_BUDGET", "1200"))
-    gate_eff = float(os.environ.get("SPARK_GRAFT_PROBE_GATE_EFF", "0.70"))
-    gate_bw = float(os.environ.get("SPARK_GRAFT_PROBE_GATE_BW", "18.0"))
-    wait_s = float(os.environ.get("SPARK_GRAFT_PROBE_WAIT", "30"))
-    pair_cost_est = 240.0  # observed ~3-4 min per best-of-2 x 2-leg pair
-
-    t_start = time.perf_counter()
-    pairs: list[dict] = []
-    probe_log: list[dict] = []
-    errors: list[str] = []
-
-    def elapsed() -> float:
-        return time.perf_counter() - t_start
-
-    def run_pair(hc_before: dict, n_runs: int = 2, kind: str = "full") -> float | None:
-        try:
-            low = run_level(n_low, sf_dir, srep, n_runs=n_runs)
-            high = run_level(n_high, sf_dir, srep, n_runs=n_runs)
-        except Exception as e:  # noqa: BLE001 — record, keep the artifact
-            errors.append(f"{type(e).__name__}: {e}"[:300])
-            return None
-        eff = (high["rows_per_sec"] / low["rows_per_sec"]) / (n_high / n_low)
-        try:
-            hc_after = probe(n_low, n_high, seconds=3.0)
-        except Exception as e:  # noqa: BLE001
-            hc_after = {"error": f"{type(e).__name__}: {e}"[:200]}
-        ceff = [
-            h["memcpy_efficiency"]
-            for h in (hc_before, hc_after)
-            if h.get("memcpy_efficiency")
-        ]
-        ceiling = round(sum(ceff) / len(ceff), 3) if ceff else None
-        pairs.append(
-            {
-                "kind": kind,  # quick = 1 timed run/leg (fits short windows)
-                "low": low,
-                "high": high,
-                "efficiency": round(eff, 3),
-                "probe_before": hc_before,
-                "probe_after": hc_after,
-                "window_ceiling": ceiling,
-                "eff_vs_ceiling": round(eff / ceiling, 3) if ceiling else None,
-            }
-        )
-        return eff
-
-    def gate_met() -> bool:
-        # quick pairs scout; the artifact's ≥0.8 claim rests on a full pair
-        return any(
-            p["efficiency"] >= 0.8 and p["kind"] != "quick" for p in pairs
-        )
-
-    while elapsed() < budget_s and len(pairs) < max_pairs:
-        if gate_met():
-            break  # north rule met in the artifact itself — stop hunting
-        try:
-            hc = probe(n_low, n_high, seconds=3.0)
-            hc["at_s"] = round(elapsed(), 1)
-            probe_log.append(
-                {k: hc[k] for k in ("at_s", "memcpy_gbps_high", "memcpy_efficiency")}
-            )
-        except Exception as e:  # noqa: BLE001
-            errors.append(f"probe: {type(e).__name__}: {e}"[:200])
-            time.sleep(wait_s)
-            continue
-        capable = (
-            hc["memcpy_efficiency"] >= gate_eff and hc["memcpy_gbps_high"] >= gate_bw
-        )
-        # fallback: never leave the artifact pairless — fire ungated when
-        # the remaining budget can fit only one more pair
-        last_chance = not pairs and budget_s - elapsed() < 1.5 * pair_cost_est
-        # upgrade: if the only pair(s) so far ran in a garbage window
-        # (ceiling < 0.5 — the host was essentially stalled), a merely
-        # decent window is still a strictly better measurement
-        ceilings = [p["window_ceiling"] or 0.0 for p in pairs]
-        upgrade = (
-            bool(pairs)
-            and max(ceilings) < 0.5
-            and hc["memcpy_efficiency"] >= 0.5
-            and budget_s - elapsed() > 1.2 * pair_cost_est
-        )
-        # second strike tier (round 5): the pipeline repeatedly measures
-        # 1.0-1.1x of its window's memcpy ceiling, so even a DECENT window
-        # (0.55+ ceiling at useful absolute bandwidth) can yield a >=0.8
-        # pair — strike those too while budget is plentiful, rather than
-        # idling until a rare fully-capable window
-        decent = (
-            hc["memcpy_efficiency"] >= 0.55
-            and hc["memcpy_gbps_high"] >= 12.0
-            and budget_s - elapsed() > 1.2 * pair_cost_est
-        )
-        if hc["memcpy_efficiency"] >= 0.8 and hc["memcpy_gbps_high"] >= gate_bw:
-            # STRONG window: fire the FULL pair immediately.  Measured both
-            # ways: r4's 0.913-ceiling window died before the quick-scout's
-            # confirm pair could finish (0.837 quick, unconfirmable); r5's
-            # 0.851 window got a direct full pair = 0.805 captured.  The
-            # quick-scout detour costs the exact windows that can clear the
-            # gate — scouting only pays in the 0.55-0.8 ceiling band.
-            run_pair(hc, n_runs=2, kind="full")
-        elif capable or decent:
-            # mid window, decaying in ~2-4 min (measured mid-pair ceiling
-            # drops of 0.73 -> 0.59): strike with a QUICK pair (one timed
-            # run per leg, ~60% the wall-clock) and only spend a full
-            # confirm pair if the quick one lands near the gate
-            eff = run_pair(hc, n_runs=1, kind="quick")
-            if eff is not None and eff >= 0.75:
-                try:
-                    hc2 = probe(n_low, n_high, seconds=3.0)
-                except Exception:  # noqa: BLE001
-                    hc2 = hc
-                run_pair(hc2, n_runs=2, kind="confirm")
-        elif last_chance or upgrade:
-            run_pair(hc)
-        else:
-            time.sleep(min(wait_s, max(budget_s - elapsed(), 0)))
-
-    if not pairs:  # every window failed or budget consumed by errors
-        try:
-            run_pair(probe(n_low, n_high, seconds=3.0))
-        except Exception as e:  # noqa: BLE001
-            errors.append(f"final: {type(e).__name__}: {e}"[:200])
-
-    out: dict = {
-        "core_ratio": n_high / n_low,
-        "pinned": os.path.exists("/usr/bin/taskset"),
-        "probe_gate": {"min_efficiency": gate_eff, "min_gbps_high": gate_bw},
-        "probe_log": probe_log,
-        "hunt_seconds": round(elapsed(), 1),
-    }
-    if errors:
-        out["errors"] = errors
-    if not pairs:
-        return out
-
-    effs = sorted(p["efficiency"] for p in pairs)
-    full_effs = [p["efficiency"] for p in pairs if p["kind"] != "quick"]
-    # the ≥0.8 claim rests on full (best-of-2-per-leg) pairs; quick scout
-    # pairs still count toward the ceiling-relative evidence.  When no full
-    # pair ever landed, the best quick pair is reported with an explicit
-    # "quick-only" basis and can NEVER set passed_absolute (a 1-timed-run
-    # leg is too noisy to carry the north-rule claim).
-    best_full = max(full_effs) if full_effs else None
-    best = best_full if best_full is not None else max(effs)
-    vs_ceiling = [p["eff_vs_ceiling"] for p in pairs if p["eff_vs_ceiling"]]
-    best_vs_ceiling = max(vs_ceiling) if vs_ceiling else None
-    passed_abs = best_full is not None and best_full >= 0.8
-    out.update(
-        {
-            "pairs": pairs,
-            "rows": pairs[0]["low"]["rows"],
-            "best_pair_efficiency": best,
-            "best_pair_basis": "full" if best_full is not None else "quick-only",
-            "median_efficiency": effs[len(effs) // 2]
-            if len(effs) % 2
-            else round((effs[len(effs) // 2 - 1] + effs[len(effs) // 2]) / 2, 3),
-            "all_efficiencies": effs,
-            # the gate verdict the artifact carries (north rule >= 0.8 at
-            # N -> 4N cores; ceiling-relative >= 1.0 = host-bound, not
-            # plan-bound — see BENCH.md "Scaling")
-            "gate": {
-                "threshold": 0.8,
-                "passed_absolute": passed_abs,
-                "best_eff_vs_ceiling": best_vs_ceiling,
-                "passed_ceiling_relative": bool(
-                    best_vs_ceiling and best_vs_ceiling >= 1.0
-                ),
-                "gate_basis": "absolute" if passed_abs else "ceiling-relative",
-                # context for the ceiling-relative reading: a very low
-                # ceiling means the host offered almost no scaling headroom
-                # in ANY window of the hunt (see probe_log)
-                "window_ceilings": [p["window_ceiling"] for p in pairs],
-            },
-        }
-    )
-    return out
+        result["scaling"] = scaling.compact(sp, os.path.basename(sidecar))
+    print(json.dumps(result))
 
 
 if __name__ == "__main__":

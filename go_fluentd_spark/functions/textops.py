@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 _DOLLAR_RE = re.compile(r"\$\{([^}]+)\}")
 _PCT_RE = re.compile(r"%\{([^}]+)\}")
@@ -97,32 +97,6 @@ def replace_str_by_msg(tpl: str, df_cols: list[str], tag_col: str = "tag", id_co
     return F.concat(*parts) if parts else F.lit(tpl)
 
 
-def flatten_struct(df: DataFrame, delimiter: str = "__") -> DataFrame:
-    """FlattenMap (``library/utils.go:75-85``; golden ``utils_test.go:11-54``):
-    nested struct columns are recursively flattened to ``a__b`` top-level
-    columns.  Schema-level only — no row work at all."""
-    from pyspark.sql import types as T
-
-    def expand(prefix: str, schema: T.StructType) -> list[Column]:
-        out: list[Column] = []
-        for f in schema.fields:
-            name = f"{prefix}.`{f.name}`" if prefix else f"`{f.name}`"
-            flat = f"{prefix.replace('`', '')}{delimiter}{f.name}" if prefix else f.name
-            if isinstance(f.dataType, T.StructType):
-                out.extend(expand(name.replace("`", ""), f.dataType))
-            else:
-                out.append(F.col(name).alias(flat.replace(".", delimiter)))
-        return out
-
-    cols: list[Column] = []
-    for f in df.schema.fields:
-        if isinstance(f.dataType, T.StructType):
-            cols.extend(expand(f.name, f.dataType))
-        else:
-            cols.append(F.col(f"`{f.name}`"))
-    return df.select(cols)
-
-
 def flatten_json_map(c: Column, delimiter: str = "__", max_depth: int = 3) -> Column:
     """FlattenMap over a DYNAMIC JSON payload (``library/utils.go:75-85``,
     called from ``parser_f.go:109`` and ``http.go:206``): parse a JSON-object
@@ -178,9 +152,3 @@ def flatten_json_map(c: Column, delimiter: str = "__", max_depth: int = 3) -> Co
             to_map_last_wins(F.flatten(F.transform(F.map_entries(m), expand))),
         )
     return m
-
-
-def env_substitute(s: str, env: str) -> str:
-    """``{env}`` substitution at plan-build time (``library/utils.go`` env
-    replace; table-driven golden ``utils_test.go:112-135``)."""
-    return s.replace("{env}", env)

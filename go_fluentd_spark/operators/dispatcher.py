@@ -12,6 +12,8 @@ in one job partitioned by (sink, bucket) instead.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from go_fluentd_spark.config import MUST_INCLUDE_FIELDS, PipelineConfig, sink_tag_rows
@@ -98,22 +100,17 @@ def write_sinks(
     cfg: PipelineConfig,
     out_dir: str,
     salt_buckets: int = 0,
-    writer=None,
 ) -> dict[str, str]:
-    """Physical fan-out: per-sink tables through the ``sources.writer`` seam
-    — default :class:`ParquetDirWriter` (atomic-by-directory, see
-    plans/manifest.py for commits); pass ``IcebergWriter(catalog)`` on a
-    cluster with the Iceberg runtime and NOTHING else changes.
+    """Physical fan-out: one ``out_dir/sink=<name>`` parquet table per sink,
+    partitioned by tag, overwritten whole.  The manifested run
+    (plans/manifest.py) does not use it: it writes bucketed tables with
+    commits in one job.
 
     One cached parsed frame, N filtered writes (producer.go:223-329).  Hot-tag
     skew (one tag can be ~100% of traffic, quickstart.md:122-127) is defused
     by salting the repartition key: (tag, pmod(xxhash64(doc_id), S)) — the
     explicit skew handling required at 10^12-row scale.
     """
-    from go_fluentd_spark.sources.writer import ParquetDirWriter
-
-    if writer is None:
-        writer = ParquetDirWriter(out_dir)
     df = df.persist()
     paths: dict[str, str] = {}
     try:
@@ -143,7 +140,8 @@ def write_sinks(
                     F.col("tag"),
                     F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)),
                 )
-            paths[sink.name] = writer.write(part, sink.name, ("tag",))
+            paths[sink.name] = os.path.join(out_dir, f"sink={sink.name}")
+            part.write.mode("overwrite").partitionBy("tag").parquet(paths[sink.name])
     finally:
         df.unpersist()
     return paths

@@ -1,22 +1,16 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary`` columns
 with typed metadata, processed by Arrow-batched ``mapInPandas`` UDFs.
 
-The Spark-side plumbing (schema, partitioning, UDF signatures, batch shapes)
-is real and tested.  Codecs:
+The codecs REALLY decode three standard container formats with the Python
+stdlib — BMP (BITMAPINFOHEADER parse via ``struct``), WAV (RIFF/PCM via
+``wave``), and MP4 metadata (ISO-BMFF box walk: ftyp/moov/mvhd/tkhd ->
+duration, track dimensions; mdat -> deterministic feature) — extracting
+true geometry and an 8-dim feature.  Pixel-level decode of real video
+CODECS would need ffmpeg, which the project does not depend on; container
+METADATA does not, which is what 100 TB curation filters actually key on.
 
-- ``decoder="real"`` REALLY decodes three standard container formats with
-  the Python stdlib — BMP (BITMAPINFOHEADER parse via ``struct``), WAV
-  (RIFF/PCM via ``wave``), and MP4 metadata (ISO-BMFF box walk:
-  ftyp/moov/mvhd/tkhd -> duration, track dimensions; mdat -> deterministic
-  feature) — extracting true geometry and an 8-dim feature.  Pixel-level
-  decode of real video CODECS would need ffmpeg (absent here); container
-  METADATA does not, which is what 100 TB curation filters actually key on.
-- ``decoder="fake"`` is the deterministic stand-in (dimensions from the
-  payload hash) for corpora whose payloads are arbitrary blobs.
-
-``pack_media`` builds arbitrary-blob payloads from ``documents``;
-``pack_media_real`` synthesizes REAL BMP/WAV containers (deterministic
-per-doc geometry) so the real decoder round-trips end-to-end in tests.
+``pack_media_real`` synthesizes REAL BMP/WAV/MP4 containers (deterministic
+per-doc geometry) so the decoder round-trips end-to-end.
 
 Scale design: binary payloads never shuffle — decode/feature steps are
 narrow ``mapInPandas`` passes; only the (small) extracted features flow into
@@ -26,7 +20,6 @@ memory for large blobs; for very large media use per-row files + pointers.
 
 from __future__ import annotations
 
-import hashlib
 import io
 import struct
 import wave
@@ -53,30 +46,6 @@ MEDIA_SCHEMA = T.StructType(
         ),
     ]
 )
-
-
-def pack_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build a media table from ``documents`` (payload = utf8 bytes of text —
-    a deterministic opaque blob standing in for real image/audio bytes)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    kind = (
-        F.when(F.col("doc_id") % 3 == 0, "image")
-        .when(F.col("doc_id") % 3 == 1, "audio")
-        .otherwise("video")
-    )
-    return d.select(
-        F.concat(F.lit("m"), F.col("doc_id").cast("string")).alias("media_id"),
-        kind.alias("kind"),
-        F.encode("text", "utf-8").alias("payload"),
-        F.struct(
-            F.when(kind == "image", "image/png")
-            .when(kind == "audio", "audio/wav")
-            .otherwise("video/mp4")
-            .alias("mime"),
-            F.length(F.encode("text", "utf-8")).cast("long").alias("n_bytes"),
-            F.col("source").alias("origin"),
-        ).alias("meta"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -248,68 +217,6 @@ def _decode_bmp(payload: bytes) -> tuple[int, int, int, list[float]]:
     return width, abs(height), 1, feature
 
 
-def _resize_bmp(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """REAL nearest-neighbour resize of a 24-bit BMP, stdlib-only: sample
-    source pixels on the integer grid and re-encode a conforming container
-    (same layout _make_bmp writes).  Resizing to the source geometry is the
-    identity (bit-exact round trip — pinned by pytest)."""
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    data_off = struct.unpack_from("<I", payload, 10)[0]
-    width, height = struct.unpack_from("<ii", payload, 18)[:2]
-    height = abs(height)
-    row_len = (width * 3 + 3) // 4 * 4
-    px = payload[data_off:]
-    out_row_len = (out_w * 3 + 3) // 4 * 4
-    out = bytearray()
-    for oy in range(out_h):
-        sy = oy * height // out_h
-        row = px[sy * row_len : sy * row_len + width * 3]
-        orow = bytearray()
-        for ox in range(out_w):
-            sx = ox * width // out_w
-            orow += row[sx * 3 : sx * 3 + 3]
-        orow += b"\x00" * (out_row_len - out_w * 3)
-        out += orow
-    data = bytes(out)
-    dib = struct.pack(
-        "<IiiHHIIiiII", 40, out_w, out_h, 1, 24, 0, len(data), 2835, 2835, 0, 0
-    )
-    header = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(data), 0, 0, 14 + 40)
-    return header + dib + data
-
-
-def resize_images(df: DataFrame, out_w: int = 16, out_h: int = 16) -> DataFrame:
-    """Image resize over the binary media column (the brief's resize step):
-    nearest-neighbour downsample of every image row's BMP payload to
-    (out_w, out_h), re-encoded as a real container so downstream decode /
-    feature steps run unchanged on the resized table.  Narrow mapInPandas —
-    binary payloads never shuffle; at scale this is the thumbnailing pass
-    before feature extraction."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.StringType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (r.media_id, out_w, out_h, _resize_bmp(bytes(r.payload), out_w, out_h))
-                for r in pdf.itertuples(index=False)
-            ]
-            yield pd.DataFrame(rows, columns=["media_id", "width", "height", "payload"])
-
-    return (
-        df.filter(F.col("kind") == "image")
-        .select("media_id", "payload")
-        .mapInPandas(run, schema)
-    )
-
-
 def _decode_wav(payload: bytes) -> tuple[int, int, int, list[float]]:
     with wave.open(io.BytesIO(payload), "rb") as w:
         framerate, nchannels, nframes = w.getframerate(), w.getnchannels(), w.getnframes()
@@ -324,7 +231,7 @@ def _decode_wav(payload: bytes) -> tuple[int, int, int, list[float]]:
     return framerate, nchannels, nframes, feature
 
 
-def _real_decode(payload: bytes, kind: str) -> tuple[int, int, int, list[float]]:
+def _decode(payload: bytes, kind: str) -> tuple[int, int, int, list[float]]:
     if kind == "image":
         return _decode_bmp(payload)
     if kind == "audio":
@@ -379,33 +286,17 @@ DECODED_SCHEMA = T.StructType(
 )
 
 
-def _fake_decode(payload: bytes, kind: str) -> tuple[int, int, int, list[float]]:
-    """Deterministic stand-in for a codec: dimensions + an 8-dim feature
-    vector derived from the payload digest."""
-    h = hashlib.md5(payload).digest()
-    width = 64 + h[0]
-    height = 64 + h[1]
-    n_frames = 1 if kind == "image" else 1 + h[2] % 64
-    feature = [round(b / 255.0, 4) for b in h[3:11]]
-    return width, height, n_frames, feature
-
-
-def decode_features(df: DataFrame, decoder: str = "fake") -> DataFrame:
+def decode_features(df: DataFrame) -> DataFrame:
     """Decode + feature-extract via mapInPandas (Arrow batches; the codec
     runs once per row inside the batch loop — container parsing is
-    inherently per-row).  ``decoder="real"`` parses BMP (struct), WAV
-    (wave), and MP4 metadata (ISO-BMFF box walk — v0/v1 boxes, 64-bit
-    largesize) with the stdlib; only pixel-level video CODEC decode would
-    need ffmpeg.  ``decoder="fake"`` is the hash stand-in for arbitrary
-    blobs."""
-    decode = _real_decode if decoder == "real" else (
-        lambda payload, kind: _fake_decode(payload, kind)
-    )
+    inherently per-row).  Parses BMP (struct), WAV (wave), and MP4 metadata
+    (ISO-BMFF box walk — v0/v1 boxes, 64-bit largesize) with the stdlib;
+    only pixel-level video CODEC decode would need ffmpeg."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = [
-                (r.media_id, r.kind, *decode(bytes(r.payload), r.kind))
+                (r.media_id, r.kind, *_decode(bytes(r.payload), r.kind))
                 for r in pdf.itertuples(index=False)
             ]
             yield pd.DataFrame(
@@ -418,7 +309,7 @@ def decode_features(df: DataFrame, decoder: str = "fake") -> DataFrame:
 
 def media_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-class oracle query for the REAL codecs: ``pack_media_real`` ->
-    ``decode_features(decoder="real")``, exposing decoded geometry plus the
+    ``decode_features``, exposing decoded geometry plus the
     8-dim feature quantized to ints (x10000).  The DuckDB twin
     (``oracle_dataprep.q_media_geometry``) recomputes EXPECTED geometry and
     features from the same doc_id arithmetic the synthesizer uses
@@ -429,7 +320,7 @@ def media_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Python round, half-even) and stores float32; casting back to double and
     re-rounding recovers the intended 4-decimal value (float32 error ~1e-8
     << 5e-5), and x10000 as BIGINT makes the CSV engine-format-proof."""
-    dec = decode_features(pack_media_real(spark, sf_dir), decoder="real")
+    dec = decode_features(pack_media_real(spark, sf_dir))
     fq = F.transform(
         "feature",
         lambda x: F.round(F.round(x.cast("double"), 4) * 10000, 0).cast("bigint"),
@@ -441,22 +332,4 @@ def media_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("height").cast("bigint").alias("height"),
         F.col("n_frames").cast("bigint").alias("n_frames"),
         F.array_join(fq, ",").alias("feature_q_csv"),
-    )
-
-
-def frame_sample(df: DataFrame, every_n: int = 8) -> DataFrame:
-    """Video frame sampling stand-in: split the payload into fixed-size
-    chunks ("frames") and keep every n-th — the partition/batch shape of a
-    real ffmpeg sampler, pure Column expressions."""
-    chunk = 16
-    n_chunks = F.greatest((F.length("payload") / chunk).cast("int"), F.lit(1))
-    idx = F.filter(
-        F.sequence(F.lit(0), n_chunks - 1), lambda i: i % every_n == 0
-    )
-    return df.filter(F.col("kind") == "video").select(
-        "media_id",
-        F.transform(
-            idx, lambda i: F.substring(F.col("payload"), i * chunk + 1, chunk)
-        ).alias("frames"),
-        F.size(idx).alias("n_sampled"),
     )

@@ -1,6 +1,7 @@
 """Post filters (reference ``internal/postfilters/``): the last field surgery
 before the producer.  Chain order in the reference: Default first
-(``postfilters/pipeline.go:84-126``), then per-tag plugins.
+(``postfilters/pipeline.go:84-126``), then per-tag plugins.  Of the per-tag
+plugins only FieldsFilter is restated; the pipeline runs none of them.
 """
 
 from __future__ import annotations
@@ -27,19 +28,6 @@ def post_default(df: DataFrame, cfg: PipelineConfig, msg_cols: list[str] | None 
         if c not in keep
     }
     return df.withColumns(updates)
-
-
-def forward_tag_rewriter(df: DataFrame, tag_key_col: str = "msg_tag", only_tag: str = "forward-wechat") -> DataFrame:
-    """ForwardTagRewriterFilter (``forward_tag_rewriter.go:35-44``):
-    tag = base(tag) + "." + env(Message[tag_key]) — recover the env from the
-    payload for forwarded messages."""
-    applies = F.split_part(F.col("tag"), F.lit("."), F.lit(1)) == only_tag
-    rebuilt = F.concat_ws(
-        ".",
-        F.split_part(F.col("tag"), F.lit("."), F.lit(1)),
-        F.split_part(F.col(tag_key_col), F.lit("."), F.lit(2)),
-    )
-    return df.withColumn("tag", F.when(applies & F.col(tag_key_col).isNotNull(), rebuilt).otherwise(F.col("tag")))
 
 
 def fields_filter(
@@ -85,20 +73,4 @@ def fields_filter(
         for c in exclude_fields:
             if c in df.columns:
                 df = df.withColumn(c, F.when(~applies, F.col(c)))
-    return df
-
-
-def custom_bigdata(df: DataFrame, ts_col: str = "ts", vin_col: str = "vin") -> DataFrame:
-    """CustomBigDataFilter (``custom_bigdata.go:50-71``):
-    rowkey = vin + "_" + unix(@timestamp); time-parse failure => drop."""
-    unix = F.unix_timestamp(
-        F.to_timestamp(F.col(ts_col), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
-    )
-    df = df.withColumn(
-        "rowkey",
-        F.when(
-            F.col(vin_col).isNotNull() & unix.isNotNull(),
-            F.concat_ws("_", F.col(vin_col), unix.cast("string")),
-        ),
-    )
     return df

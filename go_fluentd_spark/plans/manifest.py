@@ -127,13 +127,15 @@ class ManifestedRun:
             .parquet(self.manifest_dir)
         )
 
-    def committed_buckets(self, input_sig: str, n_sinks: int) -> list[int]:
-        """Buckets whose EVERY sink RESOLVED (commit-collector rule,
-        producer.go:161-220): 'committed' = delivered; 'discarded' = the
-        sink's is_discard_when_blocked dropped the batch after retries —
+    def committed_buckets(self, input_sig: str, sinks: list[str]) -> list[int]:
+        """Buckets where EVERY one of ``sinks`` RESOLVED (commit-collector
+        rule, producer.go:161-220): 'committed' = delivered; 'discarded' =
+        the sink's is_discard_when_blocked dropped the batch after retries —
         the reference marks the message committed either way, the loss is
-        visible only in the audit row.  Reads only this input's manifest
-        directory: one scan stage, the all-sinks test on the driver."""
+        visible only in the audit row.  The test is by sink name, not by
+        count, so a renamed or added sink leaves the bucket to do.  Reads
+        only this input's manifest directory: one scan stage, the all-sinks
+        test on the driver."""
         path = self.input_manifest_dir(input_sig)
         if not holds_parquet(self.spark, path):
             return []  # no commit of this input: no Spark job
@@ -149,7 +151,8 @@ class ManifestedRun:
             .collect()
         ):
             resolved.setdefault(bucket, set()).add(sink)
-        return sorted(b for b, s in resolved.items() if len(s) >= n_sinks)
+        want = set(sinks)
+        return sorted(b for b, s in resolved.items() if want <= s)
 
     # -- run ---------------------------------------------------------------
     def run(
@@ -187,7 +190,7 @@ class ManifestedRun:
         input_sig = self.input_sig(sf_dir)
         sinks = [s.name for s in cfg.sinks]
 
-        done = set(self.committed_buckets(input_sig, len(sinks)))
+        done = set(self.committed_buckets(input_sig, sinks))
         todo = [b for b in range(self.n_buckets) if b not in done]
         if not todo:  # every bucket resolved: the manifest read was the run
             return {"run_id": run_id, "buckets": 0, "rows": 0, "skipped": len(done)}

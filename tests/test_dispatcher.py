@@ -85,33 +85,3 @@ def test_every_synth_family_reaches_its_sink(spark, sf_dir):
     }
     missing = expected - got
     assert not missing, f"families missing from their sinks: {missing}"
-
-
-def test_write_sinks_writer_seam(spark, sf_dir, tmp_path):
-    """The physical write goes through the sources.writer seam: a custom
-    writer observes one call per sink with the expected frame; swapping in
-    IcebergWriter would be the same one-liner (its table resolution is pure
-    and testable without the runtime)."""
-    from go_fluentd_spark.config import DEFAULT_CONFIG
-    from go_fluentd_spark.operators.dispatcher import write_sinks
-    from go_fluentd_spark.plans import pipeline as P
-    from go_fluentd_spark.sources.writer import IcebergWriter, ParquetDirWriter
-
-    calls = []
-
-    class Recorder(ParquetDirWriter):
-        def write(self, df, sink, partition_cols=("tag",)):
-            calls.append((sink, partition_cols, df.count()))
-            return f"recorded://{sink}"
-
-    enr = P.enriched(spark, sf_dir).limit(200)
-    paths = write_sinks(
-        spark, enr, DEFAULT_CONFIG, str(tmp_path), writer=Recorder(str(tmp_path))
-    )
-    assert set(paths) == {s.name for s in DEFAULT_CONFIG.sinks}
-    assert all(p.startswith("recorded://") for p in paths.values())
-    assert {c[0] for c in calls} == set(paths) and all(
-        c[1] == ("tag",) for c in calls
-    )
-    iw = IcebergWriter("prod_catalog")
-    assert iw.table_name("es_general") == "prod_catalog.pipeline.es_general"

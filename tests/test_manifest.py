@@ -62,7 +62,7 @@ def test_crash_before_commit_then_resume(spark, sf_dir, tmp_path):
     # crash after the first sink write, BEFORE any manifest commit
     with pytest.raises(RuntimeError, match="injected failure"):
         m.run(sf_dir, fail_after_sinks=1)
-    assert m.committed_buckets(m.input_sig(sf_dir), 3) == []  # nothing committed
+    assert m.committed_buckets(m.input_sig(sf_dir), SINKS) == []  # nothing committed
 
     s = m.run(sf_dir)  # resume reprocesses everything, idempotently
     assert s["buckets"] == 8
@@ -110,7 +110,7 @@ def test_discard_when_blocked_commits_with_loss(spark, sf_dir, tmp_path):
     att_es, rows_es = by[("es_general", "committed")]
     assert att_es == 3 and rows_es > 0  # transient fault absorbed by retries
     # every bucket RESOLVED (committed or discarded) -> rerun is a noop
-    assert len(m.committed_buckets(m.input_sig(sf_dir), 3)) == 8
+    assert len(m.committed_buckets(m.input_sig(sf_dir), SINKS)) == 8
     s2 = m.run(sf_dir, cfg=cfg)
     assert s2["buckets"] == 0 and s2["skipped"] == 8
 
@@ -125,7 +125,7 @@ def test_blocked_nondiscard_sink_stays_uncommitted(spark, sf_dir, tmp_path):
     m = ManifestedRun(spark, str(tmp_path / "out"), n_buckets=8)
     with pytest.raises(RuntimeError, match="stays uncommitted"):
         m.run(sf_dir, sink_faults={"kafka_cp": 99})
-    assert m.committed_buckets(m.input_sig(sf_dir), 3) == []
+    assert m.committed_buckets(m.input_sig(sf_dir), SINKS) == []
     s = m.run(sf_dir)  # resume: full re-delivery, idempotent
     assert s["buckets"] == 8
     assert sink_rows(m, "es_general") == expected
@@ -143,6 +143,23 @@ def test_partial_commit_skips_committed_buckets(spark, sf_dir, tmp_path):
     assert s2["skipped"] == 8 and s2["buckets"] == 0
     for s in expected:
         assert sink_rows(m, s) == expected[s]
+
+
+def test_renamed_sink_is_written_on_rerun(spark, sf_dir, tmp_path, reference):
+    """Resume resolves a bucket by WHICH sinks committed, not how many: a
+    rerun after renaming a sink recomputes every bucket, and the renamed
+    sink's table holds the rows the old name got (producer.go:161-220)."""
+    m = ManifestedRun(spark, str(tmp_path / "out"), n_buckets=8)
+    assert m.run(sf_dir)["buckets"] == 8
+    cfg = dataclasses.replace(DEFAULT_CONFIG)
+    cfg.sinks = [
+        dataclasses.replace(s, name="fluentd_backup_v2") if s.name == "fluentd_backup" else s
+        for s in DEFAULT_CONFIG.sinks
+    ]
+    s = m.run(sf_dir, cfg=cfg)
+    assert s["buckets"] == 8 and s["skipped"] == 0
+    assert sink_rows(m, "fluentd_backup_v2") == sink_rows(reference, "fluentd_backup")
+    assert m.run(sf_dir, cfg=cfg)["buckets"] == 0
 
 
 def test_empty_buckets_commit_and_rerun_is_noop(spark, sf_dir, tmp_path):
@@ -271,7 +288,7 @@ def test_real_write_failure_aborts_then_resume_redelivers(spark, sf_dir, tmp_pat
     m = ManifestedRun(spark, str(out), n_buckets=8)
     with pytest.raises(RuntimeError, match="stays uncommitted"):
         m.run(sf_dir, max_retries=1)
-    assert m.committed_buckets(m.input_sig(sf_dir), 3) == []
+    assert m.committed_buckets(m.input_sig(sf_dir), SINKS) == []
     blocker.unlink()
     assert m.run(sf_dir)["buckets"] == 8
     for sink in SINKS:
@@ -314,10 +331,12 @@ def test_input_sig_is_the_qualified_path_from_any_working_dir(
 def test_committed_buckets_matches_duckdb_oracle(spark, tmp_path, monkeypatch):
     """An adversarial manifest: duplicate committed rows from retries,
     discarded rows, a bucket missing one sink (with enough duplicate rows
-    to pass a row count), another input's rows in its own directory and one
-    in this input's, and a legacy flat file at the _manifest/ root that
-    would resolve every bucket.  The check equals DuckDB's GROUP BY over
-    the per-input files and scans only this input's directory."""
+    to pass a row count), rows of a renamed and of an added sink, another
+    input's rows in its own directory and one in this input's, and a legacy
+    flat file at the _manifest/ root that would resolve every bucket.  For
+    the default sinks, a renamed one and an added one, the check equals
+    DuckDB's GROUP BY over the per-input files, counting only the config's
+    sinks; it scans only this input's directory."""
     import duckdb
     from pyspark.sql.classic.dataframe import DataFrame
 
@@ -342,6 +361,8 @@ def test_committed_buckets_matches_duckdb_oracle(spark, tmp_path, monkeypatch):
                                       (5, es), (5, kafka), (5, backup)])
         + rows("r2", other, "committed", [(1, backup), (3, backup)])  # a key collision
     ))
+    renamed, added = "fluentd_backup_v2", "audit"
+    commit(mine, rows("r3", sig, "committed", [(1, renamed), (5, added)]))
     commit(m.input_manifest_dir(other), rows(
         "o1", other, "committed", [(b, k) for b in range(8) for k in SINKS]
     ))
@@ -354,22 +375,27 @@ def test_committed_buckets_matches_duckdb_oracle(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         DataFrame, "collect", lambda self: (scans.append(self.inputFiles()), collect(self))[1]
     )
-    got = m.committed_buckets(sig, len(SINKS))
+    got = m.committed_buckets(sig, SINKS)
     monkeypatch.undo()
 
-    want = [
-        b for (b,) in duckdb.execute(
-            "SELECT bucket FROM read_parquet(?, hive_partitioning = false) "
-            "WHERE input_sig = ? AND state IN ('committed', 'discarded') "
-            "GROUP BY bucket HAVING count(DISTINCT sink) >= ? ORDER BY bucket",
-            [f"{tmp_path}/out/_manifest/input=*/*.parquet", sig, len(SINKS)],
-        ).fetchall()
-    ]
-    assert got == want == [0, 2, 5]
+    def want(sinks):
+        return [
+            b for (b,) in duckdb.execute(
+                "SELECT bucket FROM read_parquet(?, hive_partitioning = false) "
+                "WHERE input_sig = ? AND state IN ('committed', 'discarded') GROUP BY bucket "
+                f"HAVING count(DISTINCT sink) FILTER (WHERE sink IN ({', '.join('?' * len(sinks))})) = ? "
+                "ORDER BY bucket",
+                [f"{tmp_path}/out/_manifest/input=*/*.parquet", sig, *sinks, len(sinks)],
+            ).fetchall()
+        ]
+
+    assert got == want(SINKS) == [0, 2, 5]  # bucket 1 has 3 sinks, one not in the config
+    assert m.committed_buckets(sig, [es, kafka, renamed]) == want([es, kafka, renamed]) == [1]
+    assert m.committed_buckets(sig, SINKS + [added]) == want(SINKS + [added]) == [5]
     assert len(scans) == 1
     assert sorted(scans[0]) == sorted(
         f"file://{mine}/{f}" for f in os.listdir(mine) if f.endswith(".parquet")
     )
-    assert len(scans[0]) == 2
+    assert len(scans[0]) == 3
     # the inspection view still reads every row: both inputs' and the legacy file's
-    assert m.manifest().count() == 11 + 10 + 24 + 24
+    assert m.manifest().count() == 11 + 10 + 2 + 24 + 24

@@ -4,9 +4,7 @@ from pyspark.sql import functions as F
 
 from go_fluentd_spark.config import DEFAULT_CONFIG, PipelineConfig
 from go_fluentd_spark.operators.postfilter import (
-    custom_bigdata,
     fields_filter,
-    forward_tag_rewriter,
     post_default,
 )
 
@@ -21,19 +19,6 @@ def test_post_default_truncate_and_empty(spark):
     assert row.message == "abcde"
     assert row.level is None
     assert row.tag == "keepme.sit"  # routing cols untouched
-
-
-def test_forward_tag_rewriter(spark):
-    # forward_tag_rewriter.go:35-44: env recovered from payload tag
-    df = spark.createDataFrame(
-        [
-            ("forward-wechat.sit", "wechat.prod"),
-            ("app.spring.sit", "wechat.prod"),
-        ],
-        "tag string, msg_tag string",
-    )
-    out = {r.msg_tag + "/" + r.tag for r in forward_tag_rewriter(df).collect()}
-    assert out == {"wechat.prod/forward-wechat.prod", "wechat.prod/app.spring.sit"}
 
 
 def test_fields_filter_template_and_include(spark):
@@ -52,14 +37,3 @@ def test_fields_filter_template_and_include(spark):
     assert out.location == "31.2,121.5"
     assert out.extra is None  # excluded by include-list
     assert out.message == "m"
-
-
-def test_custom_bigdata_rowkey(spark):
-    # custom_bigdata.go:50-71: rowkey = vin + "_" + unix(@timestamp)
-    df = spark.createDataFrame(
-        [("V123", "2018-03-06T08:56:22.514000Z"), ("V456", None)],
-        "vin string, ts string",
-    )
-    rows = {r.vin: r.rowkey for r in custom_bigdata(df).collect()}
-    assert rows["V123"] == "V123_" + str(1520326582)
-    assert rows["V456"] is None

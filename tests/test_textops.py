@@ -4,9 +4,7 @@
 from pyspark.sql import functions as F
 
 from go_fluentd_spark.functions.textops import (
-    env_substitute,
     flatten_json_map,
-    flatten_struct,
     replace_str_by_msg,
     template_with_map,
 )
@@ -57,18 +55,6 @@ def test_pct_template_at_str_shape(spark):
     assert len(got) == 8
 
 
-def test_flatten_struct_golden(spark):
-    # library/utils_test.go:11-54: {"a":"1","b":{"c":2,"d":{"e":3}},"f":4}
-    df = spark.createDataFrame(
-        [("1", (2, (3,)), 4)],
-        "a string, b struct<c:int, d:struct<e:int>>, f int",
-    )
-    flat = flatten_struct(df)
-    assert set(flat.columns) == {"a", "b__c", "b__d__e", "f"}
-    row = flat.collect()[0]
-    assert (row.a, row.b__c, row.b__d__e, row.f) == ("1", 2, 3, 4)
-
-
 def test_flatten_json_map_golden(spark):
     # library/utils_test.go:11-54 map-in-map golden over a DYNAMIC payload:
     # {"a":"1","b":{"c":2,"d":{"e":3}},"f":4} flattens to a/b__c/b__d__e/f,
@@ -109,9 +95,3 @@ def test_flatten_json_map_colliding_keys_last_wins(spark):
     assert out[0] == {"a__b": "2"}   # flattened child came after the literal
     assert out[1] == {"a__b": "1"}   # literal came after the flattened child
     assert out[2] == {"x": "2"}
-
-
-def test_env_substitute():
-    # library/utils_test.go:112-135
-    assert env_substitute("app.spring.{env}", "sit") == "app.spring.sit"
-    assert env_substitute("no-env", "prod") == "no-env"
