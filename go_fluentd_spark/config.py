@@ -256,8 +256,10 @@ POST_MAX_LEN = 307_200  # default_f truncation, settings.yml:671
 
 
 # MustIncludeFileds (library/const.go:8-17) restated over our declared
-# schema: columns that survive ANY include-projection (@timestamp -> ts;
-# doc_id added as the row identity; container_name has no analogue here)
+# schema: columns that survive ANY include filter (@timestamp -> ts; doc_id
+# added as the row identity; container_name has no analogue here).
+# INTENTIONAL DEVIATION: tokens, the rebuild's payload, survives too, so
+# every sink table carries the token arrays the routed-row checks compare
 MUST_INCLUDE_FIELDS = (
     "tag",
     "ts",
@@ -266,6 +268,7 @@ MUST_INCLUDE_FIELDS = (
     "level",
     "datasource",
     "doc_id",
+    "tokens",
 )
 
 
@@ -276,9 +279,9 @@ class SinkConfig:
     # ("geely.prod") exactly like settings.yml sender tag lists (yml:463-561)
     tags: tuple[str, ...]
     kind: str = "es"  # es | kafka | fluentd | stdout
-    # FieldsFilter include list (fields.go:54-81): when set, the sink's
-    # physical write projects to include ∪ MUST_INCLUDE_FIELDS — a REAL
-    # select() (column pruning reaches the write), not per-row nulling
+    # FieldsFilter include list (fields.go:54-81): when set, the sink's rows
+    # are written with every column outside include ∪ MUST_INCLUDE_FIELDS
+    # NULL (dispatcher.write_fanout); the table keeps the full schema
     include_fields: tuple[str, ...] | None = None
     # per-sender drop-vs-retry policy (producer.go:309-325
     # is_discard_when_blocked; senders retry 3x then push to failchan,
@@ -310,8 +313,8 @@ SINKS: list[SinkConfig] = [
         ),
     ),
     # settings.yml:546-547 — tag cp goes to BOTH es_general and kafka_cp;
-    # the kafka sender marshals only the value fields, so its physical table
-    # projects to them (FieldsFilter include semantics, fields.go:54-81)
+    # the kafka sender marshals only the value fields, so its table holds
+    # NULL outside them (FieldsFilter include semantics, fields.go:54-81)
     SinkConfig(
         name="kafka_cp",
         kind="kafka",

@@ -52,9 +52,9 @@ def acceptor_chain(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """The full serial chain: spark -> spring -> default (controllor.go:183-245).
 
     Backpressure (``pipeline.go:158-180``) lives in the STREAMING variant,
-    not here: the throttle maps to source-side rate caps
-    (``streaming/kafka_source.py``) and the lossy drop-on-overload to
-    ``streaming/stream_pipeline.py::shed_overload``; a batch plan itself
-    never sheds (SURVEY.md §2.10).
+    not here: the throttle maps to the source-side rate cap
+    (``streaming/stream_pipeline.py::read_sequence_stream``) and the lossy
+    drop-on-overload to ``streaming/stream_pipeline.py::shed_overload``; a
+    batch plan itself never sheds (SURVEY.md §2.10).
     """
     return accept_whitelist(spring_retag(spark_filter(df, cfg), cfg), cfg)

@@ -2,46 +2,72 @@
 + ``producer.go:223-329`` + sender tag-sets ``senders/base.go:60-63``).
 
 A row is delivered to EVERY sink whose tag-set contains its tag; rows with no
-sink are auto-committed away (producer.go:251-255).  Restated as one inner
-broadcast join against the (sink, tag) membership dim — duplication across
-sinks falls out of join multiplicity.  ``write_sinks`` writes the sinks as N
-filtered writes from one cached frame (no join, each write's predicate
-pushed down); the manifested run (plans/manifest.py) writes the routed frame
-in one job partitioned by (sink, bucket) instead.
+sink are auto-committed away (producer.go:251-255).  ``route`` is the one
+routing expression: per sink, a WHEN over that sink's env-expanded tags
+(``config.sink_tag_rows``) yields the sink name, and the array of matches
+is exploded, so a row duplicates into every matching sink (cp -> 2) and a
+row matching none drops out, with no join and no dim.  ``write_fanout`` is
+the one sink writer: the manifested run (plans/manifest.py) and the
+stream's ``foreachBatch`` sink (streaming/stream_pipeline.py) both write
+every sink through it, in one dynamic-overwrite job partitioned by sink.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from go_fluentd_spark.config import MUST_INCLUDE_FIELDS, PipelineConfig, sink_tag_rows
-from go_fluentd_spark.session import local_table
-
-
-def sink_membership(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    return local_table(spark, sink_tag_rows(cfg.sinks, cfg.envs), "sink string, tag string")
 
 
 def route(spark: SparkSession, df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Logical fan-out: one row per (input row, matching sink)."""
-    dim = sink_membership(spark, cfg)
-    return df.join(F.broadcast(dim), "tag", "inner")
+    members: dict[str, list[str]] = {}
+    for sink, tag in sink_tag_rows(cfg.sinks, cfg.envs):
+        members.setdefault(sink, []).append(tag)
+    names = F.array(*[F.when(F.col("tag").isin(tags), F.lit(s)) for s, tags in members.items()])
+    return df.withColumn("sink", F.explode(F.filter(names, lambda s: s.isNotNull())))
 
 
 def route_counts(spark: SparkSession, df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """The per-sink/per-tag aggregate counters (dispacher.go:154-177,
     monitor.go:19-42) — the correctness gate's headline aggregate.
 
-    Round 6 (guide §2.3, aggregate before you multiply): counts are reduced
-    per TAG first — the sink fan-out join then duplicates |tags| aggregate
-    rows instead of every message row, and the count over a (sink, tag)
-    pair equals the tag's count exactly because membership rows are unique
-    per (sink, tag).  Same result, one row per matching membership."""
+    Aggregate before you multiply: counts are reduced per TAG first, and the
+    fan-out then duplicates |tags| aggregate rows instead of every message
+    row; a (sink, tag) pair's count is the tag's count."""
     per_tag = df.groupBy("tag").agg(F.count(F.lit(1)).alias("n"))
-    dim = sink_membership(spark, cfg)
-    return per_tag.join(F.broadcast(dim), "tag", "inner").select("sink", "tag", "n")
+    return route(spark, per_tag, cfg).select("sink", "tag", "n")
+
+
+def write_fanout(routed: DataFrame, cfg: PipelineConfig, out_dir: str, part: str) -> None:
+    """Physical fan-out: every sink of a ``route``d frame in ONE write, a
+    dynamic partition overwrite partitioned by ``(sink, part)`` into
+    ``out_dir``, so each sink's table is ``out_dir/sink=<name>/`` and a
+    rewrite replaces only the ``part`` partitions it holds (dynamic on this
+    write alone: a static overwrite of ``out_dir`` would delete every other
+    partition and whatever else lives there).
+
+    FieldsFilter (``fields.go:54-81`` + ``library/const.go:8-17``): in a row
+    of a sink with ``include_fields``, every column outside include ∪
+    ``MUST_INCLUDE_FIELDS`` is NULL, as a key the filter drops reads NULL in
+    a declared schema; the partition columns are never nulled.  Nulling per
+    row keeps one schema and so one write: a write per projected schema
+    would rerun the routed plan once per schema, and the sinks would no
+    longer read back as one table."""
+    keep = set(MUST_INCLUDE_FIELDS) | {"sink", part}
+    dropped_by = {
+        c: [s.name for s in cfg.sinks if s.include_fields and c not in keep | set(s.include_fields)]
+        for c in routed.columns
+    }
+    filtered = routed.withColumns(
+        {c: F.when(~F.col("sink").isin(sinks), F.col(c)) for c, sinks in dropped_by.items() if sinks}
+    )
+    (
+        filtered.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("sink", part)
+        .parquet(out_dir)
+    )
 
 
 def http_sink_bodies(
@@ -92,56 +118,3 @@ def http_sink_bodies(
             ).alias("body"),
         )
     )
-
-
-def write_sinks(
-    spark: SparkSession,
-    df: DataFrame,
-    cfg: PipelineConfig,
-    out_dir: str,
-    salt_buckets: int = 0,
-) -> dict[str, str]:
-    """Physical fan-out: one ``out_dir/sink=<name>`` parquet table per sink,
-    partitioned by tag, overwritten whole.  The manifested run
-    (plans/manifest.py) does not use it: it writes bucketed tables with
-    commits in one job.
-
-    One cached parsed frame, N filtered writes (producer.go:223-329).  Hot-tag
-    skew (one tag can be ~100% of traffic, quickstart.md:122-127) is defused
-    by salting the repartition key: (tag, pmod(xxhash64(doc_id), S)) — the
-    explicit skew handling required at 10^12-row scale.
-    """
-    df = df.persist()
-    paths: dict[str, str] = {}
-    try:
-        for sink in cfg.sinks:
-            # membership predicate: env-qualified tags match exactly, bare
-            # bases match all envs (settings.yml sender tag-list semantics)
-            conds = []
-            for t in sink.tags:
-                if any(t.endswith("." + e) for e in cfg.envs):
-                    conds.append(F.col("tag") == t)
-                else:
-                    conds.append(F.col("tag_base") == t)
-            pred = conds[0]
-            for c in conds[1:]:
-                pred = pred | c
-            part = df.filter(pred)
-            if sink.include_fields:
-                # FieldsFilter include projection (fields.go:54-81 +
-                # library/const.go:8-17): a REAL select — the written table
-                # contains exactly include ∪ MustIncludeFileds, and Catalyst
-                # prunes the dropped columns out of the upstream scan
-                keep = set(sink.include_fields) | set(MUST_INCLUDE_FIELDS)
-                part = part.select(*[c for c in part.columns if c in keep])
-            if salt_buckets:
-                part = part.repartition(
-                    spark.sparkContext.defaultParallelism,
-                    F.col("tag"),
-                    F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)),
-                )
-            paths[sink.name] = os.path.join(out_dir, f"sink={sink.name}")
-            part.write.mode("overwrite").partitionBy("tag").parquet(paths[sink.name])
-    finally:
-        df.unpersist()
-    return paths

@@ -11,13 +11,14 @@ The reference's guarantees restated for batch (SURVEY.md §2.3):
   its tag succeeded, ``producer.go:161-220``).
 - *fan-out* -> the producer sends each message to every sender whose tag
   set holds its tag (``producer.go:223-329``).  Here every pending sink is
-  written by ONE job per attempt, straight from the routed plan: a
-  dynamic-overwrite write partitioned by ``(sink, bucket)`` into
-  ``out_dir``, so each sink's table is ``out_dir/sink=<name>/`` with one
-  ``bucket=<b>`` directory per bucket.  One deviation: a real error from
-  that write fails the attempt for every sink in it, where the reference's
-  senders fail one by one.  Every sink here is a directory on the same
-  filesystem, so what fails one sink's files fails the others' too.
+  written by ONE job per attempt, straight from the routed plan:
+  ``dispatcher.write_fanout`` partitioned by ``(sink, bucket)`` into
+  ``out_dir``, FieldsFilter applied, so each sink's table is
+  ``out_dir/sink=<name>/`` with one ``bucket=<b>`` directory per bucket.
+  One deviation: a real error from that write fails the attempt for every
+  sink in it, where the reference's senders fail one by one.  Every sink
+  here is a directory on the same filesystem, so what fails one sink's
+  files fails the others' too.
 - *replay of uncommitted* -> the manifest is read first and committed
   buckets are dropped before any processing, as ``ProcessLegacyMsg``
   (``journal.go:210-307``) drops ids in the committed-id window
@@ -80,6 +81,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from go_fluentd_spark.config import DEFAULT_CONFIG, PipelineConfig
+from go_fluentd_spark.operators.dispatcher import write_fanout
 from go_fluentd_spark.plans import pipeline as P
 from go_fluentd_spark.session import hadoop_fs, holds_parquet, local_table
 
@@ -215,11 +217,7 @@ class ManifestedRun:
             ready = [s for s in pending if s not in errs]
             if ready:
                 try:
-                    # dynamic on THIS write: a static overwrite of out_dir
-                    # would delete _manifest/ and every other partition
-                    df.filter(F.col("sink").isin(ready)).write.mode("overwrite").option(
-                        "partitionOverwriteMode", "dynamic"
-                    ).partitionBy("sink", "bucket").parquet(self.out_dir)
+                    write_fanout(df.filter(F.col("sink").isin(ready)), cfg, self.out_dir, "bucket")
                     delivered += ready
                 except Exception as e:  # noqa: BLE001 — retry-or-policy below
                     errs.update(dict.fromkeys(ready, e))

@@ -1,10 +1,12 @@
 """Structured Streaming variant of the pipeline (SURVEY.md §2.10).
 
 The reference is a streaming daemon; the batch plan in ``plans/pipeline.py``
-is the primary restatement, but every stateless operator (ingest columns,
-acceptor chain, parser, enrich) is a plain DataFrame->DataFrame function and
-therefore applies UNCHANGED to a streaming DataFrame.  This module adds the
-two genuinely streaming-only pieces:
+is the primary restatement.  The stream runs a SHORTER chain than the
+batch: ingest columns -> concat -> acceptor chain -> parse -> ``msgid``.
+It runs no ``add_fields``, ``post_default`` or ``es_index`` (they would
+add the enrich dims' broadcasts to every trigger), and its sink tables hold
+no ``tokens`` or ``args_map``.  Its pieces are the batch's own
+DataFrame->DataFrame functions, plus the two genuinely streaming-only ones:
 
 - ``concat_sessions_streaming``: the multiline concator as a custom stateful
   operator (``applyInPandasWithState`` over n hash buckets of (tag,
@@ -14,10 +16,11 @@ two genuinely streaming-only pieces:
   ``internal/tagfilters/concator_f.go:64,91-111``) kept per session under a
   processing-time state timeout.  State persists in the checkpoint across
   restarts — the streaming twin of the WAL.
-- ``run_pipeline_stream``: readStream -> stateless chain -> ``foreachBatch``
-  fan-out writing per-sink directories + per-batch counts (the reference's
-  per-sender batching, ``internal/senders/*``; micro-batch = the batch/linger
-  window).
+- ``run_pipeline_stream``: readStream -> that chain -> ``foreachBatch``
+  sink: the batch's ``dispatcher.route`` and ``dispatcher.write_fanout``
+  partitioned by ``(sink, batch_id)``, plus per-batch counts (the
+  reference's per-sender batching, ``internal/senders/*``; micro-batch =
+  the batch/linger window).
 """
 
 from __future__ import annotations
@@ -35,6 +38,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from go_fluentd_spark.config import CONCAT_CONFIGS, DEFAULT_CONFIG, PipelineConfig
 from go_fluentd_spark.operators.acceptor import acceptor_chain
+from go_fluentd_spark.operators.dispatcher import route, write_fanout
 from go_fluentd_spark.operators.enrich import msgid
 from go_fluentd_spark.operators.parser import parse
 from go_fluentd_spark.session import hadoop_fs, holds_parquet, list_dir, local_table
@@ -75,11 +79,9 @@ _OUT_SCHEMA = T.StructType(
 def read_sequence_stream(
     spark: SparkSession, src_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """File-source stream of tokenized sequences (at scale: the Kafka source
-    — ``streaming/kafka_source.py`` — or Iceberg-incremental; same downstream
-    plan).  ``max_files_per_trigger`` is the file-source throttle knob (the
-    kafka source's ``maxOffsetsPerTrigger`` twin): rate-limits intake at the
-    source, the non-lossy analogue of the reference's token bucket
+    """File-source stream of tokenized sequences.  ``max_files_per_trigger``
+    is the file-source throttle knob: it rate-limits intake at the source,
+    the non-lossy analogue of the reference's token bucket
     (``acceptorfilters/pipeline.go:49-61``)."""
     reader = spark.readStream.schema(SEQ_SCHEMA)
     if max_files_per_trigger is not None:
@@ -460,7 +462,7 @@ def run_pipeline_stream(
     shed_max_per_tag: int | None = None,
 ):
     """readStream -> (stateful concat) -> stateless chain -> foreachBatch
-    per-sink writes + counts.  Returns the StreamingQuery (caller triggers
+    sink fan-out + counts.  Returns the StreamingQuery (caller triggers
     availableNow or continuous).  ``max_files_per_trigger`` throttles intake
     at the source (see read_sequence_stream); ``shed_max_per_tag`` arms the
     LOSSY drop-on-overload path (see shed_overload) — shed rows land in the
@@ -486,45 +488,7 @@ def run_pipeline_stream(
     df = parse(df.drop("tokens"), cfg)
     df = msgid(df, cfg)
 
-    # sink fan-out as ONE column expression: per sink, a WHEN over its tag
-    # conditions yields the sink name (NULL = no match); a row duplicates
-    # into every matching sink (cp -> 2), rows matching none drop out at the
-    # explode.  This turns K per-sink filtered writes (K job launches per
-    # micro-batch, each re-reading the persisted batch) into a SINGLE write
-    # partitioned by (sink, batch_id) — same on-disk layout
-    # (out/sink=<name>/batch_id=<n>), one job.  At cluster scale that is K-1
-    # fewer passes over every micro-batch plus K-1 fewer commit rounds.
-    sink_whens = []
-    for sink in cfg.sinks:
-        conds = None
-        for t in sink.tags:
-            c = (
-                (F.col("tag") == t)
-                if any(t.endswith("." + e) for e in cfg.envs)
-                else (F.col("tag_base") == t)
-            )
-            conds = c if conds is None else (conds | c)
-        sink_whens.append(F.when(conds, F.lit(sink.name)))
-
     stop_event = threading.Event()
-
-    def _write_fanout(bdf: DataFrame, batch_id: int) -> None:
-        fanned = (
-            bdf.withColumn(
-                "sink",
-                F.explode(
-                    F.filter(F.array(*sink_whens), lambda x: x.isNotNull())
-                ),
-            )
-            .drop("args_map")
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            fanned.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("sink", "batch_id")
-            .parquet(out_dir)
-        )
 
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
         # cooperative stop (see drain_and_stop): once the drain protocol has
@@ -555,6 +519,7 @@ def run_pipeline_stream(
         if stop_event.is_set():
             batch_df.count()
             return
+        batch_df = batch_df.drop("args_map").withColumn("batch_id", F.lit(batch_id))
         # every write below is idempotent per batch (foreachBatch is
         # at-least-once: a retry re-delivers the same batch_id, and dynamic
         # partition overwrite replaces that batch's partition instead of
@@ -568,7 +533,7 @@ def run_pipeline_stream(
             _write_batch_partition(shed, os.path.join(out_dir, "_shed"), batch_id)
             batch_df = batch_df.persist()
             try:
-                _write_fanout(batch_df, batch_id)
+                write_fanout(route(spark, batch_df, cfg), cfg, out_dir, "batch_id")
                 counts = batch_df.groupBy("tag").agg(
                     F.count(F.lit(1)).alias("n")
                 )
@@ -607,7 +572,7 @@ def run_pipeline_stream(
             ~F.col("tag").isin(list(cfg.accept_tags))
         ).alias("other")
         observed = batch_df.observe(obs, *tag_counts, other)
-        _write_fanout(observed, batch_id)
+        write_fanout(route(spark, observed, cfg), cfg, out_dir, "batch_id")
         got = obs.get
         spark_b = batch_df.sparkSession
         if got["other"]:

@@ -99,9 +99,9 @@ class _Clock:
 
 
 def _fake_host(monkeypatch, probes, high_rows_per_sec, leg_s=100.0, probe_s=10.0):
-    """Patches the clock, ``probe`` and ``run_level``: each probe takes the
-    next entry of ``probes`` (an exception entry is raised), each leg
-    ``leg_s``.
+    """Patches an 8-CPU affinity, the clock, ``probe`` and ``run_level``:
+    each probe takes the next entry of ``probes`` (an exception entry is
+    raised), each leg ``leg_s``.
     Returns the clock and the clock readings at which legs started."""
     clock, legs = _Clock(), []
     it = iter(probes)
@@ -120,6 +120,7 @@ def _fake_host(monkeypatch, probes, high_rows_per_sec, leg_s=100.0, probe_s=10.0
         rps = 1000.0 if cores == scaling.N_LOW else high_rows_per_sec
         return {"cores": cores, "rows": 1000 * rep, "sec": leg_s, "rows_per_sec": rps}
 
+    monkeypatch.setattr(scaling.os, "sched_getaffinity", lambda pid: set(range(8)))
     monkeypatch.setattr(scaling, "time", clock)
     monkeypatch.setattr(scaling, "probe", probe)
     monkeypatch.setattr(scaling, "run_level", run_level)
@@ -174,6 +175,18 @@ def test_hunt_records_probe_failures_without_raising(monkeypatch):
     assert sp["pairs"][0]["probe_before"] == {"error": "OSError: no taskset"}
     assert sp["pairs"][0]["window_ceiling"] is None
     assert sp["gate"]["passed_absolute"] is False
+
+
+def test_hunt_refuses_a_host_with_fewer_cpus_than_the_high_leg(monkeypatch):
+    """Four usable CPUs cannot hold the 8-core leg: no probe, no leg, and the
+    refusal reaches the compact line."""
+    _, legs = _fake_host(monkeypatch, [], high_rows_per_sec=3000.0)
+    monkeypatch.setattr(scaling.os, "sched_getaffinity", lambda pid: set(range(4)))
+    sp = scaling.hunt("sf")
+    assert legs == [] and "pairs" not in sp and "probe_log" not in sp
+    assert sp["refused"] == "4 usable CPUs, the high leg needs 8"
+    compact = scaling.compact(sp, "bench_scaling.json")
+    assert compact["refused"] == sp["refused"] and compact["n_probes"] == 0
 
 
 def test_bench_leaves_match_the_recorded_artifact():

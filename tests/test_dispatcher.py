@@ -1,64 +1,68 @@
-"""Producer fan-out physical writes (K1/K2): per-sink tables, tag
-partitioning, salted repartition, duplication/no-sink semantics."""
+"""Producer fan-out (K1/K2): the one routing expression, the one sink
+writer and its FieldsFilter, duplication/no-sink semantics."""
 
-import os
+import dataclasses
 
 from pyspark.sql import functions as F
 
-from go_fluentd_spark.config import DEFAULT_CONFIG
-from go_fluentd_spark.operators.dispatcher import route, write_sinks
+from go_fluentd_spark.config import DEFAULT_CONFIG, PipelineConfig, SinkConfig, sink_tag_rows
+from go_fluentd_spark.operators.dispatcher import route, write_fanout
 from go_fluentd_spark.plans import pipeline as P
+from go_fluentd_spark.sources.synth import sequences_df
+from go_fluentd_spark.streaming.stream_pipeline import drain_and_stop, run_pipeline_stream
 
 
-def test_write_sinks_salted_matches_logical_route(spark, sf_dir, tmp_path):
-    enriched = P.enriched(spark, sf_dir)
-    logical = route(spark, enriched, DEFAULT_CONFIG)
-    expected = {
-        s: sorted(
-            r.doc_id for r in logical.filter(F.col("sink") == s).select("doc_id").collect()
-        )
-        for s in ("es_general", "kafka_cp", "fluentd_backup")
-    }
-
-    paths = write_sinks(spark, enriched, DEFAULT_CONFIG, str(tmp_path), salt_buckets=4)
-    assert set(paths) == set(expected)
-    for sink, path in paths.items():
-        got = sorted(r.doc_id for r in spark.read.parquet(path).select("doc_id").collect())
-        assert got == expected[sink], sink
-        # physical layout: partitioned by tag (the ES-index/topic routing key)
-        assert any(d.startswith("tag=") for d in os.listdir(path))
-
-    # duplication across sinks: every cp row lands in BOTH es_general and
-    # kafka_cp (producer.go:309-325 fan-out semantics)
-    cp_in_kafka = set(
-        r.doc_id
-        for r in spark.read.parquet(paths["kafka_cp"]).select("doc_id").collect()
+def test_write_fanout_nulls_outside_include_fields(spark, tmp_path):
+    """fields.go:54-81 + library/const.go:8-17 at the one sink write: in a
+    row of a sink with an include list, every column outside include ∪
+    MustIncludeFileds reads NULL; the same message in a sink without one
+    keeps every value, and the partition columns are never nulled."""
+    cfg = PipelineConfig(
+        envs=["sit"],
+        sinks=[
+            SinkConfig(name="full", tags=("cp",)),
+            SinkConfig(name="narrow", tags=("cp",), include_fields=("message",)),
+        ],
     )
-    es = set(
-        r.doc_id
-        for r in spark.read.parquet(paths["es_general"]).select("doc_id").collect()
+    df = spark.createDataFrame(
+        [("d1", "cp.sit", "m", "noise", [1, 2], 7)],
+        "doc_id string, tag string, message string, extra string, tokens array<int>, part int",
     )
-    assert cp_in_kafka and cp_in_kafka <= es
+    write_fanout(route(spark, df, cfg), cfg, str(tmp_path), "part")
+    got = {r.sink: r.asDict() for r in spark.read.parquet(str(tmp_path)).collect()}
+    full = {"doc_id": "d1", "tag": "cp.sit", "message": "m", "extra": "noise",
+            "tokens": [1, 2], "part": 7}
+    assert got == {"full": {**full, "sink": "full"},
+                   "narrow": {**full, "extra": None, "sink": "narrow"}}
 
 
-def test_include_fields_true_projection(spark, sf_dir, tmp_path):
-    """fields.go:54-81 + library/const.go:8-17: a sink with an include list
-    writes EXACTLY include ∪ MustIncludeFileds — a real projection, not
-    nulled columns."""
-    from go_fluentd_spark.config import MUST_INCLUDE_FIELDS
+def test_batch_and_stream_route_an_env_outside_cfg_envs_alike(spark, sf_dir, tmp_path):
+    """A sink's bare tag base matches the base in ``cfg.envs`` only
+    (``config.sink_tag_rows``), in the batch route and in the stream sink
+    alike: with envs sit and uat, the accepted ``*.prod`` rows reach no
+    sink that lists their base."""
+    cfg = dataclasses.replace(DEFAULT_CONFIG, envs=["sit", "uat"])
+    members = sink_tag_rows(cfg.sinks, cfg.envs)
 
-    enriched = P.enriched(spark, sf_dir)
-    paths = write_sinks(spark, enriched, DEFAULT_CONFIG, str(tmp_path))
-    kafka_cfg = next(s for s in DEFAULT_CONFIG.sinks if s.name == "kafka_cp")
-    assert kafka_cfg.include_fields
-    got = set(spark.read.parquet(paths["kafka_cp"]).columns)
-    expected = (set(kafka_cfg.include_fields) | set(MUST_INCLUDE_FIELDS)) & set(
-        enriched.columns
-    )
-    assert got == expected, got ^ expected
-    # sinks without an include list keep the full schema
-    full = set(spark.read.parquet(paths["es_general"]).columns)
-    assert set(enriched.columns) <= full
+    def want(tags):
+        return {(s, t) for s, t in members if t in tags}
+
+    def pairs(df):
+        return {(r.sink, r.tag) for r in df.select("sink", "tag").distinct().collect()}
+
+    enriched = P.enriched(spark, sf_dir, cfg)
+    tags = {r.tag for r in enriched.select("tag").distinct().collect()}
+    assert {"cp.prod", "app.spring.prod"} <= tags
+    assert pairs(route(spark, enriched, cfg)) == want(tags)
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    sequences_df(spark, sf_dir).coalesce(1).write.parquet(src)
+    q = run_pipeline_stream(spark, src, out, str(tmp_path / "ck"), cfg=cfg, with_concat=False)
+    assert drain_and_stop(q)
+    counted = spark.read.parquet(f"{out}/_counts")
+    stream_tags = {r.tag for r in counted.select("tag").distinct().collect()}
+    assert {"cp.prod", "app.spring.prod"} <= stream_tags
+    assert pairs(spark.read.parquet(out)) == want(stream_tags)
 
 
 def test_every_synth_family_reaches_its_sink(spark, sf_dir):

@@ -7,7 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from go_fluentd_spark.config import DEFAULT_CONFIG
+from go_fluentd_spark.config import DEFAULT_CONFIG, MUST_INCLUDE_FIELDS
 from go_fluentd_spark.plans import pipeline as P
 from go_fluentd_spark.plans.manifest import MANIFEST_SCHEMA, ManifestedRun
 from go_fluentd_spark.session import local_table
@@ -193,7 +193,7 @@ def test_job_counts_fresh_run_and_noop_rerun(spark, sf_dir, tmp_path):
     rows, and a fresh run is one sink write plus a footer read of the
     written partitions for its counts: no cached frame, no count pass per
     sink, no schema-inference job, no job for the manifest of a fresh
-    output dir."""
+    output dir, and no broadcast of a sink membership dim."""
     sc = spark.sparkContext
     m = ManifestedRun(spark, str(tmp_path / "out"), n_buckets=8)
 
@@ -208,7 +208,7 @@ def test_job_counts_fresh_run_and_noop_rerun(spark, sf_dir, tmp_path):
     fresh = jobs(f"fresh-{tmp_path.name}", lambda: m.run(sf_dir))
     rerun = jobs(f"rerun-{tmp_path.name}", lambda: m.run(sf_dir))
     assert rerun == 1
-    assert fresh <= 10
+    assert fresh <= 9
 
 
 def test_fresh_run_is_one_sink_write_and_persists_nothing(spark, sf_dir, tmp_path, monkeypatch):
@@ -293,6 +293,35 @@ def test_real_write_failure_aborts_then_resume_redelivers(spark, sf_dir, tmp_pat
     assert m.run(sf_dir)["buckets"] == 8
     for sink in SINKS:
         assert sink_rows(m, sink) == sink_rows(reference, sink)
+
+
+def test_sink_tables_honour_fields_filter(spark, sf_dir, reference):
+    """fields.go:54-81 + library/const.go:8-17 on the written tables: in
+    kafka_cp every column outside include ∪ MUST_INCLUDE_FIELDS is NULL
+    and the rest equal the routed rows; the sinks without an include list
+    hold the routed rows unchanged; and every cp row is in both es_general
+    and kafka_cp (producer.go:309-325 duplication)."""
+    routed = P.routed(spark, sf_dir)
+    cols = [c for c in routed.columns if c != "sink"]
+    kafka_cfg = next(s for s in DEFAULT_CONFIG.sinks if s.name == "kafka_cp")
+    keep = [c for c in cols if c in set(kafka_cfg.include_fields) | set(MUST_INCLUDE_FIELDS)]
+    dropped = [c for c in cols if c not in keep]
+    assert "tokens" in keep and dropped
+
+    def by_doc(df, cs):
+        return {r.doc_id: r for r in df.select(*cs).collect()}
+
+    def routed_to(sink):
+        return routed.filter(F.col("sink") == sink)
+
+    kafka = reference.sink_table("kafka_cp")
+    assert set(kafka.columns) == set(cols) | {"bucket"}
+    assert set(kafka.select(*[F.count(c) for c in dropped]).first()) == {0}
+    assert by_doc(kafka, keep) == by_doc(routed_to("kafka_cp"), keep)
+    for sink in ("es_general", "fluentd_backup"):
+        assert by_doc(reference.sink_table(sink), cols) == by_doc(routed_to(sink), cols), sink
+    cp_rows = set(sink_rows(reference, "kafka_cp"))
+    assert cp_rows and cp_rows <= set(sink_rows(reference, "es_general"))
 
 
 def test_manifest_rows_match_routed_sink_counts(spark, sf_dir, reference):

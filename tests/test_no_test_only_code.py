@@ -10,13 +10,8 @@ import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-#: fields_filter and write_sinks are left to ROADMAP direction 2, which
-#: replaces them with the one sink write path that honours FieldsFilter.
-#: kafka_sequence_stream is the kafka connector seam: the pyspark build the
-#: project runs on ships no kafka connector, and without the seam the tested
-#: decode_kafka_wire would have no program caller either (ROADMAP "Kafka
-#: source seam").
-ALLOWED = {"fields_filter", "write_sinks", "kafka_sequence_stream"}
+#: public definitions exempt from the check: none
+ALLOWED: set[str] = set()
 
 
 def _trees(paths):

@@ -29,8 +29,12 @@ def test_full_pipeline_plan_shape(spark):
     # exactly TWO exchanges: the key-only synth repartition (absent at real
     # scale) and the concat window's (tag, container_id) hash partition
     assert _n(plan, "Exchange") == 2, plan[:2000]
-    # every dim lookup broadcasts; nothing sort-merges or goes nested-loop
-    assert _n(plan, "BroadcastHashJoin") >= 3
+    # the two enrich dims (add_fields, es_index) broadcast; the sink fan-out
+    # is one Generate over the routing expression, not a join on a dim;
+    # nothing sort-merges or goes nested-loop
+    assert _n(plan, "BroadcastHashJoin") == 2
+    assert _n(plan, "Generate") == 1
+    assert not re.search(r"^(Left|Right) keys .*\bsink#", plan, re.M)
     assert _n(plan, "SortMergeJoin") == 0
     assert _n(plan, "CartesianProduct") == 0
     assert _n(plan, "BroadcastNestedLoopJoin") == 0

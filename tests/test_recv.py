@@ -6,7 +6,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
-from go_fluentd_spark.operators.recv import http_ingest
+from go_fluentd_spark.operators.recv import http_ingest, kafka_json_decode
 
 SALT = "unit-salt"
 
@@ -32,3 +32,12 @@ def test_http_ingest_full_source_path(spark):
     assert [r.event_id for r in out] == [1]
     assert out[0].tag == "httprecv.sit"
     assert out[0].msg == {"a": "1", "b__c": "2"}
+
+
+def test_kafka_rewrite_tag(spark):
+    # kafka.go RewriteTag option: force-overwrites the tag regardless of payload
+    df = spark.createDataFrame(
+        [(b'{"tag": "orig.sit", "k": "v"}',)], "value binary"
+    )
+    out = kafka_json_decode(df, rewrite_tag="forced.prod").collect()[0]
+    assert out.tag == "forced.prod"

@@ -69,6 +69,35 @@ def test_stream_batch_retry_idempotent(spark, sf_dir, tmp_path):
     )
 
 
+def test_stream_sinks_honour_fields_filter(spark, sf_dir, tmp_path):
+    """The stream writes through the batch's sink writer, FieldsFilter
+    included: in kafka_cp every column outside include ∪
+    MUST_INCLUDE_FIELDS is NULL and the rest equal the same messages'
+    es_general rows, which keep their other columns."""
+    from go_fluentd_spark.config import DEFAULT_CONFIG, MUST_INCLUDE_FIELDS
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    _write_batch(spark, sf_dir, src, 0)
+    q = run_pipeline_stream(spark, src, out, str(tmp_path / "ck"), with_concat=False)
+    assert drain_and_stop(q)
+    kafka = spark.read.parquet(os.path.join(out, "sink=kafka_cp"))
+    cp = spark.read.parquet(os.path.join(out, "sink=es_general")).filter(
+        F.col("tag").startswith("cp.")
+    )
+    kafka_cfg = next(s for s in DEFAULT_CONFIG.sinks if s.name == "kafka_cp")
+    include = set(kafka_cfg.include_fields) | set(MUST_INCLUDE_FIELDS) | {"batch_id"}
+    keep = [c for c in kafka.columns if c in include]
+    dropped = [c for c in kafka.columns if c not in include]
+    assert kafka.columns == cp.columns and dropped
+    assert set(kafka.select(*[F.count(c) for c in dropped]).first()) == {0}
+    assert all(cp.select(*[F.count(c) for c in ("tag_base", "env", "id")]).first())
+
+    def by_doc(df):
+        return {r.doc_id: r for r in df.select(*keep).collect()}
+
+    assert by_doc(kafka) and by_doc(kafka) == by_doc(cp)
+
+
 def test_legacy_flat_layout_refused(spark, tmp_path):
     """A pre-upgrade out_dir with flat (unpartitioned) parquet at a table
     root must be refused, not silently mixed with batch_id=N dirs."""

@@ -19,7 +19,7 @@ from go_fluentd_spark.session import build_spark
 SF = "/root/testdata/sf0.001"
 
 INTERESTING = re.compile(
-    r"Exchange|BroadcastHashJoin|SortMergeJoin|ArrowEvalPython|MapInArrow|LocalTableScan|Window|"
+    r"Exchange|BroadcastHashJoin|SortMergeJoin|ArrowEvalPython|MapInArrow|LocalTableScan|Window|Generate|"
     r"HashAggregate|ObjectHashAggregate|Scan parquet|Filter|ReadSchema|PushedFilters"
 )
 
@@ -93,9 +93,10 @@ def main() -> None:
         "the key-only synth repartition (8-byte keys; absent at real scale",
         "where the source has many splits) and the concat window's hash",
         "partition; every dim lookup is a BroadcastHashJoin (no sort-merge",
-        "joins anywhere); the scan is pruned to the single key column",
-        "(ReadSchema); the group-by after the window reuses the window's",
-        "partitioning (no extra shuffle).  The parser is one MapInArrow",
+        "joins anywhere), and the sink fan-out is one Generate over the",
+        "routing expression, not a join; the scan is pruned to the single",
+        "key column (ReadSchema); the group-by after the window reuses the",
+        "window's partitioning (no extra shuffle).  The parser is one MapInArrow",
         "node: one Python crossing per row, RE2 extraction per family, and",
         "a plan barrier, so no later gate re-runs it (see",
         "operators/parser.py).  The dims are LocalTableScans, not scans of",

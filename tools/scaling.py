@@ -12,7 +12,8 @@ Methodology and history: BENCH.md "Scaling methodology".
   efficiency ≥ GATE_EFF and whose 8-core bandwidth ≥ GATE_BW fires one full
   pair; the hunt stops at the first pair ≥ 0.8.  If the budget ends with no
   pair, one ungated pair runs so the artifact still carries data.  Every
-  probe or leg failure is recorded, none is fatal.
+  probe or leg failure is recorded, none is fatal.  A host with fewer than
+  8 usable CPUs is refused before any probe.
 - :func:`compact` — the small summary for ``bench.py``'s stdout line.
 
 Run: ``SPARK_GRAFT_SF_DIR=<dir> python tools/scaling.py`` prints one JSON
@@ -150,7 +151,19 @@ def hunt(sf_dir: str, emit=None) -> dict:
     """Probe-gated 2-vs-8 pairs within the budget (module docstring); every
     probe and pair is also passed to ``emit``.  rep=8 (1.2M rows at sf0.1)
     because smaller inputs let per-job constant overhead dominate the
-    2-core leg (0.60 at rep=2 vs ~0.78 at rep=8, identical code)."""
+    2-core leg (0.60 at rep=2 vs ~0.78 at rep=8, identical code).
+
+    A host with fewer usable CPUs than the high leg is refused: nothing is
+    probed or run, and the artifact says why.  Its probes cannot pin a
+    process per core, and its 8-core leg would run on the CPUs there are
+    while the efficiency still divides by the 4x core ratio."""
+    cpus = len(os.sched_getaffinity(0))
+    if cpus < N_HIGH:
+        return {
+            "core_ratio": N_HIGH / N_LOW,
+            "refused": f"{cpus} usable CPUs, the high leg needs {N_HIGH}",
+            "hunt_seconds": 0.0,
+        }
     rep = int(os.environ.get("SPARK_GRAFT_SCALING_REP", "8"))
     max_pairs = int(os.environ.get("SPARK_GRAFT_SCALING_PAIRS", "8"))
     budget_s = float(os.environ.get("SPARK_GRAFT_SCALING_BUDGET", "1200"))
@@ -266,7 +279,7 @@ def compact(sp: dict, sidecar: str | None) -> dict:
         "n_probes": len(sp.get("probe_log", [])),
         "evidence_file": sidecar,
     }
-    for k in ("best_pair_efficiency", "median_efficiency", "all_efficiencies", "rows", "gate"):
+    for k in ("refused", "best_pair_efficiency", "median_efficiency", "all_efficiencies", "rows", "gate"):
         if k in sp:
             out[k] = sp[k]
     if len(sp.get("pairs", [])) > 8:
