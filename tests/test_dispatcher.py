@@ -2,14 +2,83 @@
 writer and its FieldsFilter, duplication/no-sink semantics."""
 
 import dataclasses
+import os
 
 from pyspark.sql import functions as F
 
-from go_fluentd_spark.config import DEFAULT_CONFIG, PipelineConfig, SinkConfig, sink_tag_rows
+from go_fluentd_spark.config import (
+    DEFAULT_CONFIG,
+    MUST_INCLUDE_FIELDS,
+    PipelineConfig,
+    SinkConfig,
+    sink_tag_rows,
+)
 from go_fluentd_spark.operators.dispatcher import route, write_fanout
 from go_fluentd_spark.plans import pipeline as P
 from go_fluentd_spark.sources.synth import sequences_df
 from go_fluentd_spark.streaming.stream_pipeline import drain_and_stop, run_pipeline_stream
+
+
+def test_write_sinks_salted_matches_logical_route(spark, sf_dir, tmp_path):
+    """The physical fan-out of ``write_fanout`` (partitioned by sink, then
+    tag: the ES-index/topic routing key) holds exactly the logical
+    ``route``'s rows in each sink, and every cp row lands in both
+    es_general and kafka_cp (producer.go:309-325 fan-out semantics)."""
+    enriched = P.enriched(spark, sf_dir)
+    logical = route(spark, enriched, DEFAULT_CONFIG)
+    expected = {
+        s.name: sorted(
+            r.doc_id for r in logical.filter(F.col("sink") == s.name).select("doc_id").collect()
+        )
+        for s in DEFAULT_CONFIG.sinks
+    }
+    assert set(expected) == {"es_general", "kafka_cp", "fluentd_backup"}
+
+    write_fanout(logical, DEFAULT_CONFIG, str(tmp_path), "tag")
+    assert set(os.listdir(tmp_path)) - {"_SUCCESS"} == {f"sink={s}" for s in expected}
+    docs = {}
+    for sink in expected:
+        path = str(tmp_path / f"sink={sink}")
+        docs[sink] = sorted(
+            r.doc_id for r in spark.read.parquet(path).select("doc_id").collect()
+        )
+        assert docs[sink] == expected[sink], sink
+        assert any(d.startswith("tag=") for d in os.listdir(path)), sink
+
+    assert docs["kafka_cp"] and set(docs["kafka_cp"]) <= set(docs["es_general"])
+
+
+def test_include_fields_true_projection(spark, sf_dir, tmp_path):
+    """fields.go:54-81 + library/const.go:8-17 on the pipeline's rows: a
+    sink with an include list carries values in EXACTLY include ∪
+    MustIncludeFileds (every other column reads NULL in all its rows),
+    while a sink without one keeps every value of the routed rows."""
+    enriched = P.enriched(spark, sf_dir)
+    routed = route(spark, enriched, DEFAULT_CONFIG)
+    write_fanout(routed, DEFAULT_CONFIG, str(tmp_path), "tag")
+    kafka_cfg = next(s for s in DEFAULT_CONFIG.sinks if s.name == "kafka_cp")
+    assert kafka_cfg.include_fields
+
+    kafka = spark.read.parquet(str(tmp_path / "sink=kafka_cp"))
+    assert kafka.count() > 0
+
+    def valued(df):
+        counts = df.select(*[F.count(c).alias(c) for c in enriched.columns]).first()
+        return {c for c, n in counts.asDict().items() if n}
+
+    got = valued(kafka)
+    expected = (set(kafka_cfg.include_fields) | set(MUST_INCLUDE_FIELDS)) & valued(
+        routed.filter(F.col("sink") == "kafka_cp")
+    )
+    assert got == expected, got ^ expected
+    assert {"tag", "doc_id", "message", "tokens"} <= got
+
+    es = spark.read.parquet(str(tmp_path / "sink=es_general"))
+    assert set(enriched.columns) <= set(es.columns)
+    cols = sorted(set(enriched.columns) - {"args_map"})
+    want = routed.filter(F.col("sink") == "es_general").select(*cols)
+    assert want.exceptAll(es.select(*cols)).count() == 0
+    assert es.select(*cols).exceptAll(want).count() == 0
 
 
 def test_write_fanout_nulls_outside_include_fields(spark, tmp_path):
