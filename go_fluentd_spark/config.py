@@ -1,6 +1,8 @@
 """Pipeline configuration: config-as-data mirroring the *semantics* of the
-reference's YAML (``/root/reference/docs/settings/settings.yml``), compiled
-ONCE at plan-build time into Catalyst Column expressions — never per-row.
+reference's YAML (``/root/reference/docs/settings/settings.yml``), rendered
+ONCE per plan build into SQL-text expressions (``functions/sqltext.py``)
+that Catalyst parses into the same expressions the Column builders made —
+never per-row.
 
 Everything here is a plain Python structure so a user can swap in their own
 tenant config exactly like go-fluentd's plugin sections.
@@ -36,6 +38,11 @@ ACCEPT_TAG_BASES = [
 ]
 
 ACCEPT_TAGS = [f"{b}.{e}" for b in ACCEPT_TAG_BASES for e in ENVS]
+
+#: a tag is "<base>.<env>": the env is the suffix after the last '.', the
+#: base everything before it (a base may itself contain dots)
+ENV_SUFFIX_REGEX = r"\.([a-z]+)$"
+TAG_ENV_REGEX = r"\.[a-z]+$"
 
 # ---------------------------------------------------------------------------
 # Acceptor filters (reference internal/acceptorfilters/)

@@ -1,5 +1,6 @@
 """Scalar-function library: the reference's template engines and map surgery
-(``library/add.go``, ``library/utils.go``) compiled to Column expressions.
+(``library/add.go``, ``library/utils.go``) compiled to Column expressions;
+the JSON flatten, with its constant higher-order lambdas, is SQL text.
 
 All of these run per-row millions of times in the reference; here each
 template is compiled ONCE at plan build into a concat of literals, column
@@ -11,6 +12,8 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import Column, functions as F
+
+from go_fluentd_spark.functions.sqltext import sql_str
 
 _DOLLAR_RE = re.compile(r"\$\{([^}]+)\}")
 _PCT_RE = re.compile(r"%\{([^}]+)\}")
@@ -97,12 +100,13 @@ def replace_str_by_msg(tpl: str, df_cols: list[str], tag_col: str = "tag", id_co
     return F.concat(*parts) if parts else F.lit(tpl)
 
 
-def flatten_json_map(c: Column, delimiter: str = "__", max_depth: int = 3) -> Column:
+def flatten_json_map(expr: str, delimiter: str = "__", max_depth: int = 3) -> str:
     """FlattenMap over a DYNAMIC JSON payload (``library/utils.go:75-85``,
-    called from ``parser_f.go:109`` and ``http.go:206``): parse a JSON-object
-    string to ``map<string,string>`` and recursively flatten nested objects to
+    called from ``parser_f.go:109`` and ``http.go:206``) as SQL text over
+    the SQL expression ``expr``: parse a JSON-object string to
+    ``map<string,string>`` and recursively flatten nested objects to
     ``parent__child`` keys, up to ``max_depth`` levels (the loop unrolls at
-    plan-build time — pure Column expressions, no per-row Python).
+    plan-build time into higher-order functions, no per-row Python).
 
     Matches the reference's semantics: after flattening, the parent key is
     deleted and only the joined leaf keys remain (``utils_test.go:11-54``,
@@ -110,45 +114,34 @@ def flatten_json_map(c: Column, delimiter: str = "__", max_depth: int = 3) -> Co
     stringify (2 -> "2"); nested objects deeper than ``max_depth`` stay as
     JSON text under their flattened prefix; malformed JSON => NULL map.
     """
-
-    def expand(e: Column) -> Column:
-        child = F.from_json(e["value"], "map<string,string>")
-        prefixed = F.transform(
-            F.map_entries(child),
-            lambda ce: F.struct(
-                F.concat(e["key"], F.lit(delimiter), ce["key"]).alias("key"),
-                ce["value"].alias("value"),
-            ),
-        )
-        is_obj = F.startswith(F.ltrim(e["value"]), F.lit("{")) & child.isNotNull()
-        return F.when(is_obj, prefixed).otherwise(
-            F.array(F.struct(e["key"].alias("key"), e["value"].alias("value")))
-        )
-
-    def to_map_last_wins(entries: Column) -> Column:
-        # Flattening can COLLIDE with a literal key (payload {"a__b":"1",
-        # "a":{"b":"2"}} yields the key a__b twice); map_from_entries under
-        # Spark's default mapKeyDedupPolicy=EXCEPTION would abort the whole
-        # batch on one such (untrusted) log line.  The reference's FlattenMap
-        # assigns into one Go map (library/utils.go:75-85), i.e. overwrite —
-        # restated deterministically as LAST-entry-wins: fold the reversed
-        # entries keeping first occurrence per key, then restore order.
-        # Payload maps are small (dozens of keys), so the O(n^2) fold is
-        # noise; only lambda variables are referenced inside the lambdas (no
-        # re-evaluated outer expressions).
-        dedup = F.aggregate(
-            F.reverse(entries),
-            F.array().cast("array<struct<key:string,value:string>>"),
-            lambda acc, x: F.when(
-                F.exists(acc, lambda y: y["key"] == x["key"]), acc
-            ).otherwise(F.array_append(acc, x)),
-        )
-        return F.map_from_entries(F.reverse(dedup))
-
-    m = F.from_json(c, "map<string,string>")
+    as_map = "'map<string,string>'"
+    child = f"from_json(e.value, {as_map})"
+    # one entry e: a JSON-object value becomes its prefixed child entries,
+    # anything else stays the one entry it was
+    expand = (
+        f"e -> CASE WHEN (startswith(ltrim(e.value), '{{') AND ({child} IS NOT NULL)) "
+        f"THEN transform(map_entries({child}), ce -> struct("
+        f"concat(e.key, {sql_str(delimiter)}, ce.key) AS key, ce.value AS value)) "
+        "ELSE array(struct(e.key AS key, e.value AS value)) END"
+    )
+    # Flattening can COLLIDE with a literal key (payload {"a__b":"1",
+    # "a":{"b":"2"}} yields the key a__b twice); map_from_entries under
+    # Spark's default mapKeyDedupPolicy=EXCEPTION would abort the whole
+    # batch on one such (untrusted) log line.  The reference's FlattenMap
+    # assigns into one Go map (library/utils.go:75-85), i.e. overwrite —
+    # restated deterministically as LAST-entry-wins: fold the reversed
+    # entries keeping first occurrence per key, then restore order.
+    # Payload maps are small (dozens of keys), so the O(n^2) fold is
+    # noise; only lambda variables are referenced inside the lambdas (no
+    # re-evaluated outer expressions).
+    empty = "CAST(array() AS ARRAY<STRUCT<key: STRING, value: STRING>>)"
+    keep_first = (
+        "(acc, x) -> CASE WHEN exists(acc, y -> (y.key = x.key)) "
+        "THEN acc ELSE array_append(acc, x) END"
+    )
+    m = f"from_json({expr}, {as_map})"
     for _ in range(max(max_depth - 1, 0)):
-        m = F.when(
-            m.isNotNull(),
-            to_map_last_wins(F.flatten(F.transform(F.map_entries(m), expand))),
-        )
+        entries = f"flatten(transform(map_entries({m}), {expand}))"
+        dedup = f"aggregate(reverse({entries}), {empty}, {keep_first})"
+        m = f"CASE WHEN ({m} IS NOT NULL) THEN map_from_entries(reverse({dedup})) END"
     return m

@@ -3,21 +3,23 @@
 The reference runs a serial per-row filter chain (spark -> spring -> default,
 ``pipeline.go:125-228``); here the whole chain is a handful of Catalyst
 expressions on one DataFrame — filters first so they push toward the scan,
-retag as a single when-chain compiled once at plan build.
+retag as a single CASE written once per plan build, all as SQL text.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from go_fluentd_spark.config import PipelineConfig
+from go_fluentd_spark.config import TAG_ENV_REGEX, PipelineConfig
+from go_fluentd_spark.functions.sqltext import sql_in, sql_str
 
 
 def spark_filter(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """SparkFilter (``spark_f.go:44-68``): rows tagged ``spark.{env}`` whose
     log matches ``ignore_regex`` are discarded."""
-    is_spark = F.col("tag_base") == "spark"
-    return df.filter(~(is_spark & F.col("source").rlike(cfg.spark_ignore_regex)))
+    return df.filter(
+        f"(NOT ((tag_base = 'spark') AND source RLIKE {sql_str(cfg.spark_ignore_regex)}))"
+    )
 
 
 def spring_retag(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -26,26 +28,24 @@ def spring_retag(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
     The reference re-enters rewritten rows into the chain
     (``spring_f.go:101``); the shipped rules are confluent (a rewritten tag
-    never matches ``spring.{env}`` again) so a single when-chain is exact.
+    never matches ``spring.{env}`` again) so a single CASE is exact.
     """
-    is_spring = F.col("tag_base") == "spring"
-    chain = None
-    for rule in cfg.spring_retag_rules:
-        cond = F.col("source").rlike(rule["regexp"])
-        val = F.concat(F.lit(rule["new_tag_base"] + "."), F.col("env"))
-        chain = F.when(cond, val) if chain is None else chain.when(cond, val)
-    retagged = F.when(is_spring, chain.otherwise(F.col("tag"))).otherwise(F.col("tag"))
-    return df.withColumn("tag", retagged).withColumn(
-        "tag_base", F.regexp_replace(F.col("tag"), r"\.[a-z]+$", "")
+    rules = " ".join(
+        f"WHEN source RLIKE {sql_str(r['regexp'])} THEN concat({sql_str(r['new_tag_base'] + '.')}, env)"
+        for r in cfg.spring_retag_rules
+    )
+    retagged = f"CASE WHEN (tag_base = 'spring') THEN CASE {rules} ELSE tag END ELSE tag END"
+    return df.withColumn("tag", F.expr(retagged)).withColumn(
+        "tag_base", F.expr(f"regexp_replace(tag, {sql_str(TAG_ENV_REGEX)}, '')")
     )
 
 
 def accept_whitelist(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """DefaultFilter (``default_f.go:64-79``): drop empty tags and tags not in
-    the accept list.  ``isin`` compiles to an in-set predicate (codegen'd);
+    the accept list.  ``IN`` compiles to an in-set predicate (codegen'd);
     for very large whitelists swap to a broadcast left-semi join.
     """
-    return df.filter((F.col("tag") != "") & F.col("tag").isin(cfg.accept_tags))
+    return df.filter(f"((NOT (tag = '')) AND {sql_in('tag', cfg.accept_tags)})")
 
 
 def acceptor_chain(df: DataFrame, cfg: PipelineConfig) -> DataFrame:

@@ -17,11 +17,12 @@ feeding a quality/monitoring table — the reference only counts drops
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from go_fluentd_spark.config import ParserConfig, PipelineConfig
+from go_fluentd_spark.functions.sqltext import sql_in, sql_str
 from go_fluentd_spark.operators.acceptor import spring_retag
-from go_fluentd_spark.operators.parser import _family_case, _group_col, java_pattern
+from go_fluentd_spark.operators.parser import _family_case, _group_col, _parsed_time, java_pattern
 
 
 def discard_reasons(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -29,49 +30,33 @@ def discard_reasons(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     (doc_id, tag, reason) for every row the pipeline drops."""
     parsers = cfg.parsers
 
-    spark_ignored = (F.col("tag_base") == "spark") & F.col("source").rlike(
-        cfg.spark_ignore_regex
-    )
+    spark_ignored = f"((tag_base = 'spark') AND source RLIKE {sql_str(cfg.spark_ignore_regex)})"
     # apply the retag (the acceptor's only mutation) to evaluate the
     # whitelist and parser against the post-retag tag
-    df = spring_retag(df.withColumn("_spark_ignored", spark_ignored), cfg)
+    df = spring_retag(df.withColumn("_spark_ignored", F.expr(spark_ignored)), cfg)
 
-    unknown = (F.col("tag") == "") | ~F.col("tag").isin(cfg.accept_tags)
-    matched = F.coalesce(
-        _family_case(parsers, lambda p: F.col("source").rlike(java_pattern(p.pattern))),
-        F.lit(False),
-    )
+    unknown = f"((tag = '') OR (NOT {sql_in('tag', cfg.accept_tags)}))"
+    matched = _family_case(parsers, lambda p: f"source RLIKE {sql_str(java_pattern(p.pattern))}")
 
-    def must_col(p: ParserConfig) -> Column:
+    def must_col(p: ParserConfig) -> str:
         if not p.must_include:
-            return F.lit(True)
-        return _group_col(p, p.must_include).isNotNull()
+            return "true"
+        return f"({_group_col(p, p.must_include)} IS NOT NULL)"
 
-    must_ok = F.coalesce(_family_case(parsers, must_col), F.lit(True))
-
-    def ts_ok(p: ParserConfig) -> Column:
+    def ts_ok(p: ParserConfig) -> str:
         if p.time_group is None:
-            return F.lit(True)
-        parsed = F.try_to_timestamp(
-            F.concat(
-                F.regexp_replace(_group_col(p, "time"), ",", "."),
-                F.lit(" " + p.append_time_zone),
-            ),
-            F.lit(p.spark_time_format),
-        )
-        return parsed.isNotNull()
-
-    time_ok = F.coalesce(_family_case(parsers, ts_ok), F.lit(True))
+            return "true"
+        return f"({_parsed_time(p, _group_col(p, 'time'))} IS NOT NULL)"
 
     reason = (
-        F.when(F.col("_spark_ignored"), "spark_ignore")
-        .when(unknown, "unknown_tag")
-        .when(~matched, "parse_no_match")
-        .when(~must_ok, "missing_must_include")
-        .when(~time_ok, "bad_time")
+        "CASE WHEN _spark_ignored THEN 'spark_ignore' "
+        f"WHEN {unknown} THEN 'unknown_tag' "
+        f"WHEN (NOT coalesce({matched}, false)) THEN 'parse_no_match' "
+        f"WHEN (NOT coalesce({_family_case(parsers, must_col)}, true)) THEN 'missing_must_include' "
+        f"WHEN (NOT coalesce({_family_case(parsers, ts_ok)}, true)) THEN 'bad_time' END"
     )
     return (
-        df.withColumn("reason", reason)
-        .filter(F.col("reason").isNotNull())
+        df.withColumn("reason", F.expr(reason))
+        .filter("(reason IS NOT NULL)")
         .select("doc_id", "tag", "reason")
     )

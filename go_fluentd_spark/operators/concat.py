@@ -27,19 +27,19 @@ partitions by identifier, not tag.  AQE handles residual skew.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from go_fluentd_spark.config import CONCAT_CONFIGS, CONCAT_MAX_MERGED
+from go_fluentd_spark.functions.sqltext import sql_str
 
 
-def _head_expr(configs: dict[str, dict]):
-    """is_head when-chain over tag bases; NULL (=> not configured) otherwise."""
-    chain = None
-    for base, c in configs.items():
-        cond = F.col("tag_base") == base
-        val = F.col("source").rlike(c["head_regexp"])
-        chain = F.when(cond, val) if chain is None else chain.when(cond, val)
-    return chain
+def _head_expr(configs: dict[str, dict]) -> str:
+    """is_head CASE over tag bases; NULL (=> not configured) otherwise."""
+    whens = " ".join(
+        f"WHEN (tag_base = {sql_str(base)}) THEN source RLIKE {sql_str(c['head_regexp'])}"
+        for base, c in configs.items()
+    )
+    return f"CASE {whens} END"
 
 
 def concat_sessions(
@@ -61,21 +61,14 @@ def concat_sessions(
     near-empty tails one group's collect_list can accumulate in one task).
     """
     configs = CONCAT_CONFIGS if configs is None else configs
-    is_head = _head_expr(configs)
-    df = df.withColumn("_is_head", is_head)  # NULL for unconfigured tags
+    # NULL for unconfigured tags
+    df = df.withColumn("_is_head", F.expr(_head_expr(configs)))
 
-    w = (
-        Window.partitionBy("tag", "container_id")
-        .orderBy("id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     # last head id at-or-before this row; NULL if no head yet (lone tail)
-    grp = F.max(F.when(F.col("_is_head"), F.col("id"))).over(w)
+    w = "PARTITION BY tag, container_id ORDER BY id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+    grp = f"max(CASE WHEN _is_head THEN id END) OVER ({w})"
     df = df.withColumn(
-        "_grp",
-        F.when(F.col("_is_head").isNull(), F.col("id")).otherwise(
-            F.coalesce(grp, F.col("id"))
-        ),
+        "_grp", F.expr(f"CASE WHEN (_is_head IS NULL) THEN id ELSE coalesce({grp}, id) END")
     )
 
     if max_len is not None or max_merged is not None:
@@ -83,45 +76,31 @@ def concat_sessions(
         # predecessors already filled the buffer (chars or rows) is evicted
         # to its own group
         wg = (
-            Window.partitionBy("tag", "container_id", "_grp")
-            .orderBy("id")
-            .rowsBetween(Window.unboundedPreceding, -1)
+            "PARTITION BY tag, container_id, _grp ORDER BY id "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
         )
-        evict = F.lit(False)
+        evict = "false"
         if max_len is not None:
-            prior_len = F.coalesce(F.sum(F.length("source")).over(wg), F.lit(0))
-            evict = evict | (prior_len >= max_len)
+            evict = f"({evict} OR (coalesce(sum(length(source)) OVER ({wg}), 0) >= {int(max_len)}))"
         if max_merged is not None:
-            evict = evict | (F.count(F.lit(1)).over(wg) >= max_merged)
-        df = df.withColumn(
-            "_grp", F.when(evict, F.col("id")).otherwise(F.col("_grp"))
-        )
+            evict = f"({evict} OR (count(1) OVER ({wg}) >= {int(max_merged)}))"
+        df = df.withColumn("_grp", F.expr(f"CASE WHEN {evict} THEN id ELSE _grp END"))
 
-    merged = (
+    aggs = [
+        "min(id) AS id",
+        *(f"min_by({c}, id) AS {c}" for c in ("doc_id", "tokens", "n_tok", "env", "tag_base")),
+        # append with NO separator, in id order (concator_f.go:188-189)
+        "array_sort(collect_list(struct(id, source))) AS _parts",
+        "count(1) AS n_merged",
+    ]
+    return (
         df.groupBy("tag", "container_id", "_grp")
-        .agg(
-            F.min("id").alias("id"),
-            F.min_by("doc_id", "id").alias("doc_id"),
-            F.min_by("tokens", "id").alias("tokens"),
-            F.min_by("n_tok", "id").alias("n_tok"),
-            F.min_by("env", "id").alias("env"),
-            F.min_by("tag_base", "id").alias("tag_base"),
-            # append with NO separator, in id order (concator_f.go:188-189)
-            F.array_sort(F.collect_list(F.struct("id", "source"))).alias("_parts"),
-            F.count(F.lit(1)).alias("n_merged"),
-        )
-        .withColumn(
-            "source",
-            F.concat_ws("", F.transform(F.col("_parts"), lambda p: p.source)),
-        )
-        .withColumn(
+        .agg(*map(F.expr, aggs))
+        .selectExpr(
+            "tag", "container_id", "id", "doc_id", "tokens", "n_tok", "env", "tag_base",
+            "n_merged",
+            "concat_ws('', transform(_parts, p -> p.source)) AS source",
             # ExtIds: ids of the folded tail rows (concator_f.go:190-193)
-            "ext_ids",
-            F.filter(
-                F.transform(F.col("_parts"), lambda p: p.id),
-                lambda i: i != F.col("id"),
-            ),
+            "filter(transform(_parts, p -> p.id), i -> (NOT (i = id))) AS ext_ids",
         )
-        .drop("_parts", "_grp")
     )
-    return merged

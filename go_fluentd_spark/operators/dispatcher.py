@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from go_fluentd_spark.config import MUST_INCLUDE_FIELDS, PipelineConfig, sink_tag_rows
+from go_fluentd_spark.functions.sqltext import ident, sql_in, sql_str, with_sql
 
 
 def route(spark: SparkSession, df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -24,8 +25,10 @@ def route(spark: SparkSession, df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     members: dict[str, list[str]] = {}
     for sink, tag in sink_tag_rows(cfg.sinks, cfg.envs):
         members.setdefault(sink, []).append(tag)
-    names = F.array(*[F.when(F.col("tag").isin(tags), F.lit(s)) for s, tags in members.items()])
-    return df.withColumn("sink", F.explode(F.filter(names, lambda s: s.isNotNull())))
+    names = ", ".join(
+        f"CASE WHEN {sql_in('tag', tags)} THEN {sql_str(s)} END" for s, tags in members.items()
+    )
+    return df.withColumn("sink", F.expr(f"explode(filter(array({names}), s -> (s IS NOT NULL)))"))
 
 
 def route_counts(spark: SparkSession, df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -59,8 +62,13 @@ def write_fanout(routed: DataFrame, cfg: PipelineConfig, out_dir: str, part: str
         c: [s.name for s in cfg.sinks if s.include_fields and c not in keep | set(s.include_fields)]
         for c in routed.columns
     }
-    filtered = routed.withColumns(
-        {c: F.when(~F.col("sink").isin(sinks), F.col(c)) for c, sinks in dropped_by.items() if sinks}
+    filtered = with_sql(
+        routed,
+        {
+            c: f"CASE WHEN (NOT {sql_in('sink', sinks)}) THEN {ident(c)} END"
+            for c, sinks in dropped_by.items()
+            if sinks
+        },
     )
     (
         filtered.write.mode("overwrite")

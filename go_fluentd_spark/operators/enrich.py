@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from go_fluentd_spark.config import PipelineConfig, es_index_rows
+from go_fluentd_spark.functions.sqltext import sql_str
 from go_fluentd_spark.session import local_table
 
 
@@ -42,6 +43,4 @@ def es_index(spark: SparkSession, df: DataFrame, cfg: PipelineConfig) -> DataFra
 def msgid(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """``Message["msgid"] = distributeKey + "-" + ID`` (producer.go:257;
     DistributeKey controllor.go:477-480)."""
-    return df.withColumn(
-        "msgid", F.concat(F.lit(cfg.run_key + "-"), F.col("id").cast("string"))
-    )
+    return df.withColumn("msgid", F.expr(f"concat({sql_str(cfg.run_key + '-')}, CAST(id AS STRING))"))

@@ -12,7 +12,7 @@ each other in bench.py: ``arrow`` (one ``mapInArrow`` over the accepted
 frame, one RE2 ``extract_regex`` pass per family — the reference's own regex
 dialect) and ``native`` (codegen'd regexp_extract when-chains on Java regex —
 the regex runs once per group).  The shared post stages (must_include, JSON
-explode, time normalize) are pure Column exprs.
+explode, time normalize) are SQL-text expressions.
 
 Group -> unified column mapping (NULL where a family lacks the field):
 time, app, level, thread, class, line, args, message.
@@ -20,23 +20,24 @@ time, app, level, thread, class, line, args, message.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
-from go_fluentd_spark.config import TRIM_CHARS, ParserConfig, PipelineConfig
+from go_fluentd_spark.config import PROMOTE_JSON_KEYS, TRIM_CHARS, ParserConfig, PipelineConfig
+from go_fluentd_spark.functions.sqltext import ident, sql_in, sql_str, with_sql
+from go_fluentd_spark.functions.textops import flatten_json_map
 
 #: unified output fields ("project" is geely's app-like key, kept under the
 #: reference's own name — library/utils_test.go:56-73)
 FIELDS = ["time", "app", "project", "level", "thread", "class", "line", "args", "message"]
 
 
-def _family_case(parsers: list[ParserConfig], build) -> Column | None:
-    """when(tag_base in parser.tag_bases, build(parser)) chain."""
-    chain = None
-    for p in parsers:
-        cond = F.col("tag_base").isin(list(p.tag_bases))
-        val = build(p)
-        chain = F.when(cond, val) if chain is None else chain.when(cond, val)
-    return chain
+def _family_case(parsers: list[ParserConfig], build) -> str:
+    """``CASE WHEN tag_base IN (parser.tag_bases) THEN build(parser) ... END``
+    as SQL text; ``build`` returns SQL text too."""
+    whens = " ".join(
+        f"WHEN {sql_in('tag_base', p.tag_bases)} THEN {build(p)}" for p in parsers
+    )
+    return f"CASE {whens} END"
 
 
 def java_pattern(pattern: str) -> str:
@@ -48,22 +49,21 @@ def java_pattern(pattern: str) -> str:
     return "(?d)" + (body[:-1] + r"\z" if body.endswith("$") else body)
 
 
-def _group_col(p: ParserConfig, field: str) -> Column:
+def _group_col(p: ParserConfig, field: str) -> str:
     """Extract one unified field for one parser; trim + empty=>NULL
     (RegexNamedSubMatch semantics, library/utils.go:60-73)."""
     if field not in p.groups:
-        return F.lit(None).cast("string")
-    val = F.regexp_extract(F.col("source"), java_pattern(p.pattern), p.groups[field])
-    return F.nullif(F.trim(val, F.lit(TRIM_CHARS)), F.lit(""))
+        return "CAST(NULL AS STRING)"
+    val = f"regexp_extract(source, {sql_str(java_pattern(p.pattern))}, {p.groups[field]})"
+    return f"nullif(trim(BOTH {sql_str(TRIM_CHARS)} FROM {val}), '')"
 
 
 def extract_native(df: DataFrame, parsers: list[ParserConfig]) -> DataFrame:
     """JVM extraction: codegen'd regexp_extract per group (the regex runs
     once per group — N+1 runs/row)."""
-    matched = _family_case(parsers, lambda p: F.col("source").rlike(java_pattern(p.pattern)))
-    df = df.filter(F.coalesce(matched, F.lit(False)))  # no parser => discard
-    cols = {f: _family_case(parsers, lambda p, f=f: _group_col(p, f)) for f in FIELDS}
-    return df.withColumns(cols)
+    matched = _family_case(parsers, lambda p: f"source RLIKE {sql_str(java_pattern(p.pattern))}")
+    df = df.filter(f"coalesce({matched}, false)")  # no parser => discard
+    return with_sql(df, {f: _family_case(parsers, lambda p, f=f: _group_col(p, f)) for f in FIELDS})
 
 
 def extract_arrow(df: DataFrame, parsers: list[ParserConfig]) -> DataFrame:
@@ -82,7 +82,9 @@ def extract_arrow(df: DataFrame, parsers: list[ParserConfig]) -> DataFrame:
     barrier also stops column pruning: every input column crosses, so a
     consumer that reads few of them selects those first
     (``pipeline.COUNT_COLUMNS``)."""
-    df = df.drop(*FIELDS)
+    present = [f for f in FIELDS if f in df.columns]
+    if present:
+        df = df.drop(*present)
     families = [(list(p.tag_bases), p.pattern, list(p.groups)) for p in parsers]
     schema = T.StructType(
         df.schema.fields + [T.StructField(f, T.StringType()) for f in FIELDS]
@@ -121,77 +123,73 @@ def extract_arrow(df: DataFrame, parsers: list[ParserConfig]) -> DataFrame:
     return df.mapInArrow(extract, schema)
 
 
+#: the UTC ISO format ``ts`` is re-emitted in
+ISO_MICROS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"
+
+
+def _parsed_time(p: ParserConfig, time: str) -> str:
+    """The family's ``time`` group (SQL text) as a timestamp, NULL when
+    malformed: try_to_timestamp mirrors the reference's
+    parse-failure-=>-discard instead of erroring (ANSI-safe)."""
+    return (
+        f"try_to_timestamp(concat(regexp_replace({time}, ',', '.'), "
+        f"{sql_str(' ' + p.append_time_zone)}), {sql_str(p.spark_time_format)})"
+    )
+
+
+def _ts_expr(p: ParserConfig) -> str:
+    """time normalize (parser_f.go:121-168 + settings.yml:786-795): parse
+    with appended tz, re-emit UTC ISO micros under @timestamp; comma-decimal
+    fix (parser_f.go:147).  Families with time_group=None skip (ramjet's
+    time is already UTC ISO; spark rows carry no structured time)."""
+    if p.time_group is None:
+        if "time" in p.groups and p.tag_bases == ("ramjet",):
+            return "concat(time, 'Z')"
+        return "CAST(NULL AS STRING)"
+    return f"date_format({_parsed_time(p, 'time')}, {sql_str(ISO_MICROS_FORMAT)})"
+
+
+def _bool(b: bool) -> str:
+    return "true" if b else "false"
+
+
 def parse(df: DataFrame, cfg: PipelineConfig, impl: str | None = None) -> DataFrame:
     """Parser over all configured tag families: extraction (arrow | native)
-    + the shared post stages (must_include, JSON explode, time normalize)."""
+    + the shared post stages (must_include, JSON explode, time normalize),
+    each one SQL-text filter or projection."""
     parsers = cfg.parsers
     extract = {"arrow": extract_arrow, "native": extract_native}[impl or cfg.parser_impl]
     df = extract(df, parsers)
 
     # must_include gate (parser_f.go:112-118)
-    must_ok = _family_case(
+    df = df.filter(_family_case(
         parsers,
-        lambda p: F.col(p.must_include).isNotNull() if p.must_include else F.lit(True),
-    )
-    df = df.filter(must_ok)
+        lambda p: f"({ident(p.must_include)} IS NOT NULL)" if p.must_include else "true",
+    ))
 
-    # JSON explode of the args group (parser_f.go:74-107): the payload is
-    # recursively FlattenMap'd (library/utils.go:75-85) so nested objects
-    # land as `a__b` keys in `args_map` (our declared-schema overflow
-    # column); known keys are promoted to real `args__`-prefixed columns;
-    # raw kept only when JSON parse fails.
-    from go_fluentd_spark.functions.textops import flatten_json_map
-
+    post = {}
     json_parsers = [p for p in parsers if p.parse_json_key]
     if json_parsers:
-        is_json_family = F.col("tag_base").isin(
-            [b for p in json_parsers for b in p.tag_bases]
+        # JSON explode of the args group (parser_f.go:74-107): the payload is
+        # recursively FlattenMap'd (library/utils.go:75-85) so nested objects
+        # land as `a__b` keys in `args_map` (our declared-schema overflow
+        # column); known keys are promoted to real `args__`-prefixed columns;
+        # raw kept only when JSON parse fails.
+        is_json_family = sql_in("tag_base", [b for p in json_parsers for b in p.tag_bases])
+        df = df.withColumn(
+            "args_map", F.expr(f"CASE WHEN {is_json_family} THEN {flatten_json_map('args')} END")
         )
-        parsed_map = flatten_json_map(F.col("args"))
-        df = df.withColumn("args_map", F.when(is_json_family, parsed_map))
-        from go_fluentd_spark.config import PROMOTE_JSON_KEYS
-
-        df = df.withColumns(
-            {
-                f"args__{key}": F.try_element_at(F.col("args_map"), F.lit(key))
-                for key in PROMOTE_JSON_KEYS
-            }
-        ).withColumn(
-            "args",
-            F.when(F.col("args_map").isNotNull(), F.lit(None)).otherwise(
-                F.col("args")
-            ),
-        )
-
-    # time normalize (parser_f.go:121-168 + settings.yml:786-795): parse with
-    # appended tz, re-emit UTC ISO micros under @timestamp; comma-decimal fix
-    # (parser_f.go:147).  Families with time_group=None skip (ramjet's time is
-    # already UTC ISO; spark rows carry no structured time).
-    def ts_expr(p: ParserConfig) -> Column:
-        if p.time_group is None:
-            if "time" in p.groups and p.tag_bases == ("ramjet",):
-                return F.concat(F.col("time"), F.lit("Z"))
-            return F.lit(None).cast("string")
-        # try_to_timestamp: NULL on malformed input (ANSI-safe), mirroring
-        # the reference's parse-failure-=>-discard instead of erroring
-        parsed = F.try_to_timestamp(
-            F.concat(
-                F.regexp_replace(F.col("time"), ",", "."),
-                F.lit(" " + p.append_time_zone),
-            ),
-            F.lit(p.spark_time_format),
-        )
-        return F.date_format(parsed, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
-
-    df = df.withColumn("ts", _family_case(parsers, ts_expr))
+        post = {
+            f"args__{key}": f"try_element_at(args_map, {sql_str(key)})" for key in PROMOTE_JSON_KEYS
+        }
+        post["args"] = "CASE WHEN (args_map IS NOT NULL) THEN NULL ELSE args END"
+    # one projection: the JSON promotions and ts read only the input columns
+    df = with_sql(df, {**post, "ts": _family_case(parsers, _ts_expr)})
 
     # unparseable time => discard, but only for families that parse time
-    time_required = _family_case(
-        parsers, lambda p: F.lit(p.time_group is not None)
-    )
-    df = df.filter(~time_required | F.col("ts").isNotNull())
+    time_required = _family_case(parsers, lambda p: _bool(p.time_group is not None))
+    df = df.filter(f"((NOT {time_required}) OR (ts IS NOT NULL))")
 
     # is_remove_orig_log (parser_f.go:67-69)
-    drop_log = _family_case(parsers, lambda p: F.lit(p.is_remove_orig_log))
-    df = df.withColumn("source", F.when(~drop_log, F.col("source")))
-    return df
+    drop_log = _family_case(parsers, lambda p: _bool(p.is_remove_orig_log))
+    return df.withColumn("source", F.expr(f"CASE WHEN (NOT {drop_log}) THEN source END"))

@@ -7,10 +7,11 @@ plugins only FieldsFilter's include list is restated, at the sink write
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from go_fluentd_spark.config import PipelineConfig
+from go_fluentd_spark.functions.sqltext import ident, with_sql
 
 
 def post_default(df: DataFrame, cfg: PipelineConfig, msg_cols: list[str] | None = None) -> DataFrame:
@@ -24,8 +25,8 @@ def post_default(df: DataFrame, cfg: PipelineConfig, msg_cols: list[str] | None 
     # identity/routing columns are not message fields; never touch them
     keep = {"doc_id", "tag", "tag_base", "env", "container_id", "sink"}
     updates = {
-        c: F.nullif(F.substring(F.col(c), 1, cfg.post_max_len), F.lit(""))
+        c: f"nullif(substring({ident(c)}, 1, {int(cfg.post_max_len)}), '')"
         for c in cols
         if c not in keep
     }
-    return df.withColumns(updates)
+    return with_sql(df, updates)

@@ -59,11 +59,12 @@ def http_ingest(
     tag as ``{tag}.{env}`` (the reference parses env + tag out of the URL
     path, ``http.go:163-170``).  Feeds :func:`union_sources` like any other
     receiver."""
+    from go_fluentd_spark.functions.sqltext import ident
     from go_fluentd_spark.functions.textops import flatten_json_map
 
     v = http_validate(df, body_col=body_col, **validate_kwargs)
     return (
-        v.withColumn("msg", flatten_json_map(F.col(body_col)))
+        v.withColumn("msg", F.expr(flatten_json_map(ident(body_col))))
         .filter(F.col("msg").isNotNull())
         .withColumn("tag", F.lit(f"{tag}.{env}"))
     )

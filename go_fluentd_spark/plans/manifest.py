@@ -81,6 +81,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from go_fluentd_spark.config import DEFAULT_CONFIG, PipelineConfig
+from go_fluentd_spark.functions.sqltext import sql_in, sql_str
 from go_fluentd_spark.operators.dispatcher import write_fanout
 from go_fluentd_spark.plans import pipeline as P
 from go_fluentd_spark.session import hadoop_fs, holds_parquet, local_table
@@ -146,8 +147,8 @@ class ManifestedRun:
             self.spark.read.schema(MANIFEST_SCHEMA)
             .parquet(path)
             .filter(
-                (F.col("input_sig") == input_sig)
-                & F.col("state").isin("committed", "discarded")
+                f"((input_sig = {sql_str(input_sig)}) AND "
+                f"{sql_in('state', ['committed', 'discarded'])})"
             )
             .select("bucket", "sink")
             .collect()
@@ -199,10 +200,10 @@ class ManifestedRun:
 
         df = P.routed(self.spark, sf_dir, cfg)
         df = df.withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(self.n_buckets)).cast("int")
+            "bucket", F.expr(f"CAST(pmod(xxhash64(doc_id), {int(self.n_buckets)}) AS INT)")
         )
         if done:
-            df = df.filter(~F.col("bucket").isin(sorted(done)))  # replay only uncommitted
+            df = df.filter(f"(NOT {sql_in('bucket', sorted(done))})")  # replay only uncommitted
         by_name = {s.name: s for s in cfg.sinks}
         attempts = dict.fromkeys(sinks, 0)
         delivered: list[str] = []
@@ -217,7 +218,7 @@ class ManifestedRun:
             ready = [s for s in pending if s not in errs]
             if ready:
                 try:
-                    write_fanout(df.filter(F.col("sink").isin(ready)), cfg, self.out_dir, "bucket")
+                    write_fanout(df.filter(sql_in("sink", ready)), cfg, self.out_dir, "bucket")
                     delivered += ready
                 except Exception as e:  # noqa: BLE001 — retry-or-policy below
                     errs.update(dict.fromkeys(ready, e))
@@ -254,7 +255,7 @@ class ManifestedRun:
                 (sink, b): n
                 for sink, b, n in self.spark.read.schema("sink string, bucket int")
                 .parquet(self.out_dir)
-                .filter(F.col("sink").isin(delivered) & F.col("bucket").isin(todo))
+                .filter(f"({sql_in('sink', delivered)} AND {sql_in('bucket', todo)})")
                 .groupBy("sink", "bucket")
                 .count()
                 .collect()

@@ -56,8 +56,10 @@ these untouched — the per-row token-array-equality gate.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
+
+from go_fluentd_spark.config import ENV_SUFFIX_REGEX, TAG_ENV_REGEX
+from go_fluentd_spark.functions.sqltext import sql_str, with_sql
 
 # Shared literal fragments (also consumed by the DuckDB oracle builder so the
 # two derivations cannot drift).
@@ -70,148 +72,156 @@ CONTINUATION_PREFIX = "at com.example.myproject.Author.getBookIds(Author.java:"
 VOCAB = 50257
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+def load_table(
+    spark: SparkSession, sf_dir: str, name: str, schema: str | None = None
+) -> DataFrame:
+    """``<sf_dir>/<name>.parquet``; with ``schema`` (DDL) the read takes it
+    instead of inferring it, which saves the footer-reading job an inferred
+    read opens with."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _env(did: Column) -> Column:
+class _Sql(str):
+    """An SQL expression fragment (as opposed to a literal) in :func:`_line`."""
+
+
+def _line(*parts: str) -> str:
+    """``concat`` of SQL fragments; a Python ``str`` fragment is a literal,
+    a :class:`_Sql` one is an expression."""
+    return "concat(" + ", ".join(p if isinstance(p, _Sql) else sql_str(p) for p in parts) + ")"
+
+
+def _case(whens: list[tuple[str, str]], otherwise: str | None = None) -> str:
+    """``CASE WHEN c THEN v ... [ELSE otherwise] END`` of SQL fragments."""
+    body = " ".join(f"WHEN {c} THEN {v}" for c, v in whens)
+    return f"CASE {body}" + (f" ELSE {otherwise}" if otherwise is not None else "") + " END"
+
+
+def _synth_sql() -> dict[str, str]:
+    """The four output columns as SQL text over ``did``.  Each mirrors the
+    oracle's ``_SEQ_CTES`` term for term, with the operand order of the
+    Column builders it replaced (``1 + x`` built ``x + 1``)."""
+    ms3 = _Sql("lpad(CAST((did % 1000) AS STRING), 3, '0')")
+    ms6 = _Sql("lpad(CAST((did % 1000000) AS STRING), 6, '0')")
+    nexec = _Sql("CAST(((did % 16) + 1) AS STRING)")
+    dids = _Sql("CAST(did AS STRING)")
+    b = "(did % 100)"
     # keyed off (did % 50) so every row of one container shares one env (and
-    # therefore one tag) — multiline sessions never straddle tags, matching
+    # therefore one tag): multiline sessions never straddle tags, matching
     # reality: one container logs to one tag
-    e = (did % 50) % 3
-    return F.when(e == 0, "sit").when(e == 1, "uat").otherwise("prod")
+    env = _Sql(_case(
+        [("(((did % 50) % 3) = 0)", "'sit'"), ("(((did % 50) % 3) = 1)", "'uat'")], "'prod'"
+    ))
 
-
-def sequences_df(spark: SparkSession, sf_dir: str, rep: int = 1) -> DataFrame:
-    """Build the tokenized-sequence table from ``orders.parquet``.
-
-    Pure Column expressions (whole-stage codegen, no Python in the row path);
-    the scan prunes to the single ``o_orderkey`` column.  ``rep`` > 1
-    replicates rows for benchmarking (dense-unique ids preserved).
-    """
-    did = F.col("did")
-    env = _env(did)
-    b = did % 100
-    ms3 = F.lpad((did % 1000).cast("string"), 3, "0")
-    ms6 = F.lpad((did % 1000000).cast("string"), 6, "0")
-    nexec = ((did % 16) + 1).cast("string")
-    dids = did.cast("string")
-
-    spring_line = F.concat(
-        F.lit("2018-03-06 16:56:22."), ms3,
-        F.lit(" | mscparea | INFO  | http-nio-8080-exec-"), nexec,
-        F.lit(" | " + SPRING_CLASS + " | 84: test message "), dids,
+    spring_line = _line(
+        "2018-03-06 16:56:22.", ms3, " | mscparea | INFO  | http-nio-8080-exec-", nexec,
+        " | " + SPRING_CLASS + " | 84: test message ", dids,
     )
     # bucket 57: regex-valid shape but impossible date -> the parser's
     # unparseable-time discard path (parser_f.go:121-168)
-    spring_badtime_line = F.concat(
-        F.lit("2018-02-30 16:56:22."), ms3,
-        F.lit(" | mscparea | INFO  | http-nio-8080-exec-"), nexec,
-        F.lit(" | " + SPRING_CLASS + " | 84: bad time "), dids,
+    spring_badtime_line = _line(
+        "2018-02-30 16:56:22.", ms3, " | mscparea | INFO  | http-nio-8080-exec-", nexec,
+        " | " + SPRING_CLASS + " | 84: bad time ", dids,
     )
-    bot_line = F.concat(
-        F.lit("2018-03-06 16:56:22."), ms3,
-        F.lit(" | ms_bot7 | WARN  | http-nio-8080-exec-"), nexec,
-        F.lit(" | com.laisky.svc.BotHandler | 112: bot event "), dids,
+    bot_line = _line(
+        "2018-03-06 16:56:22.", ms3, " | ms_bot7 | WARN  | http-nio-8080-exec-", nexec,
+        " | com.laisky.svc.BotHandler | 112: bot event ", dids,
     )
     # cp rows keep the spring pipe shape (so they concat under the spring
     # head_regexp like real spring-tagged traffic) but carry the "- ms:cp"
     # marker that fires SpringFilter retag rule 1 (settings.yml:650-652).
-    cp_line = F.concat(
-        F.lit("2018-02-01 16:15:43."), ms3,
-        F.lit(" | mscpsvc | INFO  | http-nio-8080-exec-"), nexec,
-        F.lit(" | com.laisky.cp.CpService | 84: handled - ms:cp event "), dids,
+    cp_line = _line(
+        "2018-02-01 16:15:43.", ms3, " | mscpsvc | INFO  | http-nio-8080-exec-", nexec,
+        " | com.laisky.cp.CpService | 84: handled - ms:cp event ", dids,
     )
     # every other args row carries a NESTED object so the parser's recursive
     # FlattenMap path (args__nested__a) is exercised end-to-end
-    connector_args_tail = F.when(
-        did % 4 == 0,
-        F.concat(F.lit('", "nested": {"a": "'), (did % 7).cast("string"), F.lit('"}}')),
-    ).otherwise(F.lit('"}'))
-    connector_args_line = F.concat(
-        F.lit("2018-04-02 02:02:10."), ms3,
-        F.lit(" | sh-datamining | INFO | http-nio-8080-exec-"), nexec,
-        F.lit(" | " + CONNECTOR_CLASS + ' | 74 | {"k": "v'), (did % 5).cast("string"),
-        connector_args_tail,
-        F.lit(": request "), dids,
+    connector_args_tail = _case(
+        [("((did % 4) = 0)", _line('", "nested": {"a": "', _Sql("CAST((did % 7) AS STRING)"), '"}}'))],
+        sql_str('"}'),
     )
-    connector_plain_line = F.concat(
-        F.lit("2018-04-02 02:02:10."), ms3,
-        F.lit(" | sh-datamining | INFO | http-nio-8080-exec-"), nexec,
-        F.lit(" | " + CONNECTOR_CLASS + " | 74: plain request "), dids,
+    connector_args_line = _line(
+        "2018-04-02 02:02:10.", ms3, " | sh-datamining | INFO | http-nio-8080-exec-", nexec,
+        " | " + CONNECTOR_CLASS + ' | 74 | {"k": "v', _Sql("CAST((did % 5) AS STRING)"),
+        _Sql(connector_args_tail), ": request ", dids,
     )
-    geely_line = F.concat(
-        F.lit("2018-02-05 10:33:13."), ms3,
-        F.lit(" | geely:nlcc | INFO | http-bio-8081-exec-"), ((did % 9) + 1).cast("string"),
-        F.lit(" | " + GEELY_CLASS + ":57 - Outbound Message "), dids,
+    connector_plain_line = _line(
+        "2018-04-02 02:02:10.", ms3, " | sh-datamining | INFO | http-nio-8080-exec-", nexec,
+        " | " + CONNECTOR_CLASS + " | 74: plain request ", dids,
     )
-    spark_ignore_line = F.concat(
-        F.lit("2018-03-06 16:56:22,"), ms3, F.lit(" [main] something "), dids
+    geely_line = _line(
+        "2018-02-05 10:33:13.", ms3, " | geely:nlcc | INFO | http-bio-8081-exec-",
+        _Sql("CAST(((did % 9) + 1) AS STRING)"),
+        " | " + GEELY_CLASS + ":57 - Outbound Message ", dids,
     )
-    spark_head_line = F.concat(
-        F.lit("2018/03/06 16:56:22."), ms3, F.lit(" running task "), dids
+    spark_ignore_line = _line("2018-03-06 16:56:22,", ms3, " [main] something ", dids)
+    spark_head_line = _line("2018/03/06 16:56:22.", ms3, " running task ", dids)
+    ramjet_line = _line(
+        "[2018-08-03T05:42:42.", ms6,
+        "Z - DEBUG - " + RAMJET_PATH + ":129] IsFileReadyToUpload for ", dids, ".log.gz",
     )
-    ramjet_line = F.concat(
-        F.lit("[2018-08-03T05:42:42."), ms6,
-        F.lit("Z - DEBUG - " + RAMJET_PATH + ":129] IsFileReadyToUpload for "),
-        dids, F.lit(".log.gz"),
+    continuation_line = _line(
+        "\t" + CONTINUATION_PREFIX, _Sql("CAST(((did % 90) + 10) AS STRING)"), ")"
     )
-    continuation_line = F.concat(
-        F.lit("\t" + CONTINUATION_PREFIX), ((did % 90) + 10).cast("string"), F.lit(")")
-    )
-    junk_tag_line = F.concat(F.lit("orphan "), dids)
+    junk_tag_line = _line("orphan ", dids)
     # head-shaped (matches SPRING_HEAD_REGEX => standalone session) but only
     # one pipe field => the spring/connector parser pattern misses
-    junk_body_line = F.concat(
-        F.lit("2018-03-06 16:56:22."), ms3, F.lit(" | corrupted "), dids
-    )
+    junk_body_line = _line("2018-03-06 16:56:22.", ms3, " | corrupted ", dids)
 
-    base = (
-        F.when(b < 73, "spring")
-        .when(b < 80, "connector")
-        .when(b < 87, "geely")
-        .when(b < 91, "spark")
-        .when(b < 94, "ramjet")
-        .when(b < 96, "spring")
-        .when(b < 98, "junkapp")
-        .otherwise("spring")
+    base = _Sql(_case(
+        [(f"({b} < {hi})", sql_str(name)) for hi, name in (
+            (73, "spring"), (80, "connector"), (87, "geely"), (91, "spark"),
+            (94, "ramjet"), (96, "spring"), (98, "junkapp"),
+        )],
+        sql_str("spring"),
+    ))
+    even = "((did % 2) = 0)"
+    source = _case(
+        [
+            (f"({b} = 57)", spring_badtime_line),
+            (f"({b} < 60)", spring_line),
+            (f"({b} < 67)", bot_line),
+            (f"({b} < 73)", cp_line),
+            (f"({b} < 80)", _case([(even, connector_args_line)], connector_plain_line)),
+            (f"({b} < 87)", geely_line),
+            (f"({b} < 91)", _case([(even, spark_ignore_line)], spark_head_line)),
+            (f"({b} < 94)", ramjet_line),
+            (f"({b} < 96)", continuation_line),
+            (f"({b} < 98)", junk_tag_line),
+        ],
+        junk_body_line,
     )
-    source = (
-        F.when(b == 57, spring_badtime_line)
-        .when(b < 60, spring_line)
-        .when(b < 67, bot_line)
-        .when(b < 73, cp_line)
-        .when(b < 80, F.when(did % 2 == 0, connector_args_line).otherwise(connector_plain_line))
-        .when(b < 87, geely_line)
-        .when(b < 91, F.when(did % 2 == 0, spark_ignore_line).otherwise(spark_head_line))
-        .when(b < 94, ramjet_line)
-        .when(b < 96, continuation_line)
-        .when(b < 98, junk_tag_line)
-        .otherwise(junk_body_line)
-    )
-    n_tok = (
-        F.when(did % 10 == 0, 1 + (did * 131071) % 512)
-        .otherwise(1 + (did * 131071) % 64)
-        .cast("int")
-    )
+    n_tok = "CAST(" + _case(
+        [("((did % 10) = 0)", "(((did * 131071) % 512) + 1)")], "(((did * 131071) % 64) + 1)"
+    ) + " AS INT)"
     # container id: 5000 distinct values (realistic pod/container cardinality
     # so the concat window parallelizes), constructed so a continuation row
     # (bucket 94/95) always shares its container with the head rows of the
     # same did-group: (did%50) pins the bucket-pair, floor(did/100)%100
     # spreads groups — both terms are equal for did = 100g+44 vs 100g+94.
-    container = (did % 50) * 100 + F.floor(did / 100).cast("bigint") % 100
-    doc_id = F.concat(
-        base, F.lit("."), env,
-        F.lit("-c"), F.lpad(container.cast("string"), 4, "0"),
-        F.lit("-"), F.lpad(dids, 8, "0"),
+    container = _Sql(
+        "lpad(CAST((((did % 50) * 100) + (CAST(FLOOR((did / 100)) AS BIGINT) % 100)) AS STRING), 4, '0')"
     )
-    tokens = F.transform(
-        F.sequence(F.lit(0), n_tok - 1),
-        lambda i: ((did * 2654435761 + i.cast("bigint") * 40503) % VOCAB).cast("int"),
+    doc_id = _line(base, ".", env, "-c", container, "-", _Sql(f"lpad({dids}, 8, '0')"))
+    tokens = (
+        f"transform(sequence(0, ({n_tok} - 1)), "
+        f"i -> CAST((((did * 2654435761) + (CAST(i AS BIGINT) * 40503)) % {VOCAB}) AS INT))"
     )
+    return {"doc_id": doc_id, "tokens": tokens, "n_tok": n_tok, "source": source}
 
-    docs = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").cast("bigint").alias("ok")
+
+def sequences_df(spark: SparkSession, sf_dir: str, rep: int = 1) -> DataFrame:
+    """Build the tokenized-sequence table from ``orders.parquet``.
+
+    SQL-text expressions (whole-stage codegen, no Python in the row path),
+    one ``selectExpr`` per step.  The scan reads the single ``o_orderkey``
+    column with its type given (bigint; an int32 column widens on read), so
+    no job infers the file schema.  ``rep`` > 1 replicates rows for
+    benchmarking (dense-unique ids preserved).
+    """
+    docs = load_table(spark, sf_dir, "orders", "o_orderkey bigint").selectExpr(
+        "CAST(o_orderkey AS BIGINT) AS ok"
     )
     # the testdata parquet is one small file; spread the 8-byte keys across
     # all cores BEFORE replication/generation so the expensive row synthesis
@@ -219,17 +229,12 @@ def sequences_df(spark: SparkSession, sf_dir: str, rep: int = 1) -> DataFrame:
     # splits and this repartition is unnecessary)
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
     if rep > 1:
-        docs = docs.select(
-            "ok", F.explode(F.sequence(F.lit(0), F.lit(rep - 1))).alias("r")
-        ).select((F.col("ok") * rep + F.col("r")).alias("did"))
+        docs = docs.selectExpr("ok", f"explode(sequence(0, {rep - 1})) AS r").selectExpr(
+            f"((ok * {rep}) + r) AS did"
+        )
     else:
-        docs = docs.select(F.col("ok").alias("did"))
-    return docs.select(
-        doc_id.alias("doc_id"),
-        tokens.alias("tokens"),
-        n_tok.alias("n_tok"),
-        source.alias("source"),
-    )
+        docs = docs.selectExpr("ok AS did")
+    return docs.selectExpr(*[f"{e} AS {c}" for c, e in _synth_sql().items()])
 
 
 def with_ingest_columns(df: DataFrame) -> DataFrame:
@@ -241,17 +246,20 @@ def with_ingest_columns(df: DataFrame) -> DataFrame:
     identifier (``lb_key``, settings.yml:237); id = monotonic receive ID
     (``internal/recvs/fluentd.go:384``).
     """
-    return df.withColumns(
+    df = with_sql(
+        df,
         {
-            "tag": F.split_part(F.col("doc_id"), F.lit("-"), F.lit(1)),
-            "container_id": F.split_part(F.col("doc_id"), F.lit("-"), F.lit(2)),
-            "id": F.split_part(F.col("doc_id"), F.lit("-"), F.lit(3)).cast("bigint"),
-        }
-    ).withColumns(
+            "tag": "split_part(doc_id, '-', 1)",
+            "container_id": "split_part(doc_id, '-', 2)",
+            "id": "CAST(split_part(doc_id, '-', 3) AS BIGINT)",
+        },
+    )
+    # tag = "<base>.<env>": env is the suffix after the last '.', base
+    # everything before it (base itself may contain dots).
+    return with_sql(
+        df,
         {
-            # tag = "<base>.<env>": env is the suffix after the last '.',
-            # base everything before it (base itself may contain dots).
-            "env": F.regexp_extract(F.col("tag"), r"\.([a-z]+)$", 1),
-            "tag_base": F.regexp_replace(F.col("tag"), r"\.[a-z]+$", ""),
-        }
+            "env": f"regexp_extract(tag, {sql_str(ENV_SUFFIX_REGEX)}, 1)",
+            "tag_base": f"regexp_replace(tag, {sql_str(TAG_ENV_REGEX)}, '')",
+        },
     )

@@ -32,11 +32,12 @@ from functools import partial
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from go_fluentd_spark.config import CONCAT_CONFIGS, DEFAULT_CONFIG, PipelineConfig
+from go_fluentd_spark.functions.sqltext import sql_in, sql_str
 from go_fluentd_spark.operators.acceptor import acceptor_chain
 from go_fluentd_spark.operators.dispatcher import route, write_fanout
 from go_fluentd_spark.operators.enrich import msgid
@@ -451,6 +452,20 @@ def drain_and_stop(
     return True
 
 
+def _observe_tag_counts(
+    batch_df: DataFrame, cfg: PipelineConfig, batch_id: int
+) -> tuple[DataFrame, Observation]:
+    """``batch_df`` with its per-tag row counts observed: one ``count_if``
+    per accepted tag (``t<i>``) and ``other`` for a tag outside them, read
+    from the returned Observation after the frame's first action."""
+    obs = Observation(f"counts-{batch_id}")
+    counts = [
+        F.expr(f"count_if((tag = {sql_str(t)})) AS t{i}") for i, t in enumerate(cfg.accept_tags)
+    ]
+    other = F.expr(f"count_if((NOT {sql_in('tag', cfg.accept_tags)})) AS other")
+    return batch_df.observe(obs, *counts, other), obs
+
+
 def run_pipeline_stream(
     spark: SparkSession,
     src_dir: str,
@@ -561,17 +576,7 @@ def run_pipeline_stream(
         # change), that batch falls back to the old groupBy job rather
         # than under-counting.  The _counts table layout, values, and
         # per-batch_id idempotent overwrite are unchanged.
-        from pyspark.sql import Observation
-
-        obs = Observation(f"counts-{batch_id}")
-        tag_counts = [
-            F.count_if(F.col("tag") == t).alias(f"t{i}")
-            for i, t in enumerate(cfg.accept_tags)
-        ]
-        other = F.count_if(
-            ~F.col("tag").isin(list(cfg.accept_tags))
-        ).alias("other")
-        observed = batch_df.observe(obs, *tag_counts, other)
+        observed, obs = _observe_tag_counts(batch_df, cfg, batch_id)
         write_fanout(route(spark, observed, cfg), cfg, out_dir, "batch_id")
         got = obs.get
         spark_b = batch_df.sparkSession

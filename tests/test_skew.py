@@ -1,39 +1,66 @@
 """Hot-tag skew handling: one tag dominates traffic (the prod norm,
-reference docs/quickstart.md:122-127 — a single tag ≈ 100% of msgs).
-Partitioning sink writes by tag alone would put the hot tag's entire
-volume in one task; salting with pmod(xxhash64(doc_id), S) spreads it."""
+reference docs/quickstart.md:122-127 — a single tag ≈ 100% of msgs).  The
+pipeline's one shuffle, the concat's Exchange, hashes (tag, container_id),
+not the tag alone, so the hot tag's rows spread over every shuffle
+partition by container; and the hot-gram corpus for substr_dup_spans."""
 
 from pyspark.sql import functions as F
 
 from go_fluentd_spark.plans import pipeline as P
 
 
-def partition_sizes(df, *cols):
-    return [
-        r.n
-        for r in df.repartition(16, *cols)
-        .groupBy(F.spark_partition_id().alias("p"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    ]
-
-
-def test_salting_defuses_hot_tag(spark, sf_dir):
-    df = P.enriched(spark, sf_dir).select("doc_id", "tag").persist()
+def test_concat_exchange_spreads_hot_tag(spark, sf_dir):
+    """With AQE coalescing off (so the 16 shuffle partitions stay 16), the
+    post-concat rows spread evenly under the synth's hot-tag mix, where a
+    tag-keyed exchange would put each of the few hot tags' rows into one
+    partition."""
+    conf = {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "16",
+    }
+    old = {k: spark.conf.get(k) for k in conf}
     try:
-        total = df.count()
-        by_tag = partition_sizes(df, F.col("tag"))
-        salted = partition_sizes(
-            df, F.col("tag"), F.pmod(F.xxhash64("doc_id"), F.lit(8))
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        df = P.concatted(spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        exchanges = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
+        assert len(exchanges) == 1, plan
+        assert "hashpartitioning(tag#" in exchanges[0] and ", container_id#" in exchanges[0]
+        assert exchanges[0].rstrip().split("), ")[0].endswith(", 16"), exchanges[0]
+
+        rows = (
+            df.select(
+                "tag",
+                F.spark_partition_id().alias("p"),
+                # the partition a tag-only exchange would send the row to
+                F.pmod(F.hash("tag"), F.lit(16)).alias("p_tag"),
+            )
+            .groupBy("tag", "p", "p_tag")
+            .count()
+            .collect()
         )
-        imb_tag = max(by_tag) / (total / 16)
-        imb_salt = max(salted) / (total / 16)
-        # app.spring is ~66% of routed rows -> tag-only partitioning is
-        # badly imbalanced; salting must cut the max-partition ratio sharply
-        assert imb_tag > 3.0, (imb_tag, by_tag)
-        assert imb_salt < imb_tag / 2, (imb_salt, salted)
     finally:
-        df.unpersist()
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    total = sum(r["count"] for r in rows)
+    mean = total / 16
+
+    def imbalance(key):
+        sizes: dict[int, int] = {}
+        for r in rows:
+            sizes[r[key]] = sizes.get(r[key], 0) + r["count"]
+        return max(sizes.values()) / mean, len(sizes)
+
+    by_tag: dict[str, int] = {}
+    for r in rows:
+        by_tag[r.tag] = by_tag.get(r.tag, 0) + r["count"]
+    # the synth mix: the spring base is ~80% of pre-retag rows over 3 envs
+    assert max(by_tag.values()) / total > 0.2, by_tag
+    imb_tag, _ = imbalance("p_tag")
+    imb, used = imbalance("p")
+    assert imb_tag > 3.0, imb_tag
+    assert used == 16 and imb < 1.6, (imb, used)
 
 
 def test_substr_dup_spans_hot_gram(spark, tmp_path):

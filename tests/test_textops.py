@@ -62,7 +62,7 @@ def test_flatten_json_map_golden(spark):
     df = spark.createDataFrame(
         [('{"a": "1", "b": {"c": 2, "d": {"e": 3}}, "f": 4}',)], "j string"
     )
-    got = df.select(flatten_json_map(F.col("j")).alias("m")).collect()[0].m
+    got = df.select(F.expr(flatten_json_map("j")).alias("m")).collect()[0].m
     assert got == {"a": "1", "b__c": "2", "b__d__e": "3", "f": "4"}
 
 
@@ -73,7 +73,7 @@ def test_flatten_json_map_edges(spark):
         ('{"deep": {"a": {"b": {"c": 1}}}}',),  # beyond max_depth: JSON text
     ]
     df = spark.createDataFrame(rows, "j string")
-    out = [r.m for r in df.select(flatten_json_map(F.col("j")).alias("m")).collect()]
+    out = [r.m for r in df.select(F.expr(flatten_json_map("j")).alias("m")).collect()]
     assert out[0] is None
     assert out[1] == {"x": "{oops"}
     assert out[2] == {"deep__a__b": '{"c":1}'}
@@ -91,7 +91,7 @@ def test_flatten_json_map_colliding_keys_last_wins(spark):
         ('{"x": "1", "x": "2"}',),                # duplicate literal key
     ]
     df = spark.createDataFrame(rows, "j string")
-    out = [r.m for r in df.select(flatten_json_map(F.col("j")).alias("m")).collect()]
+    out = [r.m for r in df.select(F.expr(flatten_json_map("j")).alias("m")).collect()]
     assert out[0] == {"a__b": "2"}   # flattened child came after the literal
     assert out[1] == {"a__b": "1"}   # literal came after the flattened child
     assert out[2] == {"x": "2"}

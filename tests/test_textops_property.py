@@ -57,5 +57,5 @@ def test_flatten_json_map_matches_python_reference(spark, payloads):
     if not payloads:
         return
     df = spark.createDataFrame([(json.dumps(p),) for p in payloads], "j string")
-    got = [r.m for r in df.select(flatten_json_map(F.col("j")).alias("m")).collect()]
+    got = [r.m for r in df.select(F.expr(flatten_json_map("j")).alias("m")).collect()]
     assert got == [python_flatten(p) for p in payloads]
