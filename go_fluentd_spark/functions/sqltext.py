@@ -47,7 +47,10 @@ def ident(name: str) -> str:
 
 def sql_in(expr: str, values) -> str:
     """``expr IN (v1, v2, ...)``: strings through :func:`sql_str`, ints as
-    integer literals."""
+    integer literals.  No values is ``false`` (SQL has no empty IN list;
+    ``isin([])`` is false too, for a NULL ``expr`` as well)."""
+    if not values:
+        return "false"
     lits = (sql_str(v) if isinstance(v, str) else str(int(v)) for v in values)
     return f"{expr} IN ({', '.join(lits)})"
 

@@ -1,1 +1,1 @@
-from go_fluentd_spark.sources.synth import sequences_df, load_table  # noqa: F401
+from go_fluentd_spark.sources.synth import sequences_df  # noqa: F401

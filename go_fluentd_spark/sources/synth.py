@@ -72,110 +72,107 @@ CONTINUATION_PREFIX = "at com.example.myproject.Author.getBookIds(Author.java:"
 VOCAB = 50257
 
 
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, schema: str | None = None
-) -> DataFrame:
-    """``<sf_dir>/<name>.parquet``; with ``schema`` (DDL) the read takes it
-    instead of inferring it, which saves the footer-reading job an inferred
-    read opens with."""
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(f"{sf_dir}/{name}.parquet")
-
-
-class _Sql(str):
-    """An SQL expression fragment (as opposed to a literal) in :func:`_line`."""
-
-
 def _line(*parts: str) -> str:
-    """``concat`` of SQL fragments; a Python ``str`` fragment is a literal,
-    a :class:`_Sql` one is an expression."""
-    return "concat(" + ", ".join(p if isinstance(p, _Sql) else sql_str(p) for p in parts) + ")"
+    """``concat`` of SQL fragments (literals already through ``sql_str``)."""
+    return "concat(" + ", ".join(parts) + ")"
 
 
-def _case(whens: list[tuple[str, str]], otherwise: str | None = None) -> str:
-    """``CASE WHEN c THEN v ... [ELSE otherwise] END`` of SQL fragments."""
+def _case(whens: list[tuple[str, str]], otherwise: str) -> str:
+    """``CASE WHEN c THEN v ... ELSE otherwise END`` of SQL fragments."""
     body = " ".join(f"WHEN {c} THEN {v}" for c, v in whens)
-    return f"CASE {body}" + (f" ELSE {otherwise}" if otherwise is not None else "") + " END"
+    return f"CASE {body} ELSE {otherwise} END"
 
 
 def _synth_sql() -> dict[str, str]:
     """The four output columns as SQL text over ``did``.  Each mirrors the
     oracle's ``_SEQ_CTES`` term for term, with the operand order of the
     Column builders it replaced (``1 + x`` built ``x + 1``)."""
-    ms3 = _Sql("lpad(CAST((did % 1000) AS STRING), 3, '0')")
-    ms6 = _Sql("lpad(CAST((did % 1000000) AS STRING), 6, '0')")
-    nexec = _Sql("CAST(((did % 16) + 1) AS STRING)")
-    dids = _Sql("CAST(did AS STRING)")
+    ms3 = "lpad(CAST((did % 1000) AS STRING), 3, '0')"
+    ms6 = "lpad(CAST((did % 1000000) AS STRING), 6, '0')"
+    nexec = "CAST(((did % 16) + 1) AS STRING)"
+    dids = "CAST(did AS STRING)"
     b = "(did % 100)"
     # keyed off (did % 50) so every row of one container shares one env (and
     # therefore one tag): multiline sessions never straddle tags, matching
     # reality: one container logs to one tag
-    env = _Sql(_case(
+    env = _case(
         [("(((did % 50) % 3) = 0)", "'sit'"), ("(((did % 50) % 3) = 1)", "'uat'")], "'prod'"
-    ))
+    )
 
     spring_line = _line(
-        "2018-03-06 16:56:22.", ms3, " | mscparea | INFO  | http-nio-8080-exec-", nexec,
-        " | " + SPRING_CLASS + " | 84: test message ", dids,
+        sql_str("2018-03-06 16:56:22."), ms3,
+        sql_str(" | mscparea | INFO  | http-nio-8080-exec-"), nexec,
+        sql_str(" | " + SPRING_CLASS + " | 84: test message "), dids,
     )
     # bucket 57: regex-valid shape but impossible date -> the parser's
     # unparseable-time discard path (parser_f.go:121-168)
     spring_badtime_line = _line(
-        "2018-02-30 16:56:22.", ms3, " | mscparea | INFO  | http-nio-8080-exec-", nexec,
-        " | " + SPRING_CLASS + " | 84: bad time ", dids,
+        sql_str("2018-02-30 16:56:22."), ms3,
+        sql_str(" | mscparea | INFO  | http-nio-8080-exec-"), nexec,
+        sql_str(" | " + SPRING_CLASS + " | 84: bad time "), dids,
     )
     bot_line = _line(
-        "2018-03-06 16:56:22.", ms3, " | ms_bot7 | WARN  | http-nio-8080-exec-", nexec,
-        " | com.laisky.svc.BotHandler | 112: bot event ", dids,
+        sql_str("2018-03-06 16:56:22."), ms3,
+        sql_str(" | ms_bot7 | WARN  | http-nio-8080-exec-"), nexec,
+        sql_str(" | com.laisky.svc.BotHandler | 112: bot event "), dids,
     )
     # cp rows keep the spring pipe shape (so they concat under the spring
     # head_regexp like real spring-tagged traffic) but carry the "- ms:cp"
     # marker that fires SpringFilter retag rule 1 (settings.yml:650-652).
     cp_line = _line(
-        "2018-02-01 16:15:43.", ms3, " | mscpsvc | INFO  | http-nio-8080-exec-", nexec,
-        " | com.laisky.cp.CpService | 84: handled - ms:cp event ", dids,
+        sql_str("2018-02-01 16:15:43."), ms3,
+        sql_str(" | mscpsvc | INFO  | http-nio-8080-exec-"), nexec,
+        sql_str(" | com.laisky.cp.CpService | 84: handled - ms:cp event "), dids,
     )
     # every other args row carries a NESTED object so the parser's recursive
     # FlattenMap path (args__nested__a) is exercised end-to-end
     connector_args_tail = _case(
-        [("((did % 4) = 0)", _line('", "nested": {"a": "', _Sql("CAST((did % 7) AS STRING)"), '"}}'))],
+        [(
+            "((did % 4) = 0)",
+            _line(sql_str('", "nested": {"a": "'), "CAST((did % 7) AS STRING)", sql_str('"}}')),
+        )],
         sql_str('"}'),
     )
     connector_args_line = _line(
-        "2018-04-02 02:02:10.", ms3, " | sh-datamining | INFO | http-nio-8080-exec-", nexec,
-        " | " + CONNECTOR_CLASS + ' | 74 | {"k": "v', _Sql("CAST((did % 5) AS STRING)"),
-        _Sql(connector_args_tail), ": request ", dids,
+        sql_str("2018-04-02 02:02:10."), ms3,
+        sql_str(" | sh-datamining | INFO | http-nio-8080-exec-"), nexec,
+        sql_str(" | " + CONNECTOR_CLASS + ' | 74 | {"k": "v'), "CAST((did % 5) AS STRING)",
+        connector_args_tail, sql_str(": request "), dids,
     )
     connector_plain_line = _line(
-        "2018-04-02 02:02:10.", ms3, " | sh-datamining | INFO | http-nio-8080-exec-", nexec,
-        " | " + CONNECTOR_CLASS + " | 74: plain request ", dids,
+        sql_str("2018-04-02 02:02:10."), ms3,
+        sql_str(" | sh-datamining | INFO | http-nio-8080-exec-"), nexec,
+        sql_str(" | " + CONNECTOR_CLASS + " | 74: plain request "), dids,
     )
     geely_line = _line(
-        "2018-02-05 10:33:13.", ms3, " | geely:nlcc | INFO | http-bio-8081-exec-",
-        _Sql("CAST(((did % 9) + 1) AS STRING)"),
-        " | " + GEELY_CLASS + ":57 - Outbound Message ", dids,
+        sql_str("2018-02-05 10:33:13."), ms3,
+        sql_str(" | geely:nlcc | INFO | http-bio-8081-exec-"), "CAST(((did % 9) + 1) AS STRING)",
+        sql_str(" | " + GEELY_CLASS + ":57 - Outbound Message "), dids,
     )
-    spark_ignore_line = _line("2018-03-06 16:56:22,", ms3, " [main] something ", dids)
-    spark_head_line = _line("2018/03/06 16:56:22.", ms3, " running task ", dids)
+    spark_ignore_line = _line(
+        sql_str("2018-03-06 16:56:22,"), ms3, sql_str(" [main] something "), dids
+    )
+    spark_head_line = _line(sql_str("2018/03/06 16:56:22."), ms3, sql_str(" running task "), dids)
     ramjet_line = _line(
-        "[2018-08-03T05:42:42.", ms6,
-        "Z - DEBUG - " + RAMJET_PATH + ":129] IsFileReadyToUpload for ", dids, ".log.gz",
+        sql_str("[2018-08-03T05:42:42."), ms6,
+        sql_str("Z - DEBUG - " + RAMJET_PATH + ":129] IsFileReadyToUpload for "), dids,
+        sql_str(".log.gz"),
     )
     continuation_line = _line(
-        "\t" + CONTINUATION_PREFIX, _Sql("CAST(((did % 90) + 10) AS STRING)"), ")"
+        sql_str("\t" + CONTINUATION_PREFIX), "CAST(((did % 90) + 10) AS STRING)", sql_str(")")
     )
-    junk_tag_line = _line("orphan ", dids)
+    junk_tag_line = _line(sql_str("orphan "), dids)
     # head-shaped (matches SPRING_HEAD_REGEX => standalone session) but only
     # one pipe field => the spring/connector parser pattern misses
-    junk_body_line = _line("2018-03-06 16:56:22.", ms3, " | corrupted ", dids)
+    junk_body_line = _line(sql_str("2018-03-06 16:56:22."), ms3, sql_str(" | corrupted "), dids)
 
-    base = _Sql(_case(
+    base = _case(
         [(f"({b} < {hi})", sql_str(name)) for hi, name in (
             (73, "spring"), (80, "connector"), (87, "geely"), (91, "spark"),
             (94, "ramjet"), (96, "spring"), (98, "junkapp"),
         )],
         sql_str("spring"),
-    ))
+    )
     even = "((did % 2) = 0)"
     source = _case(
         [
@@ -200,10 +197,12 @@ def _synth_sql() -> dict[str, str]:
     # (bucket 94/95) always shares its container with the head rows of the
     # same did-group: (did%50) pins the bucket-pair, floor(did/100)%100
     # spreads groups — both terms are equal for did = 100g+44 vs 100g+94.
-    container = _Sql(
+    container = (
         "lpad(CAST((((did % 50) * 100) + (CAST(FLOOR((did / 100)) AS BIGINT) % 100)) AS STRING), 4, '0')"
     )
-    doc_id = _line(base, ".", env, "-c", container, "-", _Sql(f"lpad({dids}, 8, '0')"))
+    doc_id = _line(
+        base, sql_str("."), env, sql_str("-c"), container, sql_str("-"), f"lpad({dids}, 8, '0')"
+    )
     tokens = (
         f"transform(sequence(0, ({n_tok} - 1)), "
         f"i -> CAST((((did * 2654435761) + (CAST(i AS BIGINT) * 40503)) % {VOCAB}) AS INT))"
@@ -220,9 +219,8 @@ def sequences_df(spark: SparkSession, sf_dir: str, rep: int = 1) -> DataFrame:
     no job infers the file schema.  ``rep`` > 1 replicates rows for
     benchmarking (dense-unique ids preserved).
     """
-    docs = load_table(spark, sf_dir, "orders", "o_orderkey bigint").selectExpr(
-        "CAST(o_orderkey AS BIGINT) AS ok"
-    )
+    docs = spark.read.schema("o_orderkey bigint").parquet(f"{sf_dir}/orders.parquet")
+    docs = docs.selectExpr("o_orderkey AS ok")
     # the testdata parquet is one small file; spread the 8-byte keys across
     # all cores BEFORE replication/generation so the expensive row synthesis
     # is fully parallel (at real scale the source table has thousands of

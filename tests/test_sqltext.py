@@ -83,3 +83,16 @@ def test_ident_in_list_and_with_sql(spark):
     # every expression reads the input frame, as in withColumns
     assert out.columns == [odd, "n", "k"]
     assert out.first() == ("A", 1, True)
+
+
+def test_sql_in_empty_list_is_false_like_isin(spark):
+    """An empty IN list (an accept list with no tags) filters every row out,
+    NULL included, as ``isin([])`` does, instead of failing to parse."""
+    df = spark.createDataFrame([("a",), (None,)], "t string")
+    got = df.select(
+        F.expr(sql_in("t", [])).alias("e"),
+        F.expr(f"(NOT {sql_in('t', [])})").alias("n"),
+        F.col("t").isin([]).alias("w"),
+        (~F.col("t").isin([])).alias("wn"),
+    ).collect()
+    assert [(r.e, r.n) for r in got] == [(r.w, r.wn) for r in got] == [(False, True)] * 2
