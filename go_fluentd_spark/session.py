@@ -6,13 +6,31 @@ unchanged on a multi-executor cluster (``spark-submit --py-files``): AQE on
 parallelism level, Arrow enabled for the pandas-UDF slow path, UTC session
 time zone so the time-normalization operator (reference
 ``internal/tagfilters/parser_f.go:121-168``) is deterministic.
+
+Sessions also bind their own local ``file:`` FileSystem,
+``jvm/InProcessChmodFileSystem.java``.  The program writes its outputs,
+manifests and checkpoints through Hadoop's local FileSystem, which, without
+libhadoop, forks ``chmod`` for every file and directory it creates: 96
+forks of ~5 ms each per fresh manifested run, ~47 per stream trigger.
+The class sets the same modes inside the JVM and writes the same files,
+``.crc`` files included; only the checkpoint's ``FileContext`` writes
+(12-14 per trigger) still fork.  Rebuild its jar with
+``tools/build_jvm.py`` after editing the source.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
+
+#: the ``file:`` FileSystem every session binds, and the jar that holds it
+LOCAL_FS_CLASS = "go_fluentd_spark.jvm.InProcessChmodFileSystem"
+LOCAL_FS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "in-process-chmod-fs.jar"
+)
 
 
 def build_spark(
@@ -23,7 +41,8 @@ def build_spark(
 ) -> SparkSession:
     """Build a local[N] session. ``cores`` defaults to $SPARK_GRAFT_CPUS or 32.
 
-    On a real cluster the same conf block applies minus ``master``;
+    On a real cluster the same conf block applies minus ``master`` and the
+    ``file:`` binding (its jar is on the driver's class path only);
     ``spark.sql.shuffle.partitions`` should then be ~2-3x total cores (AQE
     coalesces down), and executors get the memory knobs instead of the driver.
     """
@@ -61,11 +80,35 @@ def build_spark(
     # observed 3x here; the drain protocol's cooperative stop removes the
     # common trigger, this guards the rest).  Virtual memory only.
     extra_conf.setdefault("spark.driver.extraJavaOptions", "-Xss16m")
+    # local[N]: the executors are this JVM, so the driver's class path is
+    # theirs.  A caller's class path keeps its entries; the jar is added.
+    cp = extra_conf.get("spark.driver.extraClassPath")
+    extra_conf["spark.driver.extraClassPath"] = (
+        f"{cp}{os.pathsep}{LOCAL_FS_JAR}" if cp else LOCAL_FS_JAR
+    )
+    if _jvm_loads_local_fs():
+        extra_conf["spark.hadoop.fs.file.impl"] = LOCAL_FS_CLASS
     for k, v in extra_conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _jvm_loads_local_fs() -> bool:
+    """Whether the driver JVM can load ``LOCAL_FS_CLASS``: true when this
+    call launches it (with the jar on its class path); a JVM already running
+    was launched by whoever first built a context, perhaps without the jar,
+    and binding a class it cannot load would fail every local file
+    operation."""
+    gateway = SparkContext._gateway
+    if gateway is None:
+        return True
+    try:
+        gateway.jvm.java.lang.Class.forName(LOCAL_FS_CLASS)
+    except Py4JError:
+        return False
+    return True
 
 
 def local_table(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
