@@ -7,8 +7,8 @@ parallelism level, Arrow enabled for the pandas-UDF slow path, UTC session
 time zone so the time-normalization operator (reference
 ``internal/tagfilters/parser_f.go:121-168``) is deterministic.
 
-Sessions also bind their own local ``file:`` FileSystem,
-``jvm/InProcessChmodFileSystem.java``.  The program writes its outputs,
+Sessions whose JVM this process launches also bind their own local
+``file:`` FileSystem, ``jvm/InProcessChmodFileSystem.java``.  The program writes its outputs,
 manifests and checkpoints through Hadoop's local FileSystem, which, without
 libhadoop, forks ``chmod`` for every file and directory it creates: 96
 forks of ~5 ms each per fresh manifested run, ~47 per stream trigger.
@@ -41,8 +41,13 @@ def build_spark(
 ) -> SparkSession:
     """Build a local[N] session. ``cores`` defaults to $SPARK_GRAFT_CPUS or 32.
 
-    On a real cluster the same conf block applies minus ``master`` and the
-    ``file:`` binding (its jar is on the driver's class path only);
+    The ``file:`` binding (``LOCAL_FS_CLASS``) is set only where the driver
+    JVM can load it: when this call launches the JVM with the jar on its
+    class path, or when a JVM already running here loads the class.  Under
+    ``spark-submit`` the JVM is running before Python starts and PySpark
+    attaches to it, so the session keeps Hadoop's own ``file:`` FileSystem.
+
+    On a real cluster the same conf block applies minus ``master``;
     ``spark.sql.shuffle.partitions`` should then be ~2-3x total cores (AQE
     coalesces down), and executors get the memory knobs instead of the driver.
     """
@@ -96,14 +101,18 @@ def build_spark(
 
 
 def _jvm_loads_local_fs() -> bool:
-    """Whether the driver JVM can load ``LOCAL_FS_CLASS``: true when this
-    call launches it (with the jar on its class path); a JVM already running
-    was launched by whoever first built a context, perhaps without the jar,
-    and binding a class it cannot load would fail every local file
-    operation."""
+    """Whether the driver JVM can load ``LOCAL_FS_CLASS``.  With no JVM yet,
+    true when this call launches one with the jar on its class path: not
+    when ``spark-submit`` started it (PySpark attaches through
+    ``PYSPARK_GATEWAY_PORT`` and a class path set from Python never reaches
+    it), nor when the package is imported from a zip (the jar is then no
+    file).  A JVM already running was launched by whoever first built a
+    context, perhaps without the jar, and binding a class it cannot load
+    would fail every local file operation Hadoop's FileSystem cache does
+    not happen to hide."""
     gateway = SparkContext._gateway
     if gateway is None:
-        return True
+        return "PYSPARK_GATEWAY_PORT" not in os.environ and os.path.isfile(LOCAL_FS_JAR)
     try:
         gateway.jvm.java.lang.Class.forName(LOCAL_FS_CLASS)
     except Py4JError:

@@ -8,8 +8,10 @@ import os
 import stat
 import subprocess
 import sys
+import types
 
 import pytest
+from pyspark.find_spark_home import _find_spark_home
 
 from go_fluentd_spark import session
 from go_fluentd_spark.plans.manifest import ManifestedRun
@@ -63,6 +65,61 @@ def test_running_jvm_gets_the_class_only_if_it_loads_it(spark, monkeypatch):
     assert session._jvm_loads_local_fs()
     monkeypatch.setattr(session, "LOCAL_FS_CLASS", LOCAL_FS_CLASS + "Missing")
     assert not session._jvm_loads_local_fs()
+
+
+def test_no_jvm_yet_gets_the_class_only_if_this_call_launches_it(monkeypatch):
+    """With no JVM in this process yet, the class is bound only when
+    ``build_spark`` launches one with the jar on its class path: not when
+    PySpark will attach to a JVM ``spark-submit`` started
+    (``PYSPARK_GATEWAY_PORT``), nor when the jar sits inside a zip."""
+    monkeypatch.setattr(session, "SparkContext", types.SimpleNamespace(_gateway=None))
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    assert session._jvm_loads_local_fs()
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
+    assert not session._jvm_loads_local_fs()
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT")
+    zipped = os.path.join(ROOT, "go_fluentd_spark.zip", "go_fluentd_spark", "jvm", "x.jar")
+    monkeypatch.setattr(session, "LOCAL_FS_JAR", zipped)
+    assert not session._jvm_loads_local_fs()
+
+
+SUBMITTED = """
+import json, sys
+from go_fluentd_spark.session import build_spark
+
+spark = build_spark("submitted", cores=1, shuffle_partitions=1)
+try:
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    fs = jvm.org.apache.hadoop.fs.FileSystem.newInstance(jvm.java.net.URI("file:///"), conf)
+    spark.range(3).write.parquet(sys.argv[1])
+    print(json.dumps({"file_impl": conf.get("fs.file.impl"),
+                      "uncached_fs": fs.getClass().getName(),
+                      "rows": spark.read.parquet(sys.argv[1]).count()}))
+finally:
+    spark.stop()
+"""
+
+
+def test_spark_submit_session_keeps_hadoops_file_system(tmp_path):
+    """Under ``spark-submit`` the driver JVM runs before Python starts, so
+    the jar never reaches its class path: the session binds no class, a
+    ``file:`` FileSystem built past Hadoop's cache loads, and a write reads
+    back."""
+    script = tmp_path / "submitted.py"
+    script.write_text(SUBMITTED)
+    env = dict(os.environ, PYTHONPATH=ROOT, SPARK_GRAFT_DRIVER_MEM="512m")
+    proc = subprocess.run(
+        [os.path.join(_find_spark_home(), "bin", "spark-submit"),
+         "--master", "local[1]", "--driver-memory", "512m",
+         str(script), str(tmp_path / "out")],
+        env=env, cwd=str(tmp_path), capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["file_impl"] is None
+    assert got["uncached_fs"] != LOCAL_FS_CLASS
+    assert got["rows"] == 3
 
 
 def test_manifested_run_writes_stock_modes_and_checksums(reference):
